@@ -66,8 +66,8 @@ HEADLINE = [
     # round 8: BM25 ranked retrieval (two corpus scans, no tf shuffle)
     "q_bm25_rank",
     # round 8 (late): exact duplicated-span removal — winnow-anchored
-    # ExactSubstr via the Arrow rolling-hash kernel (the throughput path;
-    # the expression twin q_dedup_substring stays oracle-gated)
+    # ExactSubstr via the Arrow rolling-hash kernel (substring_dedup's one
+    # seed path; q_dedup_substring is the same query, oracle-gated)
     "q_dedup_substring_arrow",
     # round 9: PQ/ADC after the joint-Lloyd fit + hoisted-literal encode
     # rework (was ~46s at sf0.1 — worth tracking now that it's bench-fast)

@@ -341,10 +341,10 @@ class TestSubstringDedup:
         assert "CartesianProduct" not in plan
         assert "BatchEvalPython" not in plan
 
-    def test_arrow_kernel_bit_identical(self, spark):
-        # adversarial shapes: unicode codepoints (ascii() = codepoint),
-        # doc shorter than k, empty, None, ties in window minima
-        # (repeated chars), and a real duplicated span
+    def test_adversarial_shapes_match_model(self, spark):
+        # adversarial shapes for the seed kernel: unicode codepoints
+        # (poly_hash over codepoints), doc shorter than k, None, ties in
+        # window minima (repeated chars), and a real duplicated span
         span = "the quick brown fox jumps over the lazy dog again tonight"
         rows = [
             (1, "alpha beta gamma " + span + " delta"),
@@ -357,9 +357,11 @@ class TestSubstringDedup:
             (8, "x y " + "z" * 25 + " w v " + "z" * 25 + " end"),
         ]
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        a = D.substring_dedup(df, k=self.K, w=self.W, kernel="expr").orderBy("doc_id")
-        b = D.substring_dedup(df, k=self.K, w=self.W, kernel="arrow").orderBy("doc_id")
-        assert a.collect() == b.collect()
+        got = {
+            r["doc_id"]: (r["n_dup_spans"], r["removed_chars"], r["clean_len"], r["clean_text"])
+            for r in D.substring_dedup(df, k=self.K, w=self.W).collect()
+        }
+        assert got == _substring_dedup_model(rows, self.K, self.W)
 
     def test_arrow_kernel_chunking_and_doc_independence(self):
         # The vectorized kernel concatenates a batch's texts and flushes
@@ -454,7 +456,7 @@ def _substring_dedup_model(rows, k, w):
 
 
 class TestSubstringDedupProperties:
-    """Hypothesis: both kernels vs the independent Python model, on small
+    """Hypothesis: substring_dedup vs the independent Python model, on small
     low-entropy corpora (alphabet 'ab ' breeds natural repeats) with one
     planted shared span. Few examples — every example pays Spark jobs."""
 
@@ -480,26 +482,57 @@ class TestSubstringDedupProperties:
             rows.append((101, "other lead " + span + " two"))
             expected = _substring_dedup_model(rows, K, W)
             df = spark.createDataFrame(rows, "doc_id long, text string")
-            for kern in ("expr", "arrow"):
-                got = {
-                    r["doc_id"]: (
-                        r["n_dup_spans"],
-                        r["removed_chars"],
-                        r["clean_len"],
-                        r["clean_text"],
-                    )
-                    for r in D.substring_dedup(df, k=K, w=W, kernel=kern).collect()
-                }
-                assert got == expected, f"kernel={kern}"
+            got = {
+                r["doc_id"]: (
+                    r["n_dup_spans"],
+                    r["removed_chars"],
+                    r["clean_len"],
+                    r["clean_text"],
+                )
+                for r in D.substring_dedup(df, k=K, w=W).collect()
+            }
+            assert got == expected
 
         prop()
 
 
 def test_ngram_sig_kernels_identical(spark, planted):
-    df = planted.withColumn("src", F.lit("s"))
-    a = D.ngram_jaccard_pairs(df, block_col="src", threshold=0.6, sig_kernel="expr")
-    b = D.ngram_jaccard_pairs(df, block_col="src", threshold=0.6, sig_kernel="arrow")
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    """ngram_jaccard_pairs' Arrow signature kernel computes exactly the
+    signatures minhash_signature_from_hashes computes over the same
+    char-5-gram hashes, and carries its passthrough columns unchanged."""
+    n_sig = D.NGRAM_LSH_BANDS * D.NGRAM_LSH_ROWS
+    s = F.col("_s")
+    gh = (
+        planted.select(
+            F.col("doc_id").alias("_id"),
+            (F.col("doc_id") % 3).alias("_blk"),
+            D.normalize_text(F.col("text")).alias("_s"),
+        )
+        .select(
+            "_id",
+            "_blk",
+            F.transform(
+                F.sequence(F.lit(1), F.greatest(F.length(s) - F.lit(4), F.lit(1))),
+                lambda i: F.pmod(F.xxhash64(s.substr(i, F.lit(5))), F.lit(D.HASH_PRIME)),
+            ).alias("_gh"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    expr = {
+        r["_id"]: (r["_blk"], list(r["_sig"]))
+        for r in gh.select(
+            "_id", "_blk", D.minhash_signature_from_hashes("_gh", n_sig).alias("_sig")
+        ).collect()
+    }
+    arrow = {
+        r["_id"]: (r["_blk"], list(r["_sig"]))
+        for r in gh.mapInPandas(
+            D._minhash_sig_arrow_kernel(n_sig, ["_blk"]),
+            schema="_id long, _blk long, _sig array<long>",
+        ).collect()
+    }
+    assert len(expr) == planted.count()
+    assert arrow == expr
 
 
 class TestDegenerateBuckets:

@@ -95,14 +95,11 @@ def test_no_plan_antipatterns(spark_dfs):
     CartesianProduct, and no BroadcastNestedLoopJoin outside the queries
     where a TINY broadcast side makes it the intended plan: the
     scalar-threshold joins (non-equi against a 1-row aggregate — the PG
-    scalar-subquery shape) and the ANN fan-out operators (unconditioned
-    expansion against a k-row centroid codebook)."""
+    scalar-subquery shape)."""
     ALLOWED_TINY_BROADCAST = {
         "q22_sales_opportunity",
         "q11_important_stock",
         "q16_supplier_relationship",
-        "q_semantic_dedup",
-        "q_ann_knn_join",
         "q_bm25_rank",
         # funnel: three 1-row stage-count aggregates cross-joined onto
         # the 1-row n_users aggregate (the scalar-subquery shape)

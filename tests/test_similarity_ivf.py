@@ -147,7 +147,7 @@ def test_knn_join_large_plan_broadcast_and_cell_parallelism(spark, sf_dir):
     codebook = base.unionByName(
         base.select((F.col("cid") + 512).alias("cid"), F.transform("cv", lambda x: -x).alias("cv"))
     )
-    out = sim.knn_join(e, codebook, k=5, n_probe=4, arrow=True)
+    out = sim.knn_join(e, codebook, k=5, n_probe=4)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan  # never row-at-a-time Python
     # the probe join is an equi-join (hash/merge), never a corpus BNLJ
@@ -162,9 +162,9 @@ def test_knn_join_large_plan_broadcast_and_cell_parallelism(spark, sf_dir):
         F.col("embedding").cast("array<double>").alias("_v"),
         sim.norm(F.col("embedding").cast("array<double>")).alias("_nrm"),
     )
-    cent_arrow = codebook.withColumn("c2", sim.dot(F.col("cv"), F.col("cv")))
+    cent = codebook.withColumn("c2", sim.dot(F.col("cv"), F.col("cv")))
     aplan = (
-        sim._assign_cells(staged, cent_arrow, rank_limit=4, arrow=True)
+        sim._assign_cells(staged, cent, rank_limit=4)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -172,13 +172,6 @@ def test_knn_join_large_plan_broadcast_and_cell_parallelism(spark, sf_dir):
     assert "MapInPandas" in aplan  # Arrow/BLAS assignment kernel
     assert "BatchEvalPython" not in aplan
     assert "Exchange hashpartitioning" not in aplan  # map-only: no shuffle
-    # the JVM window path stays pinned for the non-arrow variant: codebook
-    # as broadcast data, map-side partial top-n before the exchange
-    cent = F.broadcast(codebook.withColumn("c2", sim.dot(F.col("cv"), F.col("cv"))))
-    inner = sim._assign_cells(staged, cent, rank_limit=4)
-    iplan = inner._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastExchange" in iplan  # codebook ships as broadcast data
-    assert "WindowGroupLimit" in iplan  # map-side partial top-n before the shuffle
     # cell-key cardinality: parallelism O(k), k > 32
     n_cells = codebook.select("cid").distinct().count()
     assert n_cells >= 1000
@@ -188,7 +181,9 @@ def test_arrow_codebook_broadcast_memo(spark, sf_dir):
     """The collected-codebook broadcast memoizes on the caller's content
     key (VERDICT r6 ask #7 tail: the collect job + re-broadcast was pure
     per-invocation setup). Same key → the SAME Broadcast handle is reused
-    (no second collect job); no key → no memo entry; results identical."""
+    (no second collect job); no key → no memo entry; results identical.
+    The memo is an LRU of _ARROW_CODEBOOK_MEMO_MAX keys; eviction drops
+    the reference only, so a frame built on an evicted key still runs."""
     e = t(spark, sf_dir, "embeddings").where(F.col("vec_id") <= 64)
     base = e.select(
         F.col("vec_id").cast("int").alias("cid"),
@@ -203,7 +198,7 @@ def test_arrow_codebook_broadcast_memo(spark, sf_dir):
     sim._ARROW_CODEBOOK_MEMO.clear()
     key = "test-memo-key"
     r1 = sorted(
-        sim._assign_cells_arrow(staged, cb, 2, codebook_cache_key=key)
+        sim._assign_cells(staged, cb, 2, codebook_cache_key=key)
         .select("vec_id", "cid", "_crank").collect()
     )
     # keyed on applicationId, not id(sc) — address reuse after a context
@@ -211,15 +206,25 @@ def test_arrow_codebook_broadcast_memo(spark, sf_dir):
     assert (spark.sparkContext.applicationId, key) in sim._ARROW_CODEBOOK_MEMO
     bc1 = sim._ARROW_CODEBOOK_MEMO[(spark.sparkContext.applicationId, key)]
     r2 = sorted(
-        sim._assign_cells_arrow(staged, cb, 2, codebook_cache_key=key)
+        sim._assign_cells(staged, cb, 2, codebook_cache_key=key)
         .select("vec_id", "cid", "_crank").collect()
     )
     assert sim._ARROW_CODEBOOK_MEMO[(spark.sparkContext.applicationId, key)] is bc1
     assert r1 == r2
     # keyless path stays un-memoized
     n_before = len(sim._ARROW_CODEBOOK_MEMO)
-    sim._assign_cells_arrow(staged, cb, 2).select("vec_id").count()
+    sim._assign_cells(staged, cb, 2).select("vec_id").count()
     assert len(sim._ARROW_CODEBOOK_MEMO) == n_before
+    # bound: one more key than the LRU holds leaves it AT the bound, and
+    # the least recently used key (the first one) is the one evicted
+    early = sim._assign_cells(staged, cb, 2, codebook_cache_key=key)
+    bound = sim._ARROW_CODEBOOK_MEMO_MAX
+    for i in range(bound):
+        sim._assign_cells(staged, cb, 2, codebook_cache_key=f"{key}-{i}")
+    assert len(sim._ARROW_CODEBOOK_MEMO) == bound
+    assert (spark.sparkContext.applicationId, key) not in sim._ARROW_CODEBOOK_MEMO
+    # evicted, not destroyed: the frame built on it still runs
+    assert sorted(early.select("vec_id", "cid", "_crank").collect()) == r1
     sim._ARROW_CODEBOOK_MEMO.clear()
 
 
@@ -236,7 +241,10 @@ class TestProductQuantization:
             [[random.uniform(-1, 1) for _ in range(4)] for _ in range(8)]
             for _ in range(2)
         ]
+        # exact ties: a duplicated centroid, and vectors sitting on it
+        books[0][5] = list(books[0][2])
         vecs = [[random.uniform(-1, 1) for _ in range(8)] for _ in range(40)]
+        vecs += [books[0][2] + v[4:] for v in vecs[:4]]
         df = spark.createDataFrame(
             [(i, v) for i, v in enumerate(vecs)], "vec_id long, embedding array<double>"
         )
@@ -247,11 +255,12 @@ class TestProductQuantization:
 
         def argmin_code(sub, book):
             d2 = [sum((a - b) * (a - b) for a, b in zip(sub, c)) for c in book]
-            return d2.index(min(d2))  # leftmost tie, like the struct min
+            return d2.index(min(d2))  # leftmost tie, like numpy argmin
 
         for i, v in enumerate(vecs):
             want = [argmin_code(v[j * 4 : (j + 1) * 4], books[j]) for j in range(2)]
             assert got[i] == want, f"vec {i}"
+        assert all(got[i][0] == 2 for i in range(40, 44))  # never 5
 
     def test_fit_recovers_exact_clusters(self, spark):
         """Joint-Lloyd pq_fit: when each subspace holds exactly ksub
@@ -276,32 +285,6 @@ class TestProductQuantization:
             assert len(books) == 2 and all(len(b) == 4 for b in books)
             assert sorted(books[0]) == sorted(vals0), f"budget={budget}"
             assert sorted(books[1]) == sorted(vals1), f"budget={budget}"
-
-    def test_encode_kernels_identical(self, spark):
-        """The vectorized Arrow encode kernel (einsum + argmin) must pick
-        the same codes as the JVM expression path on random data."""
-        import random
-
-        from timefusion_spark.operators import similarity as S
-
-        random.seed(17)
-        books = [
-            [[random.uniform(-1, 1) for _ in range(4)] for _ in range(8)]
-            for _ in range(4)
-        ]
-        vecs = [[random.uniform(-1, 1) for _ in range(16)] for _ in range(60)]
-        df = spark.createDataFrame(
-            [(i, v) for i, v in enumerate(vecs)], "vec_id long, embedding array<double>"
-        )
-        a = {
-            r["vec_id"]: list(r["_codes"])
-            for r in S.pq_encode(df, books, kernel="expr").select("vec_id", "_codes").collect()
-        }
-        b = {
-            r["vec_id"]: list(r["_codes"])
-            for r in S.pq_encode(df, books, kernel="arrow").select("vec_id", "_codes").collect()
-        }
-        assert a == b
 
     def test_fit_quantization_beats_single_centroid(self, spark):
         """Sanity: fitted codebooks must cut encode error well below the
@@ -459,7 +442,8 @@ class TestProductQuantization:
 class TestOPQ:
     """OPQ (Ge et al. 2013): learned-rotation PQ — the rotation must be
     orthogonal (distance-preserving), must not increase quantization
-    error vs axis-aligned PQ, and both rotation kernels must agree."""
+    error vs axis-aligned PQ, and the corpus rotation must equal numpy's
+    V @ R.T."""
 
     def _fit(self, spark, sf_dir):
         e = t(spark, sf_dir, "embeddings").where(F.col("vec_id") != 0)
@@ -501,30 +485,29 @@ class TestOPQ:
         # allow fp slack: never meaningfully worse, usually much better
         assert e_opq <= e_pq * 1.001, (e_opq, e_pq)
 
-    def test_rotation_kernels_agree_and_preserve_norms(self, spark, sf_dir):
+    def test_rotation_matches_numpy_and_preserves_norms(self, spark, sf_dir):
         import math
+
+        import numpy as np
 
         e, (R, _books) = self._fit(spark, sf_dir)
         e50 = e.where(F.col("vec_id") <= 50)
-        got_expr = {
+        got = {
             r["vec_id"]: r["_rot"]
-            for r in sim.opq_rotate(e50, R, kernel="expr").select("vec_id", "_rot").collect()
-        }
-        got_arrow = {
-            r["vec_id"]: r["_rot"]
-            for r in sim.opq_rotate(e50, R, kernel="arrow").select("vec_id", "_rot").collect()
+            for r in sim.opq_rotate(e50, R).select("vec_id", "_rot").collect()
         }
         orig = {
             r["vec_id"]: list(r["embedding"])
             for r in e50.select("vec_id", "embedding").collect()
         }
-        assert got_expr.keys() == got_arrow.keys() == orig.keys()
-        for vid in got_expr:
-            a, b = got_expr[vid], got_arrow[vid]
-            assert max(abs(x - y) for x, y in zip(a, b)) < 1e-9
+        assert got.keys() == orig.keys()
+        Rm = np.array(R, dtype=np.float64)
+        for vid, rot in got.items():
+            want = np.array(orig[vid], dtype=np.float64) @ Rm.T
+            assert np.max(np.abs(np.array(rot) - want)) < 1e-9
             # orthogonal rotation preserves the L2 norm
             n0 = math.sqrt(sum(float(x) ** 2 for x in orig[vid]))
-            n1 = math.sqrt(sum(x * x for x in a))
+            n1 = math.sqrt(sum(x * x for x in rot))
             assert abs(n0 - n1) < 1e-6 * max(1.0, n0)
 
     def test_query_vec_rotation_matches(self, spark, sf_dir):
@@ -533,9 +516,7 @@ class TestOPQ:
         e, (R, _books) = self._fit(spark, sf_dir)
         row = e.where(F.col("vec_id") == 7).select("embedding").first()
         drv = sim.rotate_vec(list(row[0]), R)
-        dist = sim.opq_rotate(
-            e.where(F.col("vec_id") == 7), R, kernel="expr"
-        ).select("_rot").first()[0]
+        dist = sim.opq_rotate(e.where(F.col("vec_id") == 7), R).select("_rot").first()[0]
         assert max(abs(x - y) for x, y in zip(drv, dist)) < 1e-9
 
 
@@ -605,18 +586,12 @@ class TestIVFAppend:
 
 def test_opq_rotation_is_map_only(spark, sf_dir):
     """The corpus rotation must shuffle nothing (100-TB claim: an
-    embarrassingly parallel map pass) — no Exchange in either kernel's
-    plan."""
+    embarrassingly parallel map pass) — no Exchange in its plan."""
     e = t(spark, sf_dir, "embeddings").where(F.col("vec_id") != 0)
     R, _books = sim.opq_fit(e, m=8, ksub=16, opq_iters=3, pq_iters=2)
-    for kernel in ("expr", "arrow"):
-        plan = (
-            sim.opq_rotate(e, R, kernel=kernel)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "Exchange" not in plan, (kernel, plan)
+    plan = sim.opq_rotate(e, R)._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan
+    assert "Exchange" not in plan, plan
 
 
 def test_opq_fused_encode_matches_two_pass(spark, sf_dir):
@@ -628,7 +603,7 @@ def test_opq_fused_encode_matches_two_pass(spark, sf_dir):
         r["vec_id"]: r["_codes"]
         for r in sim.opq_encode(e, R, books).select("vec_id", "_codes").collect()
     }
-    rot = sim.opq_rotate(e, R, kernel="arrow")
+    rot = sim.opq_rotate(e, R)
     two_pass = {
         r["vec_id"]: r["_codes"]
         for r in sim.pq_encode(rot, books, vec_col="_rot")
@@ -663,7 +638,7 @@ def test_ivf_partitioned_index_prunes_files(spark, sf_dir):
 class TestSimilarityReviewFixes:
     """Review r11 findings over the similarity/dedup operators."""
 
-    def test_cosine_zero_vector_scores_zero_both_paths(self, spark):
+    def test_cosine_zero_vector_scores_zero(self, spark):
         import timefusion_spark.operators.similarity as sim
 
         df = spark.createDataFrame(
@@ -675,8 +650,6 @@ class TestSimilarityReviewFixes:
         # zero vector at rank 1; it must now score 0.0 and rank last
         assert [r.vec_id for r in jvm] == [1, 3, 2]
         assert jvm[-1].cos_sim == 0.0
-        arrow = sim.knn_brute_force_arrow(df, [1.0, 0.0], k=3).collect()
-        assert [r.vec_id for r in arrow] == [1, 3, 2]  # JVM/Arrow parity
 
     def test_semantic_dedup_zero_vector_not_mass_duplicate(self, spark):
         import timefusion_spark.operators.similarity as sim
@@ -729,14 +702,14 @@ class TestSimilarityReviewFixes:
         with _pytest.raises(ValueError, match="fitted at"):
             sim.pq_adc_topk(enc, books, [1.0, 2.0, 3.0])  # 3 dims, not 4
 
-    def test_knn_arrow_non_long_ids(self, spark):
+    def test_knn_brute_force_non_long_ids(self, spark):
         import timefusion_spark.operators.similarity as sim
 
         df = spark.createDataFrame(
             [("a", [1.0, 0.0]), ("b", [0.0, 1.0])],
             "vec_id string, embedding array<double>",
         )
-        got = sim.knn_brute_force_arrow(df, [1.0, 0.0], k=1, id_col="vec_id").collect()
+        got = sim.knn_brute_force(df, [1.0, 0.0], k=1, id_col="vec_id").collect()
         assert got[0].vec_id == "a"
 
     def test_minhash_rejects_oversized_banding(self, spark):

@@ -2,6 +2,7 @@
 multimodal) — the LLM-training-data surface layered on the engine.
 
 Everything here is partition-parallel by construction: per-row array
-expressions (no Python row loop), shuffles only on explicit keys (LSH
-band buckets, group keys), broadcast for small sides.
+expressions or vectorized Arrow batch kernels (no row-at-a-time Python),
+shuffles only on explicit keys (LSH band buckets, group keys), broadcast
+for small sides.
 """

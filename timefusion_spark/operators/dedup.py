@@ -4,10 +4,10 @@ last-write-wins on keys — storage/table.py read views — these are the
 content-dedup analogs for training-data pipelines.)
 
 Design for 100 TB:
-- all hashing is per-row JVM expression arithmetic (no Python, no UDF) —
-  embarrassingly parallel, no shuffle; the one exception is opt-in:
-  `substring_dedup(kernel="arrow")` swaps its seed extraction for a
-  vectorized Arrow mapInPandas kernel (still map-only, bit-identical);
+- hashing is per-row work — JVM expression arithmetic, or a vectorized
+  Arrow mapInPandas kernel where a long per-row hash loop dominates (the
+  n-gram MinHash signatures, the ExactSubstr winnowing seeds). Each
+  operator has one path; all of it is embarrassingly parallel, no shuffle;
 - EVERY near-dup operator generates candidates via banded LSH — shuffle
   only on (band, band_key) buckets, O(candidates) pair space, never O(n²);
 - the exact-jaccard verify recomputes shingle/gram sets only for candidate
@@ -757,7 +757,6 @@ def ngram_jaccard_pairs(
     block_col: str | None = None,
     threshold: float = 0.5,
     ngram_n: int = 5,
-    sig_kernel: str = "expr",
 ) -> DataFrame:
     """Exact char-n-gram Jaccard near-dup pairs.
 
@@ -770,13 +769,11 @@ def ngram_jaccard_pairs(
     so the output equals the all-pairs ground truth wherever LSH recall
     holds (≥0.999 at the 0.6 verify threshold; see NGRAM_LSH_BANDS note).
 
-    `sig_kernel` picks how the 32 permutation minima are computed over
-    the (full-universe — see the no-sampling note below) gram hashes,
-    bit-identical either way: "expr" = n_hashes interpreted array folds
-    per row, zero Python; "arrow" = one vectorized numpy broadcast per
-    Arrow batch — the throughput path now that signatures span every
-    gram (the sampling removal quadrupled the expression path's hash
-    work; the kernel wins it back and more)."""
+    The 32 permutation minima over the (full-universe — see the
+    no-sampling note below) gram hashes come from the vectorized Arrow
+    kernel `_minhash_sig_arrow_kernel`: one numpy broadcast per chunk,
+    bit-identical to `minhash_signature_from_hashes`, and opaque to
+    CollapseProject, so no checkpoint barrier is needed before it."""
     blk = [F.col(block_col).alias("_blk")] if block_col else []
     blk_names = ["_blk"] if block_col else []
     # NULL text excluded from pairing — see minhash_lsh_pairs (review r13)
@@ -806,28 +803,14 @@ def ngram_jaccard_pairs(
     # per-document rule can guarantee — so no sampling.
     gh_frame = nrm.select("_id", *blk_names, raw_gram_hashes.alias("_gh"))
     n_sig = NGRAM_LSH_BANDS * NGRAM_LSH_ROWS
-    if sig_kernel == "arrow":
-        id_type = dict(gh_frame.dtypes)["_id"]
-        blk_schema = (
-            f", _blk {dict(gh_frame.dtypes)['_blk']}" if block_col else ""
-        )
-        # seed-table bound is checked inside _minhash_sig_arrow_kernel
-        # (one definition; every kernel caller inherits the fast failure)
-        sigs = gh_frame.mapInPandas(
-            _minhash_sig_arrow_kernel(n_sig, blk_names),
-            schema=f"_id {id_type}{blk_schema}, _sig array<long>",
-        )
-    elif sig_kernel == "expr":
-        # HARD barrier (review r12; see the winnow note): without it the
-        # gram-hash projection inlines into the per-seed lambda and the
-        # gram pass re-runs once per signature seed (32x for 2-row bands)
-        sigs = gh_frame.localCheckpoint(eager=True).select(
-            "_id",
-            *blk_names,
-            minhash_signature_from_hashes("_gh", n_sig).alias("_sig"),
-        )
-    else:
-        raise ValueError(f"unknown sig_kernel {sig_kernel!r} (expected 'expr' or 'arrow')")
+    id_type = dict(gh_frame.dtypes)["_id"]
+    blk_schema = f", _blk {dict(gh_frame.dtypes)['_blk']}" if block_col else ""
+    # seed-table bound is checked inside _minhash_sig_arrow_kernel
+    # (one definition; every kernel caller inherits the fast failure)
+    sigs = gh_frame.mapInPandas(
+        _minhash_sig_arrow_kernel(n_sig, blk_names),
+        schema=f"_id {id_type}{blk_schema}, _sig array<long>",
+    )
     grams = nrm.select(
         "_id", *blk_names, char_ngrams_from_norm(F.col("_s"), ngram_n).alias("_grams")
     )
@@ -900,38 +883,6 @@ def _minhash_sig_arrow_kernel(n_hashes: int, passthrough: list[str]):
     return fn
 
 
-def winnow_positions(gh: Column | str, w: int = 4) -> Column:
-    """Distinct winnowing-selected gram POSITIONS (1-based indexes into
-    the gram-hash array) of a MATERIALIZED gram-hash column — the
-    position-carrying twin of `winnow_minima`. Each w-window contributes
-    the index of its LEFTMOST minimum (array_position returns the first
-    match, so ties resolve identically in Spark and DuckDB).
-
-    The winnowing guarantee transfers to positions: two identical
-    substrings of length ≥ w + k − 1 select fingerprints at the SAME
-    offsets relative to the substring start (the hash windows inside the
-    copied region are identical arrays), which is what makes the
-    selection usable as a position-independent anchor for duplicated-SPAN
-    detection — a strided sample could never line up across copies at
-    different offsets.
-
-    `gh` MUST be an attribute (module evaluation-count note)."""
-    gh = F.col(gh) if isinstance(gh, str) else gh
-    return F.array_distinct(
-        F.when(
-            F.size(gh) >= w,
-            F.transform(
-                F.sequence(F.lit(1), F.size(gh) - F.lit(w - 1)),
-                lambda i: i
-                - F.lit(1)
-                + F.array_position(F.slice(gh, i, w), F.array_min(F.slice(gh, i, w))).cast(
-                    "int"
-                ),
-            ),
-        ).otherwise(F.array(F.array_position(gh, F.array_min(gh)).cast("int")))
-    )
-
-
 def merge_sorted_intervals(iv: Column | str) -> Column:
     """Merge a SORTED array<struct<a:int,b:int>> of half-open [a, b)
     intervals into disjoint islands (classic sorted-interval merge as a
@@ -959,14 +910,25 @@ def merge_sorted_intervals(iv: Column | str) -> Column:
 
 def _winnow_seed_kernel(k: int, w: int):
     """Build the mapInPandas kernel: (_id, _s) batches → (_id, _pos, _gram)
-    winnowing seed occurrences. Bit-identical to the expression path:
-    the vectorized Horner pass reproduces `poly_hash` exactly (the gram
-    hash Σ c_{p+j}·31^(k−1−j) mod P over unicode CODEPOINTS is reduced
-    mod P at every step, so each value is the unique residue in [0, P)
-    the expression path's prefix-hash form also lands on), numpy argmin
-    picks the leftmost window minimum exactly like array_position's
-    first match, and gram text is sliced by codepoint like substr.
+    winnowing seed occurrences: the DISTINCT 1-based gram positions that
+    are the LEFTMOST minimum of some w-window of `poly_hash` k-gram
+    hashes (one position per doc with fewer than w grams: its overall
+    leftmost minimum), each with its gram text. The vectorized Horner
+    pass reproduces `poly_hash` exactly (the gram hash
+    Σ c_{p+j}·31^(k−1−j) mod P over unicode CODEPOINTS is reduced mod P
+    at every step, so each value is the unique residue in [0, P)), numpy
+    argmin picks the leftmost window minimum like SQL array_position's
+    first match, and gram text is sliced by codepoint like substr — so
+    the DuckDB oracle's SQL mirror reproduces every seed.
     int64 bounds: h·31 + c < 31·P + 2²¹ ≪ 2⁶³.
+
+    The positions carry the winnowing guarantee: two identical
+    substrings of length ≥ w + k − 1 select seeds at the SAME offsets
+    relative to the substring start (the hash windows inside the copied
+    region are identical arrays), which makes the selection a
+    position-independent anchor for duplicated-SPAN detection — a
+    strided sample could never line up across copies at different
+    offsets.
 
     Vectorized ACROSS documents (optimization r14, guide §4.2): each
     chunk's texts concatenate into ONE codepoint array, the k-step
@@ -1033,7 +995,7 @@ def _winnow_seed_kernel(k: int, w: int):
             keys.append(np.repeat(sel.astype(np.int64), nw) * big_key + pos_local)
         for d in np.nonzero(nwin < 1)[0]:
             # fewer grams than one window: the doc's single seed is the
-            # argmin over all its grams (same fallback as the expr path)
+            # argmin over all its grams (the SQL oracle's fallback too)
             o = int(offs[d])
             g = h[o : o + int(ngrams[d])]
             keys.append(
@@ -1104,7 +1066,6 @@ def substring_dedup(
     id_col: str = "doc_id",
     k: int = 20,
     w: int = 8,
-    kernel: str = "expr",
 ) -> DataFrame:
     """Exact duplicated-SPAN removal — the Lee et al. 2022 ("Deduplicating
     Training Data Makes Language Models Better") ExactSubstr operator,
@@ -1141,13 +1102,10 @@ def substring_dedup(
     pairwise join — and the per-doc mark regroup + stitch join. No
     suffix array, no all-pairs stage, no driver-side state.
 
-    `kernel` picks the seed-extraction path, both bit-identical:
-    - "expr" (default): pure JVM expressions — O(len·k) interpreted
-      higher-order char folds, zero Python anywhere;
-    - "arrow": vectorized Arrow mapInPandas kernel — O(len) rolling
-      prefix hash + O(len·w) window argmin per row, the hot-loop shape
-      for large k (the q_ann_arrow_topk precedent: Arrow batches, numpy
-      inner loop, still map-only with no shuffle)."""
+    Seed extraction is the vectorized Arrow kernel `_winnow_seed_kernel`
+    (O(len·k) vectorized Horner hash + O(len·w) window argmin per batch,
+    map-only): an interpreted per-gram substr-fold alternative ran ~3×
+    slower (q_dedup_substring at sf0.1 on 4 cores)."""
     if k < w + 1:
         raise ValueError(f"k must be ≥ w+1 so in-span marks merge (got k={k}, w={w})")
     nrm = ensure_parallelism(
@@ -1162,32 +1120,15 @@ def substring_dedup(
     # beyond the documented contract (ADVICE r8 #3). Such docs pass
     # through unchanged (0 spans, 0 removed chars).
     seedable = nrm.where(F.length("_s") >= k)
-    if kernel == "arrow":
-        id_type = dict(nrm.dtypes)["_id"]
-        occ = seedable.mapInPandas(
-            _winnow_seed_kernel(k, w), schema=f"_id {id_type}, _pos int, _gram string"
-        )
-    elif kernel == "expr":
-        # HARD barrier between the gram-hash pass and the window-minima pass
-        # (winnow_shared_pairs note: CollapseProject would inline the hash
-        # pass into the per-window lambda — O(len²·k) per row). A staged
-        # split-once codes-array variant was measured SLOWER (higher-order
-        # folds are interpreted either way; the extra checkpoint dominates),
-        # so the per-gram substr fold stays; `kernel="arrow"` is the fast
-        # path for throughput-bound corpora.
-        gh = seedable.select(
-            "_id", "_s", winnow_gram_hashes(F.col("_s"), k).alias("_gh")
-        ).localCheckpoint(eager=True)
-        occ = gh.select(
-            "_id", "_s", F.explode(winnow_positions("_gh", w)).alias("_pos")
-        ).select("_id", "_pos", F.col("_s").substr(F.col("_pos"), F.lit(k)).alias("_gram"))
-    else:
-        raise ValueError(f"unknown kernel {kernel!r} (expected 'expr' or 'arrow')")
+    id_type = dict(nrm.dtypes)["_id"]
+    occ = seedable.mapInPandas(
+        _winnow_seed_kernel(k, w), schema=f"_id {id_type}, _pos int, _gram string"
+    )
     # Materialize the seed occurrences ONCE: `occ` feeds two consumers —
     # the canonical-gram aggregate and the marks join — whose exchange
     # shapes differ (partial-agg vs raw shuffle), so exchange reuse can
     # never share them and the seed-extraction pass (THE throughput
-    # stage: the O(len·w) winnow kernel / window-minima explode) ran
+    # stage: the O(len·w) winnow kernel) ran
     # twice per action. The checkpointed frame is the fingerprint table
     # (~len/w rows per doc), measured 2.1 → 1.8 s on the islands subgraph
     # at sf0.1 (optimization r14, guide §5/§1.2).

@@ -5,12 +5,19 @@ variant (random-hyperplane sign buckets) is the scale path — candidate
 generation shuffles on bucket keys only, so the pair space is
 O(n·bucket_size), not O(n²).
 
-All vector math is per-row JVM array arithmetic (zip_with + aggregate in
-double precision, sequential fold — deterministic and oracle-matchable);
-no Python in the row path.
+Each operator has one implementation. Scoring a row against a fixed
+query vector is per-row JVM array arithmetic (zip_with + aggregate in
+double precision, sequential fold — deterministic and oracle-matchable).
+Corpus-wide codebook work — PQ/OPQ encode, the OPQ rotation and IVF cell
+assignment for k-NN joins and semantic dedup — runs as numpy BLAS batch
+kernels over Arrow batches (mapInPandas, map-only, no shuffle); their
+outputs are codes, rotations or cell ranks, never the reported scores.
 """
 
 from __future__ import annotations
+
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -20,10 +27,10 @@ from pyspark.sql import functions as F
 # portable polynomial scheme used in dedup.py.
 SIGN_LSH_SEEDS = [7_368_787, 29_986_577, 71_316_922, 48_610_247, 93_310_753, 15_485_863]
 
-# PQ/IVF argmin expressions unroll the per-centroid dot product up to this
-# subspace width; wider subspaces use the zip_with/aggregate fold instead
-# (unrolled trees beat the interpreted fold per-row, but their Catalyst
-# analysis cost grows with m·ksub·dsub and dominates at dsub ≈ 64).
+# The distributed pq_fit Lloyd step unrolls the per-centroid dot product up
+# to this subspace width; wider subspaces use the zip_with/aggregate fold
+# instead (unrolled trees beat the interpreted fold per-row, but their
+# Catalyst analysis cost grows with ksub·dsub and dominates at dsub ≈ 64).
 _DOT_UNROLL_MAX = 8
 
 
@@ -232,8 +239,7 @@ def ivf_assign(
     old per-query MLlib KMeans fit paid ~n_iter tiny Spark jobs on a
     single-partition sample and dominated the IVF queries' wall. The
     full-corpus ASSIGNMENT is one map-side pass through pq_encode's
-    hoisted-literal argmin (in-lambda centroid literals re-construct per
-    lambda call — see _pq_lits)."""
+    Arrow batch argmin."""
     books = pq_fit(
         df,
         vec_col=vec_col,
@@ -537,38 +543,25 @@ def pq_fit(
     return books
 
 
-def _pq_lits(books: list[list[list[float]]]) -> tuple[str, str]:
-    """Nested [m][ksub][dsub] centroid-matrix and [m][ksub] squared-norm
-    SQL array-constructor literals. Callers MUST hoist these into
-    PROJECTED columns, never embed them inside a lambda body: constant
-    folding does not reach lambda bodies, so an in-lambda array literal
-    is re-CONSTRUCTED on every lambda invocation — measured 5× slower
-    encode (and the pre-hoist per-subspace unrolled form was 5× slower
-    again) purely from per-call array allocation."""
-    mat = "array(" + ", ".join(
-        "array(" + ", ".join(
-            "array(" + ", ".join(f"{float(x)!r}D" for x in c) + ")" for c in book
-        ) + ")" for book in books
-    ) + ")"
-    c2 = "array(" + ", ".join(
-        "array(" + ", ".join(
-            f"{sum(float(x) * float(x) for x in c)!r}D" for c in book
-        ) + ")" for book in books
-    ) + ")"
-    return mat, c2
-
-
-def _pq_encode_kernel(books: list[list[list[float]]], vec_col: str, out_col: str):
-    """Vectorized Arrow encode kernel: one einsum per batch computes every
-    (row, subspace, centroid) score; argmin's leftmost-minimum matches the
-    expression path's cid tiebreak. The numpy inner loop is the
-    throughput shape for corpus-scale encode (q_ann_arrow_topk precedent:
-    Arrow batches, BLAS-class kernel, still map-only with no shuffle)."""
+def _pq_encode_batches(
+    df: DataFrame,
+    books: list[list[list[float]]],
+    vec_col: str,
+    out_col: str,
+    R: list[list[float]] | None = None,
+) -> DataFrame:
+    """`df` plus `out_col` = the m PQ codes of each row's vector (rotated
+    by R first when given — the fused OPQ encode), one mapInPandas pass.
+    The argmin is `_np_assign_codes`, the same leftmost-minimum
+    assignment the driver fit uses, so encode and fit can never disagree
+    on a tie."""
     import numpy as np
 
+    from pyspark.sql import types as T
+
     B = np.array(books, dtype=np.float64)  # (m, ksub, dsub)
-    c2 = (B * B).sum(axis=2)  # (m, ksub)
     m, _ksub, dsub = B.shape
+    Rt = None if R is None else np.array(R, dtype=np.float64).T
 
     def fn(batches):
         for pdf in batches:
@@ -578,13 +571,16 @@ def _pq_encode_kernel(books: list[list[list[float]]], vec_col: str, out_col: str
                 yield pdf
                 continue
             V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            S = V.reshape(len(V), m, dsub)
-            scores = c2[None, :, :] - 2.0 * np.einsum("nmd,mkd->nmk", S, B)
-            codes = scores.argmin(axis=2)
+            if Rt is not None:
+                V = V @ Rt
+            codes = _np_assign_codes(V.reshape(len(V), m, dsub), B)
             pdf[out_col] = [row.tolist() for row in codes.astype("int32")]
             yield pdf
 
-    return fn
+    schema = T.StructType(
+        list(df.schema.fields) + [T.StructField(out_col, T.ArrayType(T.IntegerType()))]
+    )
+    return df.mapInPandas(fn, schema=schema)
 
 
 def pq_encode(
@@ -592,61 +588,14 @@ def pq_encode(
     books: list[list[list[float]]],
     vec_col: str = "embedding",
     out_col: str = "_codes",
-    kernel: str = "expr",
 ) -> DataFrame:
     """PQ encoding: per subspace, the L2-argmin codebook entry — one
     map-side pass over the full corpus (the expanded ||c||²−2⟨v,c⟩
-    argmin, cid tiebreak), zero shuffle. Adds `out_col` array<int> of
+    argmin, leftmost minimum), zero shuffle. Adds `out_col` array<int> of
     m codes (the 100-TB artifact: m bytes-ish per vector instead of d
-    floats).
-
-    `kernel="expr"` (default) stays pure-JVM: the codebook rides as
-    hoisted constant-folded literal columns and a generic two-level
-    transform computes all m argmins in one expression tree.
-    `kernel="arrow"` is the throughput path: a vectorized einsum batch
-    kernel (mapInPandas — Arrow batches, no shuffle), same codes."""
-    m = len(books)
-    ksub = len(books[0])
-    dsub = len(books[0][0])
-    if kernel == "arrow":
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            list(df.schema.fields) + [T.StructField(out_col, T.ArrayType(T.IntegerType()))]
-        )
-        return df.mapInPandas(_pq_encode_kernel(books, vec_col, out_col), schema=schema)
-    if kernel != "expr":
-        raise ValueError(f"unknown kernel {kernel!r} (expected 'expr' or 'arrow')")
-    mat, c2 = _pq_lits(books)
-    # inner dot: UNROLLED for small subspaces (zip_with + aggregate cost
-    # an allocation per centroid; the flat sum doesn't), but the HOF form
-    # for wide ones — at dsub≈64 an unrolled m·ksub·dsub-term tree costs
-    # more in Catalyst analysis than the interpreted fold costs to run
-    if dsub <= _DOT_UNROLL_MAX:
-        dot = " + ".join(
-            f"element_at(_pq_v, j * {dsub} + {i + 1}) * "
-            f"element_at(element_at(element_at(_pq_mat, j + 1), c + 1), {i + 1})"
-            for i in range(dsub)
-        )
-    else:
-        dot = (
-            f"aggregate(zip_with(slice(_pq_v, j * {dsub} + 1, {dsub}), "
-            f"element_at(element_at(_pq_mat, j + 1), c + 1), "
-            f"(x, y) -> x * y), 0.0D, (a, x) -> a + x)"
-        )
-    codes = (
-        f"transform(sequence(0, {m - 1}), j -> "
-        f"array_min(transform(sequence(0, {ksub - 1}), c -> named_struct("
-        f"'d', element_at(element_at(_pq_c2, j + 1), c + 1) - 2.0D * ({dot}), "
-        f"'cid', c))).cid)"
-    )
-    return (
-        df.withColumn("_pq_mat", F.expr(mat))
-        .withColumn("_pq_c2", F.expr(c2))
-        .withColumn("_pq_v", F.expr(f"cast({vec_col} AS array<double>)"))
-        .withColumn(out_col, F.expr(codes))
-        .drop("_pq_mat", "_pq_c2", "_pq_v")
-    )
+    floats). Each Arrow batch is scored with one GEMM per subspace
+    (`_np_assign_codes`)."""
+    return _pq_encode_batches(df, books, vec_col, out_col)
 
 
 def pq_adc_topk(
@@ -683,8 +632,10 @@ def pq_adc_topk(
     tbl = "array(" + ", ".join(
         "array(" + ", ".join(f"{v!r}D" for v in row) + ")" for row in tables
     ) + ")"
-    # lookup table hoisted into a projected column — in-lambda literals
-    # are re-constructed per lambda invocation (see _pq_lits)
+    # lookup table hoisted into a PROJECTED column, never embedded in the
+    # lambda body: constant folding does not reach lambda bodies, so an
+    # in-lambda array literal is re-constructed on every lambda call
+    # (measured 5× slower per row, purely from per-call allocation)
     adc = (
         f"aggregate(sequence(0, {m - 1}), 0.0D, (acc, j) -> acc + "
         f"element_at(element_at(_adc_tbl, j + 1), "
@@ -702,7 +653,7 @@ def _residual_expr(cells: list[list[float]], vec_col: str, cell_col: str) -> Col
     """Residual v − centroid(cell) as one hoist-safe expression: the cell
     centroid matrix rides as a projected literal column (`_ivfpq_cmat`
     must be added by the caller via `_cells_lit`) — never inside a lambda
-    (see _pq_lits)."""
+    (see pq_adc_topk)."""
     return F.expr(
         f"zip_with(cast({vec_col} AS array<double>), "
         f"element_at(_ivfpq_cmat, {cell_col} + 1), (x, y) -> x - y)"
@@ -762,11 +713,15 @@ def ivfpq_encode(
     partition key, d-float vectors never leave storage on the search
     path. Zero shuffle."""
     assigned = _assign_cell_col(df, cells, vec_col, cell_col)
-    res = assigned.withColumn("_ivfpq_cmat", F.expr(_cells_lit(cells))).withColumn(
-        "_ivfpq_res", _residual_expr(cells, vec_col, cell_col)
+    # drop the centroid-matrix column BEFORE the encode: mapInPandas
+    # carries every input column through Python and back
+    res = (
+        assigned.withColumn("_ivfpq_cmat", F.expr(_cells_lit(cells)))
+        .withColumn("_ivfpq_res", _residual_expr(cells, vec_col, cell_col))
+        .drop("_ivfpq_cmat")
     )
     return pq_encode(res, books, vec_col="_ivfpq_res", out_col=code_col).drop(
-        "_ivfpq_cmat", "_ivfpq_res"
+        "_ivfpq_res"
     )
 
 
@@ -846,7 +801,6 @@ def knn_join(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    arrow: bool = False,
     codebook_cache_key: str | None = None,
 ) -> DataFrame:
     """IVF k-NN JOIN: top-k cosine neighbors for EVERY row (not one
@@ -854,22 +808,24 @@ def knn_join(
     the shape batch retrieval / hard-negative mining / kNN-graph
     construction need.
 
-    Scale shape: cell assignment and per-row probe lists are map-only
-    expressions; the ONE shuffle is the equi-join of exploded probes
-    against cell assignments (candidates per row ≈ occupancy of n_probe
-    cells, never the corpus); per-query top-k is a window over the
-    candidate set. Each (a, b) pair arises at most once — b lives in
-    exactly one cell. Deterministic: cosine ties break by neighbor id,
-    centroid-distance ties by cid. Returns (id, neighbor_id, cos_sim,
-    rank) with rank 1..k.
+    Scale shape: cell assignment and per-row probe lists come from one
+    map-only Arrow kernel (_assign_cells); the ONE shuffle is the
+    equi-join of exploded probes against cell assignments (candidates per
+    row ≈ occupancy of n_probe cells, never the corpus); per-query top-k
+    is a window over the candidate set. Each (a, b) pair arises at most
+    once — b lives in exactly one cell. Deterministic: cosine ties break
+    by neighbor id, centroid-distance ties by cid. Returns (id,
+    neighbor_id, cos_sim, rank) with rank 1..k.
 
     `centroids` is a [(cid, vector)] list OR a codebook DataFrame with
     columns (cid int, cv array<double>[, c2 double]) — the cluster-scale
-    path loads a PERSISTED trained codebook table and broadcasts it, so
-    k≈50k codebooks (SemDeDup scale) never touch the driver as Python
-    objects. Probe-join parallelism is O(k) tasks — size k to the
-    cluster (a k=16 codebook caps the join at 16 tasks at any corpus
-    size; k≥1024 keeps a 1000-executor cluster busy)."""
+    path loads a PERSISTED trained codebook table, so k≈50k codebooks
+    (SemDeDup scale) ship as one broadcast variable, never as plan
+    literals. `codebook_cache_key` names a codebook whose content is
+    fixed, so repeat calls reuse its broadcast (see _ARROW_CODEBOOK_MEMO).
+    Probe-join parallelism is O(k) tasks — size k to the cluster (a k=16
+    codebook caps the join at 16 tasks at any corpus size; k≥1024 keeps
+    a 1000-executor cluster busy)."""
     from pyspark.sql import Window as W
 
     cent = _as_centroid_frame(df.sparkSession, centroids)
@@ -890,11 +846,7 @@ def knn_join(
     # deployment either way). Entries are MEMORY_AND_DISK and evict LRU,
     # so repeated invocations cannot pin unbounded memory.
     ranked = _assign_cells(
-        staged,
-        cent,
-        rank_limit=n_probe,
-        arrow=arrow,
-        codebook_cache_key=codebook_cache_key,
+        staged, cent, rank_limit=n_probe, codebook_cache_key=codebook_cache_key
     ).persist()
     a = ranked.select(
         F.col(id_col).alias("_a_id"),
@@ -934,10 +886,9 @@ def knn_join(
 
 def _as_centroid_frame(spark, centroids) -> DataFrame:
     """Normalize a codebook argument — [(cid, vector)] list or a DataFrame
-    with (cid, cv[, c2]) — into the broadcastable (cid, cv, c2) frame.
-    Passing a DataFrame keeps the codebook fully lazy: no collect job, no
-    driver materialization (a 64-row centroid collect costs a whole Spark
-    job of DataFrame-build latency per query)."""
+    with (cid, cv[, c2]) — into the (cid, cv, c2) frame _assign_cells
+    collects into its broadcast matrix. A DataFrame stays lazy until that
+    one collect (no separate collect job at the call site)."""
     if isinstance(centroids, DataFrame):
         cent = centroids
         if "c2" not in cent.columns:
@@ -947,8 +898,8 @@ def _as_centroid_frame(spark, centroids) -> DataFrame:
 
 
 def _centroid_frame(spark, centroids: list[tuple[int, list[float]]]) -> DataFrame:
-    """Centroids as a DATA-side frame (cid, cv, ||c||²) for broadcast
-    assignment joins. Shipping centroids as plan literals is the right
+    """Centroids as a DATA-side frame (cid, cv, ||c||²) for the broadcast
+    assignment kernel. Shipping centroids as plan literals is the right
     call for a single small expression (knn_ivf_flat), but a query that
     re-projects the vectors across unions/joins inlines the k×d literal
     into every branch — a 16×64 codebook ballooned one plan to 230 KB and
@@ -962,75 +913,30 @@ def _centroid_frame(spark, centroids: list[tuple[int, list[float]]]) -> DataFram
     return spark.createDataFrame(rows, "cid int, cv array<double>, c2 double")
 
 
-def _assign_cells(
-    staged: DataFrame,
-    cent: DataFrame,
-    rank_limit: int,
-    arrow: bool = False,
-    codebook_cache_key: str | None = None,
-) -> DataFrame:
-    """Broadcast-expand rows × centroids, score d = ||c||² − 2⟨v,c⟩ (the
-    ||v||² term is rank-constant), rank per row by (d, cid) — rows with
-    `_crank` 1..rank_limit are the nearest cells, `_crank` = 1 the home
-    cell.
-
-    Shuffle discipline: all cells of a row land in ONE map partition, so
-    the row_number window gets a map-side WindowGroupLimit (plan-pinned)
-    that cuts each row to its rank_limit nearest BEFORE the exchange —
-    the shuffle moves O(rank_limit × corpus) rows, the same order the
-    downstream probe join must move anyway, never the k× expansion.
-
-    `arrow=True` routes to the BLAS kernel (_assign_cells_arrow) — the
-    LARGE-codebook path: at k ≥ ~256 the rows × k expansion of interpreted
-    per-pair folds dominates wall time, while one (batch × dim) @
-    (dim × k) float64 matmul per Arrow batch is near-free and the
-    expansion never materializes at all (zero shuffle).
-
-    (A fully map-only variant — codebook collapsed to one broadcast array
-    row, per-row array_sort over k (d, cid) structs — was measured 5-20×
-    slower and GC-unstable at k=1024: nested higher-order lambdas
-    evaluate interpreted with per-cell boxing. The window shape keeps the
-    arithmetic in the expression evaluator's flat per-pair path.)"""
-    from pyspark.sql import Window as W
-
-    from timefusion_spark.operators.dedup import ensure_parallelism
-
-    if arrow:
-        return _assign_cells_arrow(
-            staged, cent, rank_limit, codebook_cache_key=codebook_cache_key
-        )
-    # The expansion-side work is rows × k dot products; a small single-file
-    # scan would otherwise run it as ONE task (measured: the 1024-cell
-    # assignment pinned one core while 31 idled). At corpus scale the scan
-    # already has many partitions and this is a no-op.
-    scored = ensure_parallelism(staged).join(F.broadcast(cent)).withColumn(
-        "_d", F.col("c2") - 2.0 * dot(F.col("_v"), F.col("cv"))
-    )
-    w = W.partitionBy(staged.columns[0]).orderBy(F.col("_d"), F.col("cid"))
-    return (
-        scored.withColumn("_crank", F.row_number().over(w))
-        .where(F.col("_crank") <= rank_limit)
-        .drop("cv", "c2", "_d")
-    )
-
-
-# Collected-codebook broadcast memo, keyed on (SparkContext id, caller's
+# Collected-codebook broadcast memo, keyed on (applicationId, caller's
 # content key). The cluster-scale codebooks live under CONTENT-KEYED cache
 # paths (queries/_tables.cached_storage_table), so a key fully determines
 # the codebook bytes — the collect job + re-broadcast on every invocation
 # is pure setup latency (~0.2-0.3 s of driver wall per query at bench
-# scale, the reference's cached-provider idiom). Entries are a few KB per
-# codebook (k × dim float64); keys are few (one per corpus × spec).
-_ARROW_CODEBOOK_MEMO: dict = {}
+# scale, the reference's cached-provider idiom). LRU-bounded at
+# _ARROW_CODEBOOK_MEMO_MAX entries: eviction only DROPS the reference,
+# never destroy()s the broadcast, because a DataFrame built earlier may
+# still run against it (Spark cleans it up once nothing references it).
+_ARROW_CODEBOOK_MEMO: OrderedDict = OrderedDict()
+_ARROW_CODEBOOK_MEMO_MAX = 8
+_ARROW_CODEBOOK_MEMO_LOCK = threading.Lock()
 
 
-def _assign_cells_arrow(
+def _assign_cells(
     staged: DataFrame,
     cent: DataFrame,
     rank_limit: int,
     codebook_cache_key: str | None = None,
 ) -> DataFrame:
-    """BLAS IVF assignment for LARGE codebooks — map-only, zero shuffle.
+    """IVF cell ranks per row — map-only, zero shuffle. Scores d =
+    ||c||² − 2⟨v,c⟩ (the ||v||² term is rank-constant) and emits each
+    row once per cell with `_crank` 1..rank_limit (the nearest cells;
+    `_crank` = 1 is the home cell) and that cell's `cid`.
 
     The codebook frame is materialized ONCE into a (k × dim) float64
     matrix and shipped as a SparkContext BROADCAST VARIABLE (torrent
@@ -1039,16 +945,18 @@ def _assign_cells_arrow(
     plan literal). Each Arrow batch then scores ALL cells with one
     (batch × dim) @ (dim × k) matmul and takes the rank_limit smallest
     (d, cid) per row via a stable argsort — ties on d break by cid
-    because the codebook is sorted by cid before shipping, matching the
-    JVM path's (d, cid) ordering.
+    because the codebook is sorted by cid before shipping, the same
+    (d, cid) order the DuckDB oracles rank by. The rows × k expansion
+    never materializes (a broadcast-join + row_number alternative
+    moved it through the expression evaluator: 1.3× slower at k=64 and
+    4× slower at k=1024, q_ann_knn_join[_large] at sf0.1 on 4 cores).
 
     Determinism: float64 BLAS matmul is deterministic for fixed input on
     a fixed build; scores only RANK cells (they are not output), so an
-    ulp difference vs the JVM's sequential fold could matter only on a
+    ulp difference vs a sequential fold could matter only on a
     near-exact distance tie between two centroids — oracle-checked at
     both test scales."""
     import numpy as np
-    import pandas as pd
 
     from timefusion_spark.operators.dedup import ensure_parallelism
 
@@ -1061,7 +969,12 @@ def _assign_cells_arrow(
         if codebook_cache_key is None
         else (sc.applicationId, codebook_cache_key)
     )
-    bc = _ARROW_CODEBOOK_MEMO.get(memo_key) if memo_key is not None else None
+    bc = None
+    if memo_key is not None:
+        with _ARROW_CODEBOOK_MEMO_LOCK:
+            bc = _ARROW_CODEBOOK_MEMO.get(memo_key)
+            if bc is not None:
+                _ARROW_CODEBOOK_MEMO.move_to_end(memo_key)
     if bc is None:
         rows = sorted(
             cent.select("cid", "cv", "c2").collect(), key=lambda r: r["cid"]
@@ -1071,7 +984,10 @@ def _assign_cells_arrow(
         c2 = np.fromiter((r["c2"] for r in rows), dtype=np.float64)
         bc = sc.broadcast((cids, mat_t, c2))
         if memo_key is not None:
-            _ARROW_CODEBOOK_MEMO[memo_key] = bc
+            with _ARROW_CODEBOOK_MEMO_LOCK:
+                _ARROW_CODEBOOK_MEMO[memo_key] = bc
+                while len(_ARROW_CODEBOOK_MEMO) > _ARROW_CODEBOOK_MEMO_MAX:
+                    _ARROW_CODEBOOK_MEMO.popitem(last=False)
 
     from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -1124,11 +1040,12 @@ def semantic_dedup(
     (long chains can prune slightly more than the paper's ε-ball sweep —
     the rule is stated so a SQL oracle reproduces it exactly).
 
-    Scale shape: cell assignment is map-only (centroids are plan
-    constants); the self-join shuffles BOTH sides once on `_cell` — the
-    candidate set is Σ |cell|² over cells, the quantizer's job being to
-    keep occupancy bounded (k ∝ corpus size at 100 TB, the paper runs
-    k=50k over 5B embeddings). Returns (id, cell, kept).
+    Scale shape: cell assignment is map-only (the _assign_cells Arrow
+    kernel over a broadcast codebook); the self-join shuffles BOTH sides
+    once on `_cell` — the candidate set is Σ |cell|² over cells, the
+    quantizer's job being to keep occupancy bounded (k ∝ corpus size at
+    100 TB, the paper runs k=50k over 5B embeddings). Returns (id, cell,
+    kept).
 
     Reference parity: the reference engine has no vector surface; this is
     LLM-pipeline scope (training-data curation over the embeddings table).
@@ -1217,61 +1134,6 @@ def knn_ivf_flat(
         .orderBy(F.col("cos_sim").desc(), F.col(id_col))
         .limit(k)
     )
-
-
-def knn_brute_force_arrow(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k via the ARROW path: mapInPandas partitions stream in as
-    Arrow batches, numpy does one vectorized (rows × dim) @ query matmul
-    per batch, and each partition emits only its local top-k — the global
-    TakeOrderedAndProject merges ≤ k·partitions candidate rows.
-
-    This is the realistic shape for HIGH-dimensional embeddings (≥768
-    dims), where a per-element JVM fold loses to BLAS by an order of
-    magnitude; for the driver-checked query the ids (not the float
-    scores) are the contract, so numpy's pairwise summation vs the JVM's
-    sequential fold cannot flip the result."""
-    import numpy as np
-    import pandas as pd
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = float(np.sqrt(q @ q))
-
-    def topk_batches(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            m = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            denom = np.sqrt((m * m).sum(axis=1)) * qn
-            # zero-norm guard, same convention as the JVM cosine(): a
-            # zero vector scores 0.0 — np.argsort would otherwise rank
-            # NaN OPPOSITE to Spark's NaN-is-largest, breaking the
-            # documented JVM/Arrow parity (review r11)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = np.where(denom == 0.0, 0.0, (m @ q) / denom)
-            # tiebreak by id, not batch position: a stable positional
-            # argsort could drop the globally-winning id of an exact-tie
-            # pair at the batch's k-th score, and the global merge cannot
-            # recover a dropped row (review r12; global order is
-            # (cos_sim desc, id asc))
-            ids = pdf[id_col].to_numpy()
-            order = np.lexsort((ids, -sims))[:k]
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].iloc[order].to_numpy(), "cos_sim": sims[order]}
-            )
-
-    # derive the id type from the input — hardcoding `long` crashed the
-    # Arrow conversion for string/int ids (review r11)
-    id_t = dict(df.dtypes)[id_col]
-    local = df.select(id_col, vec_col).mapInPandas(
-        topk_batches, schema=f"{id_col} {id_t}, cos_sim double"
-    )
-    return local.orderBy(F.col("cos_sim").desc(), F.col(id_col)).limit(k)
 
 
 def jl_project(vec_col: str, n_out: int = 16) -> Column:
@@ -1468,8 +1330,9 @@ def _opq_pq_fit_np(Y, m: int, dsub: int, ksub: int, max_iter: int, init_books=No
 
 def _np_assign_codes(S, books):
     """Leftmost-argmin PQ code assignment over an in-memory (n, m, dsub)
-    sample — ONE definition shared by the Lloyd loop and the OPQ
-    reconstruction. The per-subspace score matrix comes from BATCHED BLAS
+    matrix — ONE definition shared by the Lloyd loop, the OPQ
+    reconstruction and the executor encode kernel behind pq_encode and
+    opq_encode. The per-subspace score matrix comes from BATCHED BLAS
     matmul rather than np.einsum: c_einsum runs a naive loop (measured
     26.8 s vs 4.0 s per assignment pass at the 100k-row driver-fit cap —
     the single-threaded driver fit is the 100-TB bottleneck of the OPQ
@@ -1515,60 +1378,32 @@ def opq_rotate(
     R: list[list[float]],
     vec_col: str = "embedding",
     out_col: str = "_rot",
-    kernel: str = "expr",
 ) -> DataFrame:
     """Apply the learned OPQ rotation x' = R·x as a MAP-ONLY pass — the
     rotation of a 100-TB corpus is embarrassingly parallel and shuffles
-    nothing. Two kernels (the pq_encode precedent):
+    nothing: one vectorized numpy ``V @ R.T`` per Arrow batch
+    (mapInPandas)."""
+    from pyspark.sql import types as T
 
-    - ``expr`` (default, pure JVM): R rides as ONE hoisted literal column
-      (never inside the lambda — see `_pq_lits`); each output dim is a
-      zip_with·aggregate fold against its R row.
-    - ``arrow``: vectorized numpy ``V @ R.T`` over Arrow batches
-      (mapInPandas) — the BLAS-class throughput path for corpus-scale
-      rotation, still map-only.
-    """
-    d = len(R)
-    if kernel == "arrow":
-        from pyspark.sql import types as T
+    import numpy as np
 
-        import numpy as np
+    Rt = np.array(R, dtype=np.float64).T
 
-        Rm = np.array(R, dtype=np.float64)
-
-        def fn(batches):
-            for pdf in batches:
-                pdf = pdf.copy()
-                if len(pdf) == 0:
-                    pdf[out_col] = []
-                    yield pdf
-                    continue
-                V = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                )
-                pdf[out_col] = [row.tolist() for row in V @ Rm.T]
+    def fn(batches):
+        for pdf in batches:
+            pdf = pdf.copy()
+            if len(pdf) == 0:
+                pdf[out_col] = []
                 yield pdf
+                continue
+            V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            pdf[out_col] = [row.tolist() for row in V @ Rt]
+            yield pdf
 
-        schema = T.StructType(
-            list(df.schema.fields)
-            + [T.StructField(out_col, T.ArrayType(T.DoubleType()))]
-        )
-        return df.mapInPandas(fn, schema=schema)
-    if kernel != "expr":
-        raise ValueError(f"unknown kernel {kernel!r} (expected 'expr' or 'arrow')")
-    rlit = "array(" + ", ".join(
-        "array(" + ", ".join(f"{float(x)!r}D" for x in row) + ")" for row in R
-    ) + ")"
-    rot = (
-        f"transform(sequence(0, {d - 1}), i -> "
-        f"aggregate(zip_with(cast({vec_col} AS array<double>), "
-        f"element_at(_opq_r, i + 1), (x, y) -> x * y), 0.0D, (a, x) -> a + x))"
+    schema = T.StructType(
+        list(df.schema.fields) + [T.StructField(out_col, T.ArrayType(T.DoubleType()))]
     )
-    return (
-        df.withColumn("_opq_r", F.expr(rlit))
-        .withColumn(out_col, F.expr(rot))
-        .drop("_opq_r")
-    )
+    return df.mapInPandas(fn, schema=schema)
 
 
 def ivf_append(
@@ -1642,35 +1477,9 @@ def opq_encode(
     out_col: str = "_codes",
 ) -> DataFrame:
     """FUSED OPQ encode: rotation AND PQ code assignment in ONE Arrow
-    batch kernel — V·Rᵀ then the per-subspace argmin einsum, no
-    intermediate rotated column materialized, one mapInPandas pass over
-    the corpus (the 100-TB encode job is a single map stage reading raw
-    vectors and writing m-byte codes). Codes are identical to
-    `pq_encode(opq_rotate(df, R), books)` — argmin leftmost-minimum
-    matches the expression path's cid tiebreak."""
-    import numpy as np
-
-    from pyspark.sql import types as T
-
-    Rm = np.array(R, dtype=np.float64)
-    B = np.array(books, dtype=np.float64)  # (m, ksub, dsub)
-    c2 = (B * B).sum(axis=2)
-    m, _ksub, dsub = B.shape
-
-    def fn(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            if len(pdf) == 0:
-                pdf[out_col] = []
-                yield pdf
-                continue
-            V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            S = (V @ Rm.T).reshape(len(V), m, dsub)
-            scores = c2[None, :, :] - 2.0 * np.einsum("nmd,mkd->nmk", S, B)
-            pdf[out_col] = [r.tolist() for r in scores.argmin(axis=2).astype("int32")]
-            yield pdf
-
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_col, T.ArrayType(T.IntegerType()))]
-    )
-    return df.mapInPandas(fn, schema=schema)
+    batch kernel — V·Rᵀ, then pq_encode's argmin — no intermediate
+    rotated column materialized, one mapInPandas pass over the corpus
+    (the 100-TB encode job is a single map stage reading raw vectors and
+    writing m-byte codes). Codes equal `pq_encode(opq_rotate(df, R),
+    books)`: both run the same numpy rotation and `_np_assign_codes`."""
+    return _pq_encode_batches(df, books, vec_col, out_col, R)

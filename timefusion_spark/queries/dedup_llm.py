@@ -153,13 +153,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
-    # sig_kernel="arrow": the r8 full-universe signature fix (no mod-4
-    # sampling — it created cross-cutoff false negatives) quadrupled the
-    # expression path's permutation work; the vectorized kernel computes
-    # bit-identical signatures ~2x faster, restoring the r7 latency.
-    pairs = dd.ngram_jaccard_pairs(
-        d, block_col="source", threshold=0.6, ngram_n=5, sig_kernel="arrow"
-    )
+    pairs = dd.ngram_jaccard_pairs(d, block_col="source", threshold=0.6, ngram_n=5)
     return pairs.select(
         "id_a", "id_b", F.round("jaccard", 4).alias("jaccard")
     ).orderBy("id_a", "id_b")
@@ -358,7 +352,7 @@ def q_dedup_editdistance(spark: SparkSession, sf_dir: str) -> DataFrame:
     "occurrence's [pos, pos+20) range marked, per-doc marks merged into "
     "islands (in-span marks provably overlap since k ≥ w+1) and cut out "
     "of the text. Spark-first: suffix-array-free — gram hashing and "
-    "fingerprint selection are map-only JVM expressions; the corpus-wide "
+    "fingerprint selection are one map-only Arrow kernel; the corpus-wide "
     "work is one (gram) window shuffle + one per-doc regroup. Oracle "
     "reproduces the hash, argmin windowing, mark, merge and stitch "
     "bit-for-bit in SQL (gaps-and-islands + ordered string_agg).",
@@ -370,21 +364,15 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_substring_arrow",
-    # Same oracle as q_dedup_substring ON PURPOSE: the Arrow kernel
-    # (O(len) vectorized rolling hash + window argmin) must be
-    # bit-identical to the JVM expression path, so the same SQL mirror
-    # certifies BOTH the dedup semantics and the kernel equality.
     oracle=REGISTRY["q_dedup_substring"].oracle,
-    doc="Arrow scale-path twin of q_dedup_substring: seed extraction via "
-    "a vectorized mapInPandas kernel (modular-inverse prefix hash — "
-    "H[i] = 31^i·Σ c_j·31^-j mod P — reproduces poly_hash exactly over "
-    "unicode codepoints in O(len); numpy sliding-window argmin = the "
-    "leftmost-minimum winnowing pick). Map-only like the expression "
-    "path; the downstream mark/merge/stitch pipeline is shared.",
+    doc="Same query and oracle as q_dedup_substring, kept under its own "
+    "name: it named the Arrow seed-extraction kernel (vectorized Horner "
+    "pass reproducing poly_hash over unicode codepoints + leftmost "
+    "window argmin) while an expression twin existed; substring_dedup "
+    "now has that one path.",
 )
 def q_dedup_substring_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = t(spark, sf_dir, "documents")
-    return dd.substring_dedup(d, k=20, w=8, kernel="arrow").orderBy("doc_id")
+    return q_dedup_substring(spark, sf_dir)
 
 
 @query(

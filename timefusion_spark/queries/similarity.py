@@ -389,18 +389,11 @@ def q_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # narrow to (id, codes) BEFORE the checkpoint — the persisted artifact
     # is the m-byte codes, not the d-float vectors it compresses (review
     # r13: the unprojected checkpoint was materializing every raw vector)
-    # kernel="arrow": the corpus encode is THE throughput stage of a PQ
-    # index build, and the vectorized batch kernel runs it ~5× faster
-    # than the interpreted m·ksub expression tree (whose giant literal
-    # codebook also costs ~1s of Catalyst analysis per fresh plan) —
-    # optimization r13, guide §4.2. Codes are pinned bit-equal across
-    # kernels (tests/test_similarity_ivf.py), and the expr encode stays
-    # gate-covered via q_ann_ivfpq / q_ann_ivfopq's residual encodes.
-    # prune to (id, vector) BEFORE the Arrow kernel: mapInPandas is opaque
-    # to Catalyst's column pruning, so un-selected columns (label) would
-    # cross the Python boundary both ways for nothing (guide §4.1)
+    # prune to (id, vector) BEFORE the Arrow encode kernel: mapInPandas is
+    # opaque to Catalyst's column pruning, so un-selected columns (label)
+    # would cross the Python boundary both ways for nothing (guide §4.1)
     enc = (
-        sim.pq_encode(e.select("vec_id", "embedding"), books, kernel="arrow")
+        sim.pq_encode(e.select("vec_id", "embedding"), books)
         .select("vec_id", "_codes")
         .localCheckpoint(eager=True)
     )
@@ -685,7 +678,7 @@ def q_ann_ivfopq(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "embeddings").where(F.col("vec_id") != 0)
     qv = _query_vec(spark, sf_dir, 0)
     R, _pq_books = sim.opq_fit(e, m=16, ksub=32)
-    rot = sim.opq_rotate(e, R, kernel="arrow").select(
+    rot = sim.opq_rotate(e, R).select(
         "vec_id", F.col("_rot").alias("rotvec")
     )
     cells, books = sim.ivfpq_fit(rot, vec_col="rotvec", n_cells=16, m=16, ksub=32)
@@ -850,20 +843,18 @@ def q_embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY cos_sim DESC, vec_id
     LIMIT 10
     """,
-    doc="Exact ANN top-k on the ARROW path (§2.11 Pandas-UDF surface): "
-    "mapInPandas streams Arrow batches to numpy, one vectorized matmul "
-    "per batch, per-partition top-k, global TakeOrderedAndProject merge. "
-    "The contract is the RANKED ID LIST (scores stay engine-internal: "
-    "numpy's pairwise summation and the JVM's sequential fold agree to "
-    "~1e-15, which can never flip a rank on real embeddings but is not "
-    "bit-identical — so ids, not floats, are hash-compared).",
+    doc="Ranked-id form of q_ann_bruteforce_topk: the same knn_brute_force "
+    "cosine top-10, returned as (rank, vec_id). The contract is the "
+    "RANKED ID LIST, so ids, not floats, are hash-compared. Kept under "
+    "its name: it named a numpy/mapInPandas twin of knn_brute_force, "
+    "deleted because it ran no faster than the per-row fold.",
 )
 def q_ann_arrow_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     e = t(spark, sf_dir, "embeddings").where(F.col("vec_id") != 0)
     qv = _query_vec(spark, sf_dir, 0)
-    top = sim.knn_brute_force_arrow(e, qv, k=10)
+    top = sim.knn_brute_force(e, qv, k=10)
     return top.select(
         F.row_number()
         .over(W.orderBy(F.col("cos_sim").desc(), F.col("vec_id")))
@@ -982,11 +973,12 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") + 10000).alias("vec_id"), "embedding"
     )
     base = unit.unionByName(planted)
-    # codebook stays a LAZY frame — no collect job on the query path
+    # codebook as a frame: semantic_dedup collects it once into the
+    # assignment kernel's broadcast matrix
     cents = unit.where(F.col("vec_id").between(1, 16)).select(
         F.col("vec_id").cast("int").alias("cid"), F.col("embedding").alias("cv")
     )
-    out = sim.semantic_dedup(base, F.broadcast(cents), threshold=0.999)
+    out = sim.semantic_dedup(base, cents, threshold=0.999)
     return out.orderBy("vec_id")
 
 
@@ -1035,12 +1027,13 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_ann_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "embeddings")
-    # codebook stays a LAZY frame — no collect job on the query path
+    # codebook as a frame: knn_join collects it once into the assignment
+    # kernel's broadcast matrix
     cents = e.where(F.col("vec_id").between(1, 64)).select(
         F.col("vec_id").cast("int").alias("cid"),
         F.col("embedding").cast("array<double>").alias("cv"),
     )
-    out = sim.knn_join(e, F.broadcast(cents), k=5, n_probe=4)
+    out = sim.knn_join(e, cents, k=5, n_probe=4)
     return out.select(
         "vec_id", "neighbor_id", F.round("cos_sim", 4).alias("cos_sim"), "rank"
     ).orderBy("vec_id", "rank")
@@ -1107,9 +1100,7 @@ def q_ann_knn_join_large(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The codebook lives under a content-keyed cache path (immutable for a
     # given corpus + spec), so its path is a sound memo key for the
     # collected broadcast — repeat invocations skip the collect job.
-    out = sim.knn_join(
-        e, loaded, k=5, n_probe=4, arrow=True, codebook_cache_key=cb.path
-    )
+    out = sim.knn_join(e, loaded, k=5, n_probe=4, codebook_cache_key=cb.path)
     return out.select(
         "vec_id", "neighbor_id", F.round("cos_sim", 4).alias("cos_sim"), "rank"
     ).orderBy("vec_id", "rank")

@@ -16,6 +16,18 @@ from pyspark.sql import SparkSession
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def _driver_memory() -> str:
+    """Half the box's physical memory, at most 48g. In local mode the
+    executors run inside the driver JVM; a heap cap above physical memory
+    lets the heap grow instead of collecting until the kernel's OOM killer
+    ends the JVM (a 48g cap on a 15 GB box was killed at ~14.6 GB RSS)."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf (Windows)
+        return "48g"
+    return f"{max(1024, min(48 << 10, (phys >> 20) // 2))}m"
+
+
 def get_spark(app_name: str = "timefusion_spark", cpus: str | int | None = None) -> SparkSession:
     """Build (or fetch) the engine session.
 
@@ -54,7 +66,7 @@ def get_spark(app_name: str = "timefusion_spark", cpus: str | int | None = None)
         # session may carry a non-UTC zone or reject ns-parquet).
         ensure_runtime_confs(active)
         return active
-    builder = builder.master(f"local[{cpus}]").config("spark.driver.memory", "48g")
+    builder = builder.master(f"local[{cpus}]").config("spark.driver.memory", _driver_memory())
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -48,9 +48,9 @@ def main() -> int:
     e = t(spark, sf_dir, "embeddings").where(F.col("vec_id") != 0)
     books = sim.pq_fit(e, m=16, ksub=32)
     out["q_ann_pq_adc_encode_stage"] = _explain(
-        sim.pq_encode(
-            e.select("vec_id", "embedding"), books, kernel="arrow"
-        ).select("vec_id", "_codes")
+        sim.pq_encode(e.select("vec_id", "embedding"), books).select(
+            "vec_id", "_codes"
+        )
     )
     R, obooks = sim.opq_fit(e, m=16, ksub=32)
     out["q_ann_opq_adc_encode_stage"] = _explain(
