@@ -103,10 +103,10 @@ def test_bucketed_join_avoids_shuffle(spark, sf_dir, tmp_path):
 
 
 def test_partition_filters_reach_scan_through_dedup_window(spark, tmp_path):
-    """Predicate placement (database.rs:12507-12533): partition/time filters
-    applied below the dedup window still prune the scan; the window itself
-    uses WindowGroupLimit (map-side partial top-1) rather than a full sort
-    of every version."""
+    """Predicate placement (database.rs:12507-12533): Table.scan's
+    partition/time filters reach the scan through the dedup window; the
+    window itself uses WindowGroupLimit (map-side partial top-1) rather
+    than a full sort of every version."""
     from timefusion_spark.storage import Table, load_schema_text
     from tests.test_storage import MOR_YAML, _rows, BASE
 
@@ -120,6 +120,89 @@ def test_partition_filters_reach_scan_through_dedup_window(spark, tmp_path):
     )
     assert "PartitionFilters" in plan and "project_id" in plan
     assert "WindowGroupLimit" in plan
+
+
+def _scan_metrics(df) -> list[tuple[int, int]]:
+    """(files read, partitions read) of every parquet scan in `df`'s
+    executed plan — walked through AQE's final plan and query stages.
+    Call after an action: the counts are set when the scan lists files."""
+    out: list[tuple[int, int]] = []
+
+    def walk(node):
+        cls = node.getClass().getSimpleName()
+        if cls == "FileSourceScanExec":
+            m = node.metrics()
+            out.append((m.apply("numFiles").value(), m.apply("numPartitions").value()))
+        elif cls == "AdaptiveSparkPlanExec":
+            walk(node.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            walk(node.plan())
+        it = node.children().iterator()
+        while it.hasNext():
+            walk(it.next())
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def test_tenant_filter_prunes_below_dedup_window(spark, tmp_path):
+    """The version key leads with the partition columns, so a tenant
+    filter on the merge-on-read view is a filter on the window's partition
+    keys: Catalyst pushes it below the Window into the scan's
+    PartitionFilters, and no project_id Filter is left above the Window."""
+    from timefusion_spark.storage import Table, load_schema_text
+    from tests.test_storage import MOR_YAML, _rows, BASE
+
+    tbl = Table.create(spark, load_schema_text(MOR_YAML), str(tmp_path / "t"))
+    tbl.append(_rows(spark, BASE), stamp="2026-02-01 00:00:00")
+    df = tbl.read().where(
+        "project_id = 'p1' AND timestamp >= '2026-01-01 00:00:00'"
+    )
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    window_at = next(i for i, l in enumerate(lines) if "Window [" in l)
+    scan = next(l for l in lines if "FileScan" in l)
+    part_filters = scan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+    assert "(project_id" in part_filters and "= p1)" in part_filters
+    assert not any(
+        "Filter" in l and "project_id" in l for l in lines[:window_at]
+    )
+    assert sorted(r["id"] for r in df.collect()) == ["a", "b"]
+
+
+def test_pg_dashboard_statement_reads_only_tenant_files(spark, tmp_path):
+    """A dashboard statement through the PG shim over an SltEnv view (the
+    serving path) lists only the queried tenant's partition directories."""
+    from timefusion_spark.pgshim import pg_sql
+    from timefusion_spark.slt import SltEnv
+
+    env = SltEnv(spark, str(tmp_path))
+    tbl = env.tables["otel_logs_and_spans"]
+    rows = [
+        (f"2026-01-0{d} 10:0{i}:00", f"{t}-{d}-{i}", "GET /x", t)
+        for t in ("p1", "p2", "p3")
+        for d in (1, 2)
+        for i in range(3)
+    ]
+    for half in (rows[::2], rows[1::2]):  # two appends: two files per dir
+        tbl.append(
+            spark.createDataFrame(
+                half, "timestamp string, id string, name string, project_id string"
+            )
+        )
+    env.refresh_stale()
+    df = pg_sql(
+        spark,
+        "SELECT name, count(*) AS n FROM otel_logs_and_spans "
+        "WHERE project_id = 'p2' AND timestamp >= '2026-01-01 00:00:00' "
+        "AND timestamp < '2026-01-03 00:00:00' GROUP BY name",
+        env.tables,
+    )
+    assert [(r["name"], r["n"]) for r in df.collect()] == [("GET /x", 6)]
+    p2_files = [
+        f for f in tbl.log.snapshot().files if f.startswith("project_id=p2/")
+    ]
+    assert len(p2_files) == 4 < len(tbl.log.snapshot().files)
+    assert _scan_metrics(df) == [(4, 2)]
 
 
 def test_time_predicate_pushes_to_parquet_scan(spark, sf_dir):

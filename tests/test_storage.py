@@ -304,19 +304,24 @@ class TestDML:
         assert mor_table.read_raw().count() == 6
         vals = {r["id"]: r["value"] for r in mor_table.read().collect()}
         assert vals == {"a": 2.0, "b": 3.0, "c": 4.0}
-        # KEY assignment: all matched rows collide on the full key tuple
-        # (timestamp, id) = (const, 'z'); dedup_batch must still collapse
-        # them to ONE appended version (LWW), exactly the pre-r14 behavior
+        # KEY assignment: both p1 rows (same date partition) collide on
+        # the full version key (p1, date, const timestamp, 'z');
+        # dedup_batch must still collapse them to ONE appended version
+        # (LWW), exactly the pre-r14 behavior — and each row's old key
+        # gets a tombstone, so a and b do not stay visible beside z
         n = dml.update(
             mor_table,
             {
                 "id": F.lit("z"),
                 "timestamp": F.lit("2026-01-01 10:00:00").cast("timestamp"),
             },
+            predicate="project_id = 'p1'",
             stamp="2026-02-03 00:00:00",
         )
-        assert n == 3
-        assert mor_table.read_raw().count() == 7  # 6 + ONE collapsed version
+        assert n == 2
+        # 6 + ONE collapsed version + tombstones at the old keys a and b
+        assert mor_table.read_raw().count() == 9
+        assert sorted(r["id"] for r in mor_table.read().collect()) == ["c", "z"]
         # append() with the flag on a batch that is NOT unique proves the
         # window really is skipped: both duplicate raw versions land
         before = mor_table.read_raw().count()
@@ -722,9 +727,9 @@ class TestTenantFileIsolation:
             # DataFrame.inputFiles() reports the PRE-pruning FileIndex, and
             # input_file_name() is empty above the dedup window's exchange —
             # so probe the layer the partition filter actually lands on
-            # (Table.scan places tenant/date filters BELOW the dedup window,
-            # on exactly this raw scan): every row's source file must live
-            # under the tenant's directories.
+            # (a tenant filter on the read view pushes BELOW the dedup
+            # window, onto exactly this raw scan): every row's source file
+            # must live under the tenant's directories.
             files = [
                 r["f"]
                 for r in mor_table.read_raw()
@@ -737,6 +742,166 @@ class TestTenantFileIsolation:
             assert all(f"project_id={tenant}" in f for f in files), (
                 tenant, [f for f in files if f"project_id={tenant}" not in f],
             )
+
+
+class TestTenantScopedVersionKey:
+    """The version key is partitions + dedup_keys: last-write-wins
+    resolves inside one tenant (the reference's per-project DedupExec,
+    database.rs:12553), and an UPDATE that assigns a partition column
+    leaves exactly one visible row per key on every DML path."""
+
+    MODES = ["version_append", "inplace", "dv"]
+
+    def _mk(self, spark, tmp_path, mode):
+        yaml = MOR_YAML
+        if mode != "version_append":
+            yaml = yaml.replace("version_append: true", "version_append: false")
+        return Table.create(spark, load_schema_text(yaml), str(tmp_path / mode))
+
+    @staticmethod
+    def _append(tbl, df, stamp):
+        if tbl.schema.version_append:
+            tbl.append(df, stamp=stamp)
+        else:  # no engine-owned stamp: the tiebreak is client-supplied
+            tbl.append(df.withColumn("updated_at", F.lit(stamp).cast("timestamp")))
+
+    @staticmethod
+    def _visible(tbl):
+        return sorted(
+            (r["id"], r["project_id"], r["value"]) for r in tbl.read().collect()
+        )
+
+    @pytest.mark.parametrize("mode", MODES)
+    def test_tenant_move_leaves_one_visible_row(self, spark, tmp_path, mode):
+        tbl = self._mk(spark, tmp_path, mode)
+        dv = mode == "dv"
+        if not tbl.schema.version_append:
+            # an older raw version of `a`: the move must take every
+            # version of the key, not only the visible winner
+            self._append(
+                tbl,
+                _rows(spark, [("2026-01-01 10:00:00", "a", 0.5, "p1")]),
+                "2026-01-31 00:00:00",
+            )
+        self._append(
+            tbl,
+            _rows(
+                spark,
+                [
+                    ("2026-01-01 10:00:00", "a", 1.0, "p1"),
+                    ("2026-01-01 11:00:00", "b", 2.0, "p1"),
+                ],
+            ),
+            "2026-02-01 00:00:00",
+        )
+        n = dml.update(
+            tbl,
+            {"project_id": F.lit("p2")},
+            predicate=F.col("id") == "a",
+            stamp="2026-02-02 00:00:00",
+            deletion_vectors=dv,
+        )
+        assert n == 1
+        assert self._visible(tbl) == [("a", "p2", 1.0), ("b", "p1", 2.0)]
+        assert [r["id"] for r in tbl.scan(project_id="p1").collect()] == ["b"]
+        # a DELETE scoped to p1 must not reach the row that moved to p2
+        n = dml.delete(
+            tbl,
+            predicate=F.col("id") == "a",
+            project_id="p1",
+            stamp="2026-02-03 00:00:00",
+            deletion_vectors=dv,
+        )
+        assert n == 0
+        assert self._visible(tbl) == [("a", "p2", 1.0), ("b", "p1", 2.0)]
+        n = dml.delete(
+            tbl,
+            predicate=F.col("id") == "a",
+            project_id="p2",
+            stamp="2026-02-04 00:00:00",
+            deletion_vectors=dv,
+        )
+        assert n == 1
+        assert self._visible(tbl) == [("b", "p1", 2.0)]
+
+    @pytest.mark.parametrize("mode", MODES)
+    def test_partition_swap_keeps_both_rows(self, spark, tmp_path, mode):
+        """Two tenants' rows with one (timestamp, id) trade partitions in
+        one UPDATE: each moved row lands on the other's old version key,
+        and both must stay visible with their swapped values."""
+        tbl = self._mk(spark, tmp_path, mode)
+        same_key = [
+            ("2026-01-01 10:00:00", "x", 1.0, "p1"),
+            ("2026-01-01 10:00:00", "x", 2.0, "p2"),
+        ]
+        self._append(tbl, _rows(spark, same_key), "2026-02-01 00:00:00")
+        swap = F.when(F.col("project_id") == "p1", "p2").otherwise("p1")
+        n = dml.update(
+            tbl,
+            {"project_id": swap},
+            predicate="id = 'x'",
+            stamp="2026-02-02 00:00:00",
+            deletion_vectors=mode == "dv",
+        )
+        assert n == 2
+        assert self._visible(tbl) == [("x", "p1", 2.0), ("x", "p2", 1.0)]
+
+    @pytest.mark.parametrize("mode", MODES)
+    def test_key_assignment_closes_old_key(self, spark, tmp_path, mode):
+        """An UPDATE that assigns a dedup-key column moves the row to a new
+        version key the same way a tenant move does: the old key must not
+        stay visible beside the new one."""
+        tbl = self._mk(spark, tmp_path, mode)
+        self._append(tbl, _rows(spark, BASE), "2026-02-01 00:00:00")
+        n = dml.update(
+            tbl,
+            {"id": F.lit("z")},
+            predicate="id = 'a'",
+            stamp="2026-02-02 00:00:00",
+            deletion_vectors=mode == "dv",
+        )
+        assert n == 1
+        assert self._visible(tbl) == [
+            ("b", "p1", 2.0), ("c", "p2", 3.0), ("z", "p1", 1.0),
+        ]
+
+    def test_version_key_holds_date_only_when_time_column_is_a_key(self, spark, tmp_path):
+        mor = Table.create(spark, load_schema_text(MOR_YAML), str(tmp_path / "m"))
+        assert mor.version_key == ["project_id", "date", "timestamp", "id"]
+        assert mor.versions_share_partition
+        kp = Table.create(
+            spark, load_schema_text(KEYED_PLAIN_YAML), str(tmp_path / "k")
+        )
+        assert kp.version_key == ["project_id", "id"]
+        assert not kp.versions_share_partition
+
+    def test_update_from_tenant_move(self, spark, mor_table):
+        mor_table.append(_rows(spark, BASE), stamp="2026-02-01 00:00:00")
+        src = spark.createDataFrame([("a", "p9")], "id string, dest string")
+        n = dml.update_from(
+            mor_table, src, ["id"], {"project_id": F.col("_src.dest")},
+            stamp="2026-02-02 00:00:00",
+        )
+        assert n == 1
+        assert self._visible(mor_table) == [
+            ("a", "p9", 1.0), ("b", "p1", 2.0), ("c", "p2", 3.0),
+        ]
+
+    def test_same_key_in_two_tenants_stays_visible(self, spark, mor_table):
+        same_key = [
+            ("2026-01-01 10:00:00", "x", 1.0, "p1"),
+            ("2026-01-01 10:00:00", "x", 2.0, "p2"),
+        ]
+        # one batch: append's in-batch dedup keeps both
+        mor_table.append(_rows(spark, same_key), stamp="2026-02-01 00:00:00")
+        assert mor_table.read_raw().count() == 2
+        assert self._visible(mor_table) == [("x", "p1", 1.0), ("x", "p2", 2.0)]
+        # a later version in one tenant supersedes only that tenant's row
+        mor_table.append(
+            _rows(spark, [("2026-01-01 10:00:00", "x", 9.0, "p2")]),
+            stamp="2026-02-02 00:00:00",
+        )
+        assert self._visible(mor_table) == [("x", "p1", 1.0), ("x", "p2", 9.0)]
 
 
 class TestConsolidate:
@@ -1447,7 +1612,9 @@ class TestInPlaceDmlOnDedupKeyedTable:
         df = spark.createDataFrame(
             rows, "timestamp string, id string, status string, value double, project_id string"
         ).withColumn("timestamp", F.col("timestamp").cast("timestamp"))
-        tbl.append(df)
+        # two appends: one batch would collapse K's versions in-batch
+        tbl.append(df.where(F.col("status") == "old"))
+        tbl.append(df.where(F.col("status") != "old"))
         return tbl
 
     def test_delete_never_resurrects_older_version(self, spark, tmp_path):
@@ -1476,6 +1643,37 @@ class TestInPlaceDmlOnDedupKeyedTable:
         assert n == 0  # the 'old' version is not visible — PG deletes 0
         assert {r["id"] for r in tbl.read().collect()} == {"K", "L"}
 
+    @pytest.mark.parametrize("dv", [False, True])
+    def test_update_leaves_other_dates_versions_alone(self, spark, tmp_path, dv):
+        """`date` is outside this table's version key, so K's winner
+        (2026-01-02) lies outside the partition the UPDATE rewrites
+        (2026-01-01, where the matched key M lives). K's loser there
+        matches the predicate but is not visible: moving it forward in
+        time would resurrect it as K's winner."""
+        tbl = self._tbl(spark, tmp_path)
+        tbl.append(
+            spark.createDataFrame(
+                [("2026-01-01 09:00:00", "M", "old", 4.0, "p1")],
+                "timestamp string, id string, status string, value double, "
+                "project_id string",
+            ).withColumn("timestamp", F.col("timestamp").cast("timestamp"))
+        )
+        n = dml.update(
+            tbl,
+            {"timestamp": F.lit("2026-01-03 00:00:00").cast("timestamp")},
+            predicate=F.col("status") == "old",
+            deletion_vectors=dv,
+        )
+        assert n == 1
+        got = {
+            r["id"]: (r["status"], str(r["date"])) for r in tbl.read().collect()
+        }
+        assert got == {
+            "K": ("active", "2026-01-02"),
+            "L": ("active", "2026-01-01"),
+            "M": ("old", "2026-01-03"),
+        }
+
 
 class TestDvDmlOnDedupKeyedTable:
     """ADVICE r10 (medium): the deletion-vector DML path on a dedup-keyed
@@ -1498,7 +1696,9 @@ class TestDvDmlOnDedupKeyedTable:
             "timestamp string, id string, status string, value double, "
             "project_id string",
         ).withColumn("timestamp", F.col("timestamp").cast("timestamp"))
-        tbl.append(df)
+        # two appends: one batch would collapse K's versions in-batch
+        tbl.append(df.where(F.col("status") == "old"))
+        tbl.append(df.where(F.col("status") != "old"))
         return tbl
 
     def test_dv_delete_never_resurrects_older_version(self, spark, tmp_path):

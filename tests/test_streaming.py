@@ -249,6 +249,37 @@ def test_in_stream_dedup_within_watermark(spark, tmp_path, table):
     assert table.read().count() == 40
 
 
+def test_in_stream_dedup_agrees_with_view_across_dates(spark, tmp_path):
+    """On an [id]-keyed table the time column is not a key, so a newer
+    version of an id may land on another date and still supersede the old
+    one: the in-stream dedup and the read view must both treat the same id
+    on two dates as ONE key."""
+    yaml = YAML.replace("dedup_keys: [timestamp, id]", "dedup_keys: [id]")
+    rows = [
+        {"timestamp": "2026-01-01 23:50:00", "id": "k", "value": 1.0, "project_id": "p1"},
+        {"timestamp": "2026-01-02 00:10:00", "id": "k", "value": 2.0, "project_id": "p1"},
+        {"timestamp": "2026-01-01 12:00:00", "id": "j", "value": 3.0, "project_id": "p1"},
+    ]
+    src = str(tmp_path / "src")
+    _write_source_file(src, "b0.json", rows)
+    counts = {}
+    for in_stream in (True, False):
+        t = Table.create(
+            spark, load_schema_text(yaml), str(tmp_path / f"t_{in_stream}")
+        )
+        q = ingest_stream(
+            t,
+            _stream(spark, src),
+            str(tmp_path / f"ckpt_{in_stream}"),
+            dedup_in_stream=in_stream,
+            watermark="1 day",
+        )
+        q.awaitTermination(180)
+        counts[in_stream] = (t.read_raw().count(), t.read().count())
+    assert counts[True] == (2, 2)
+    assert counts[False][1] == 2
+
+
 def test_windowed_counts_watermark_late_data(spark, tmp_path):
     """Watermarked tumbling-window rollup (SURVEY §2.10): windows are
     emitted exactly once when the watermark passes; rows arriving later

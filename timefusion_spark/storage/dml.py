@@ -140,6 +140,21 @@ def _dml_condition(
     return F.lit(True) if out is None else out
 
 
+def _moved(table: Table, assignments: dict[str, Column], prefix: str = "") -> Column | None:
+    """True for a row whose assigned version-key value differs from its
+    current one (IS DISTINCT FROM); None when no version-key column is
+    assigned. Such a row changes version key — a tenant move, a new id or
+    timestamp: its old key must be closed, or the old version stays
+    visible beside the new one."""
+    moved = None
+    for c in table.version_key:
+        if c in assignments:
+            dtype = table.schema.spark_schema[c].dataType
+            m = ~assignments[c].cast(dtype).eqNullSafe(F.col(f"{prefix}{c}"))
+            moved = m if moved is None else (moved | m)
+    return moved
+
+
 def _dv_dml(
     table: Table,
     pred: Column,
@@ -170,9 +185,9 @@ def _dv_dml(
     # VISIBLE view. A DELETE must mask EVERY raw version of a key whose
     # visible winner matches — masking only pred-matching raw rows lets a
     # superseded older version become the new winner (the resurrection
-    # bug _inplace_keyed_delete fixes). Both verbs report the VISIBLE
+    # bug _inplace_keyed fixes). Both verbs report the VISIBLE
     # matched count, not the raw count (which includes loser versions).
-    keys = table.schema.dedup_keys
+    keys = table.version_key
     n_visible: int | None = None
     if keys:
         vis_matched = table.read().where(pred)
@@ -190,14 +205,15 @@ def _dv_dml(
         # than the true winner and resurrects superseded values
         # (ADVICE r11 #5). Masking the whole key and rewriting from the
         # VISIBLE winners is correct under both tiebreak policies — and
-        # writes one row per key instead of one per raw version.
+        # writes one row per key instead of one per raw version. The mask
+        # is on the full version key, so an UPDATE that moves a row to
+        # another tenant or key masks the whole old key and writes the
+        # winner under its new one.
         kdf = vis_matched.select(*keys).distinct().alias("_k")
-        cond = None
-        for k in keys:
-            eq = F.col(f"_t.{k}").eqNullSafe(F.col(f"_k.{k}"))
-            cond = eq if cond is None else (cond & eq)
         matched = (
-            table.read_raw(_dv_coords=True).alias("_t").join(kdf, cond, "leftsemi")
+            table.read_raw(_dv_coords=True)
+            .alias("_t")
+            .join(kdf, _key_eq(keys), "leftsemi")
         )
     else:
         # unkeyed table: every raw row is visible — mask exactly the
@@ -274,61 +290,123 @@ def _dv_dml(
     return n
 
 
-def _inplace_keyed_delete(table: Table, pred: Column) -> int:
-    """DELETE on a dedup-keyed non-version_append table: a key whose
-    VISIBLE winner matches the predicate is deleted ENTIRELY — every raw
-    version of it. Removing only the raw rows that match would let a
+def _inplace_keyed(table: Table, pred: Column, mark, assigned=()) -> int:
+    """In-place DML on a dedup-keyed non-version_append table, against the
+    VISIBLE view. `mark(df)` returns `df`'s table columns plus `_tf_m`
+    (the row matches the statement) and `_tf_new_<col>` for each
+    `assigned` column. A key whose winner is marked loses EVERY raw
+    version — removing only the raw rows that match would let a
     superseded older version become the new winner, resurrecting data PG
-    semantics say is gone (review r10). NULL-safe key equality matches
-    the dedup view's grouping."""
-    # pin the read to an EXPLICIT file list so the overwrite's remove-set
-    # covers exactly the files this statement read — a concurrent append
-    # (or an in-window group publish) to an affected partition stays live
-    # instead of being dropped (review r11)
+    semantics say is gone (review r10). An UPDATE keeps the winner alone,
+    with its new values, which may belong in another partition: the old
+    key is gone from its partition either way, so a partition-moving
+    UPDATE leaves exactly one visible row per key.
+
+    When the version key holds every partition column
+    (Table.versions_share_partition), every version of a key lives in the
+    key's partition: the partitions of the visible matched rows are
+    exactly the partitions holding their versions, and one window over
+    those partitions ranks each key's versions and finds the hit keys.
+    Otherwise (`date` outside the key) a key's older versions may live on
+    other dates: the partitions come from the raw versions of the matched
+    keys, and a key is hit by membership in the matched key set — a
+    window over the affected partitions alone would rank a key whose
+    winner lies outside them."""
+    from pyspark.sql import Window as W
+
+    from timefusion_spark.storage.table import KEEP_GREATEST
+
     raw, rf = table.pinned_raw()
-    vis_matched = table.read().where(pred)
-    n = vis_matched.count()
-    if n == 0:
-        return 0
-    keys = table.schema.dedup_keys
-    kdf = vis_matched.select(*keys).distinct().alias("_k")
+    visible = table._tombstone_filter(
+        table._dedup_view(table.read_raw(snapshot_files=rf), KEEP_GREATEST)
+    )
+    # `pred` first, as a plain filter: its conjuncts on partition columns
+    # prune the scan below the dedup window
+    matched = mark(visible.where(pred)).where(F.col("_tf_m"))
+    tomb = table.schema.tombstone_column
+    keys = table.version_key
+    hit_keys = versions = None
+    if not table.versions_share_partition:
+        hit_keys = (
+            matched.select(*keys).withColumn("_tf_hit", F.lit(True)).alias("_k")
+        )
+        versions = raw.alias("_t").join(hit_keys, _key_eq(keys), "leftsemi")
+
+    def transform(affected: DataFrame) -> DataFrame:
+        ranked = mark(affected).withColumn(
+            "_tf_rn", F.row_number().over(table._version_window(KEEP_GREATEST))
+        )
+        if hit_keys is None:
+            win = (F.col("_tf_rn") == 1) & F.col("_tf_m")
+            if tomb:
+                win = win & ~F.coalesce(F.col(tomb), F.lit(False))
+            hit = F.max(win).over(W.partitionBy(*keys))
+            ranked = ranked.withColumn("_tf_hit", hit)
+        else:
+            ranked = (
+                ranked.alias("_t")
+                .join(F.broadcast(hit_keys), _key_eq(keys), "left")
+                .select(
+                    "_t.*",
+                    F.coalesce(F.col("_k._tf_hit"), F.lit(False)).alias("_tf_hit"),
+                )
+            )
+        if not assigned:
+            return ranked.where(~F.col("_tf_hit")).select(
+                *[f.name for f in table.schema.fields]
+            )
+        kept = ranked.where(~F.col("_tf_hit") | (F.col("_tf_rn") == 1))
+        return _apply_marked(table, kept, assigned, "_tf_hit")
+
+    return _inplace_rewrite(table, raw, rf, matched, transform, versions)
+
+
+def _key_eq(keys: list[str]) -> Column:
+    """NULL-safe equality of `_t` and `_k` on `keys` — the dedup view's
+    grouping of a key."""
     cond = None
     for k in keys:
         eq = F.col(f"_t.{k}").eqNullSafe(F.col(f"_k.{k}"))
         cond = eq if cond is None else (cond & eq)
-    parts = table.schema.partitions
-    if parts:
-        # discovery from RAW versions of the matched keys: an older
-        # version may live in a DIFFERENT partition than its winner
-        vals = (
-            raw.alias("_t")
-            .join(kdf, cond, "leftsemi")
-            .select(*parts)
-            .distinct()
-            .collect()
-        )
-        pf, dirs = _partition_selection(table, vals)
-        affected = raw.where(pf)
-    else:
-        affected = raw
-        dirs = [""]
-    out = affected.alias("_t").join(kdf, cond, "left_anti")
-    if parts:
-        out = out.repartition(*[F.col(c) for c in parts])
-    if table.schema.sorting_columns:
-        out = out.sortWithinPartitions(
-            *[F.col(c) for c in parts], *table._sort_cols()
-        )
-    table.overwrite_partitions(
-        out, dirs=dirs, op="dml", read_files=_read_files_in(rf, dirs)
+    return cond
+
+
+def _apply_marked(table: Table, df: DataFrame, assigned, flag: str = "_tf_m") -> DataFrame:
+    """The table columns of a marked frame (see _inplace_keyed), with the
+    `_tf_new_<col>` values taken where `flag` is true."""
+    return df.select(
+        *[
+            F.when(F.col(flag), F.col(f"_tf_new_{f.name}"))
+            .otherwise(F.col(f.name))
+            .alias(f.name)
+            if f.name in assigned
+            else F.col(f.name)
+            for f in table.schema.fields
+        ]
     )
-    return n
+
+
+def _marked(table: Table, pred: Column, assignments: dict[str, Column]):
+    """The `mark` of a plain UPDATE/DELETE (see _inplace_keyed)."""
+
+    def mark(df: DataFrame) -> DataFrame:
+        return df.withColumns(
+            {
+                "_tf_m": F.coalesce(pred, F.lit(False)),
+                **{
+                    f"_tf_new_{c}": e.cast(table.schema.spark_schema[c].dataType)
+                    for c, e in assignments.items()
+                },
+            }
+        )
+
+    return mark
 
 
 def _with_derived_date(table: Table, assignments: dict) -> dict:
     """Generated-column maintenance (review r13): `date` is derived as
-    CAST(time_column AS DATE) at ingest, and scan() pushes date-partition
-    bounds below the dedup window ON THAT INVARIANT — an UPDATE assigning
+    CAST(time_column AS DATE) at ingest, and scan() derives date-partition
+    bounds from timestamp bounds ON THAT INVARIANT — an UPDATE assigning
     the time column without recomputing `date` would leave a row whose
     date no longer matches its timestamp, silently excluded by
     time-bounded scans (and stranded in the wrong partition dir). When
@@ -360,58 +438,52 @@ def _read_files_in(rf: list[str] | None, dirs: list[str]) -> list[str] | None:
     return [p for p in rf if os.path.dirname(p) in dset]
 
 
-def _inplace_rewrite(table: Table, pred: Column, transform, count_df=None) -> int:
+def _inplace_rewrite(
+    table: Table,
+    raw: DataFrame,
+    rf: list[str] | None,
+    matched: DataFrame,
+    transform,
+    versions: DataFrame | None = None,
+) -> int:
     """Shared in-place DML engine (perform_delta_merge_update analog,
-    dml.rs:958-1004): find the partitions holding matched rows, read ONLY
-    those, apply `transform(partition_df)`, and publish one atomic
+    dml.rs:958-1004): find the partitions holding `matched` rows, read ONLY
+    those from `raw` (pinned to the file list `rf`, Table.pinned_raw),
+    apply `transform(partition_df)`, and publish one atomic
     partition-overwrite commit. Returns the matched-row count.
 
-    Scale shape: the matched-partition discovery collects partition VALUES
-    only (bounded by partition count, never row data); the rewrite reads
-    and writes exactly the affected directories. Snapshot isolation comes
+    Scale shape: ONE job discovers the affected partitions AND the matched
+    count — groupBy(partition cols) collects one row per affected
+    partition (bounded by partition count, never row data) carrying its
+    match count (optimization r13, guide §1.2); the rewrite reads and
+    writes exactly the affected directories. Snapshot isolation comes
     from the commit log — replaced files stay on disk for older readers.
-    The read pins to an explicit file list so the overwrite's remove-set
-    covers exactly the files read (concurrent appends and in-window group
-    publishes stay live, review r11)."""
-    raw, rf = table.pinned_raw()
-    matched = raw.where(pred)
-    # `count_df` (the VISIBLE matched frame) overrides the raw match
-    # count: on dedup-keyed plain tables the raw count also includes
-    # superseded loser versions — PG reports logically-touched rows
-    # (review r10). Partition DISCOVERY stays raw: it must cover every
-    # file the rewrite touches, and raw matches are a superset.
+    The pinned file list keeps the overwrite's remove-set to exactly the
+    files read (concurrent appends and in-window group publishes stay
+    live, review r11).
+
+    `versions`, when given, are the raw rows the rewrite must reach where
+    they are not all in the matched rows' partitions (see _inplace_keyed):
+    their partitions join the affected set in the same job, uncounted."""
     parts = table.schema.partitions
     if parts:
-        if count_df is None:
-            # ONE job discovers the affected partitions AND the matched
-            # count: groupBy(partition cols) collects one row per affected
-            # partition (bounded by partition count, like the old distinct)
-            # carrying its match count — the separate matched.count() job
-            # re-scanned the table for a number this aggregate already
-            # knows (optimization r13, guide §1.2: remove redundant passes)
-            vals = (
-                matched.groupBy(*[F.col(c) for c in parts])
-                .agg(F.count(F.lit(1)).alias("_tf_cnt"))
-                .collect()
+        counted = matched.select(*parts, F.lit(1).alias("_tf_c"))
+        if versions is not None:
+            counted = counted.unionByName(
+                versions.select(*parts, F.lit(0).alias("_tf_c"))
             )
-            if not vals:
-                return 0
-            n = sum(r["_tf_cnt"] for r in vals)
-        else:
-            vals = matched.select(*parts).distinct().collect()
-            if not vals:
-                return 0
-            n = count_df.count()
+        vals = counted.groupBy(*parts).agg(F.sum("_tf_c").alias("_tf_cnt")).collect()
+        n = sum(r["_tf_cnt"] for r in vals)
+        if n == 0:
+            return 0
         pf, dirs = _partition_selection(table, vals)
         affected = raw.where(pf)
     else:
+        n = matched.count()
+        if n == 0:
+            return 0
         affected = raw
         dirs = [""]
-        n = (matched if count_df is None else count_df).count()
-    if n == 0:
-        # zero VISIBLE matches: PG reports 0; any raw-only loser matches
-        # are invisible either way, so the rewrite is skipped
-        return 0
     out = transform(affected)
     if parts:
         # one writer task per partition dir → one rewritten file per dir
@@ -428,7 +500,11 @@ def _inplace_rewrite(table: Table, pred: Column, transform, count_df=None) -> in
 
 
 def _count_and_append(
-    table: Table, new_versions: DataFrame, stamp, key_unique: bool = False
+    table: Table,
+    new_versions: DataFrame,
+    stamp,
+    key_unique: bool = False,
+    tombstones: DataFrame | None = None,
 ) -> int:
     """Append the new versions and count them in the SAME job via an
     Observation metric: the resolve plan — a dedup-window scan of the
@@ -438,9 +514,13 @@ def _count_and_append(
     side output of the write job itself).
 
     `key_unique=True` (caller-proved: the batch derives from the dedup
-    view — one row per key — and no assignment rewrites a dedup-key
+    view — one row per key — and no assignment rewrites a version-key
     column) skips append's in-batch LWW window, one full batch shuffle
-    per DML (optimization r14, guide §2.4)."""
+    per DML (optimization r14, guide §2.4).
+
+    `tombstones` (see _moved) ride in the same append, uncounted, so a
+    key-moving UPDATE closes the old version key in the same commit that
+    opens the new one."""
     from datetime import datetime, timezone
 
     from pyspark.sql import Observation
@@ -456,11 +536,14 @@ def _count_and_append(
             clock.now_micros() / 1_000_000, tz=timezone.utc
         ).strftime("%Y-%m-%d %H:%M:%S.%f")
     obs = Observation()
-    table.append(
-        new_versions.observe(obs, F.count(F.lit(1)).alias("n")),
-        stamp=stamp,
-        batch_key_unique=key_unique,
-    )
+    batch = new_versions.observe(obs, F.count(F.lit(1)).alias("n"))
+    if tombstones is not None:
+        # tombstones FIRST: a Union's output partitions keep child order,
+        # so when a moved row lands on another moved row's old version
+        # key, the new version is the later row and wins the in-batch LWW
+        # tie on the shared stamp
+        batch = tombstones.unionByName(batch)
+    table.append(batch, stamp=stamp, batch_key_unique=key_unique)
     # Bounded metric read (ADVICE r13): AQE's empty-relation propagation
     # removes the CollectMetrics node when the runtime-materialized
     # matched set is EMPTY (the observe subtree is replaced by an empty
@@ -503,28 +586,25 @@ def update(
         pred = _dml_condition(table, predicate, project_id, ts_lo, ts_hi)
         if deletion_vectors:
             return _dv_dml(table, pred, assignments)
-
-        def apply_update(df: DataFrame) -> DataFrame:
-            return df.select(
-                *[
-                    F.when(pred, assignments[f.name].cast(f.to_spark().dataType))
-                    .otherwise(F.col(f.name))
-                    .alias(f.name)
-                    if f.name in assignments
-                    else F.col(f.name)
-                    for f in table.schema.fields
-                ]
-            )
-
-        # dedup-keyed plain table: count VISIBLE matches (the raw count
-        # includes superseded loser versions; the rewrite itself is
-        # visible-correct — losers keep losing after the update)
-        count_df = (
-            table.read().where(pred) if table.schema.dedup_keys else None
+        mark = _marked(table, pred, assignments)
+        if table.schema.dedup_keys:
+            return _inplace_keyed(table, pred, mark, set(assignments))
+        raw, rf = table.pinned_raw()
+        return _inplace_rewrite(
+            table,
+            raw,
+            rf,
+            raw.where(pred),
+            lambda df: _apply_marked(table, mark(df), assignments),
         )
-        return _inplace_rewrite(table, pred, apply_update, count_df=count_df)
     matched = _resolve(table, predicate, project_id, ts_lo, ts_hi)
     new_versions = matched.withColumns(assignments)
+    moved = _moved(table, assignments)
+    tombs = None
+    if moved is not None:
+        tombs = matched.where(moved).withColumn(
+            table.schema.tombstone_column, F.lit(True)
+        )
     # the dedup view yields one row per key; unless an assignment rewrites
     # a key column the batch stays key-unique and append's in-batch LWW
     # window is a provable identity (optimization r14)
@@ -532,7 +612,8 @@ def update(
         table,
         new_versions,
         stamp,
-        key_unique=not (set(table.schema.dedup_keys or ()) & set(assignments)),
+        key_unique=not (set(table.version_key) & set(assignments)),
+        tombstones=tombs,
     )
 
 
@@ -554,12 +635,17 @@ def delete(
             return _dv_dml(table, pred, None)
         if table.schema.dedup_keys:
             # dedup-keyed plain table: delete the KEY (every raw version of
-            # it) when its visible winner matches — see _inplace_keyed_delete
-            return _inplace_keyed_delete(table, pred)
+            # it) when its visible winner matches — see _inplace_keyed
+            return _inplace_keyed(table, pred, _marked(table, pred, {}))
         # Keep rows where the predicate is NOT TRUE (NULL ⇒ not matched,
         # so the row survives — PG DELETE semantics).
+        raw, rf = table.pinned_raw()
         return _inplace_rewrite(
-            table, pred, lambda df: df.where(~F.coalesce(pred, F.lit(False)))
+            table,
+            raw,
+            rf,
+            raw.where(pred),
+            lambda df: df.where(~F.coalesce(pred, F.lit(False))),
         )
     tomb = table.schema.tombstone_column
     if tomb is None:  # guaranteed by version_append validation; raise even under -O
@@ -574,7 +660,7 @@ def delete(
         table,
         new_versions,
         stamp,
-        key_unique=tomb not in set(table.schema.dedup_keys or ()),
+        key_unique=tomb not in set(table.version_key),
     )
 
 
@@ -604,8 +690,8 @@ def update_from(
     and rewrite atomically; unmatched rows pass through unchanged."""
     assignments = _with_derived_date(table, assignments)
     # Materialize the bounded source ONCE (≤ MAX_UPDATE_SOURCE_ROWS by
-    # contract): the duplicate-key guard, the matched-partition probe,
-    # the visible-count job and the rewrite each build their broadcast
+    # contract): the duplicate-key guard, the matched-partition probe
+    # and the rewrite each build their broadcast
     # from this materialization instead of re-running the source plan
     # per action — 2-3 evaluations of an arbitrary caller query folded
     # into one (optimization r14, guide §3/§1.2; VERDICT r13 next-#4).
@@ -642,105 +728,53 @@ def update_from(
             "would update matched target rows more than once; "
             "de-duplicate the source first"
         )
-    if not table.schema.version_append:
-        pred = _dml_condition(table, predicate, project_id, ts_lo, ts_hi)
-        src_flagged = F.broadcast(
-            source.withColumn("_tf_m", F.lit(True)).alias("_src")
-        )
-
-        def cond_for(tgt_alias: str) -> Column:
-            c = None
-            for k in join_keys:
-                eq = F.col(f"{tgt_alias}.{k}") == F.col(f"_src.{k}")
-                c = eq if c is None else (c & eq)
-            return c
-
-        # The target-only predicate is evaluated BEFORE the join (flag
-        # column), so bare column names in it can never collide with
-        # same-named source columns; `hit` = source match AND target filter.
-        def apply_merge(df: DataFrame) -> DataFrame:
-            flagged = df.withColumn("_tf_p", F.coalesce(pred, F.lit(False)))
-            joined = flagged.alias("_tgt").join(src_flagged, cond_for("_tgt"), "left")
-            hit = F.col("_tf_m").isNotNull() & F.col("_tgt._tf_p")
-            return joined.select(
-                *[
-                    F.when(hit, assignments[f.name].cast(f.to_spark().dataType))
-                    .otherwise(F.col(f"_tgt.{f.name}"))
-                    .alias(f.name)
-                    if f.name in assignments
-                    else F.col(f"_tgt.{f.name}").alias(f.name)
-                    for f in table.schema.fields
-                ]
-            )
-
-        raw, rf = table.pinned_raw()
-        raw = raw.withColumn(
-            "_tf_p", F.coalesce(pred, F.lit(False))
-        )
-        matched_pred_df = (
-            raw.alias("_tgt")
-            .join(src_flagged, cond_for("_tgt"), "left")
-            .where(F.col("_tf_m").isNotNull() & F.col("_tgt._tf_p"))
-        )
-        # dedup-keyed plain table: report VISIBLE matched rows (the raw
-        # join also matches superseded loser versions — review r10; the
-        # rewrite itself stays visible-correct, losers keep losing)
-        n_visible = None
-        if table.schema.dedup_keys:
-            vis = table.read().withColumn("_tf_p", F.coalesce(pred, F.lit(False)))
-            n_visible = (
-                vis.alias("_tgt")
-                .join(src_flagged, cond_for("_tgt"), "left")
-                .where(F.col("_tf_m").isNotNull() & F.col("_tgt._tf_p"))
-                .count()
-            )
-        parts = table.schema.partitions
-        if parts:
-            # qualify with _tgt: the source legitimately carries partition
-            # columns (e.g. project_id among the join keys), and the bare
-            # name over the join is AMBIGUOUS_REFERENCE (review r10)
-            # ONE job discovers affected partitions AND (on unkeyed
-            # tables) the matched count — same merge as _inplace_rewrite
-            # (optimization r13, guide §1.2)
-            vals = (
-                matched_pred_df.groupBy(
-                    *[F.col(f"_tgt.{c}").alias(c) for c in parts]
-                )
-                .agg(F.count(F.lit(1)).alias("_tf_cnt"))
-                .collect()
-            )
-            if not vals:
-                return 0
-            pf, dirs = _partition_selection(table, vals)
-            affected = table.read_raw(snapshot_files=rf).where(pf)
-            n = (
-                n_visible
-                if n_visible is not None
-                else sum(r["_tf_cnt"] for r in vals)
-            )
-        else:
-            n = n_visible if n_visible is not None else matched_pred_df.count()
-            if n == 0:
-                return 0
-            affected = table.read_raw(snapshot_files=rf)
-            dirs = [""]
-        out = apply_merge(affected)
-        if parts:
-            out = out.repartition(*[F.col(c) for c in parts])
-        if table.schema.sorting_columns:
-            out = out.sortWithinPartitions(
-                *[F.col(c) for c in parts], *table._sort_cols()
-            )
-        table.overwrite_partitions(
-        out, dirs=dirs, op="dml", read_files=_read_files_in(rf, dirs)
-    )
-        return n
-    target = _resolve(table, predicate, project_id, ts_lo, ts_hi).alias("_tgt")
     src = F.broadcast(source.alias("_src"))
     cond = None
     for k in join_keys:
         c = F.col(f"_tgt.{k}") == F.col(f"_src.{k}")
         cond = c if cond is None else (cond & c)
+    # qualify target columns with _tgt: the source legitimately carries
+    # table columns (e.g. project_id among the join keys), and the bare
+    # name over the join is AMBIGUOUS_REFERENCE (review r10)
+    tgt_cols = [F.col(f"_tgt.{f.name}").alias(f.name) for f in table.schema.fields]
+    if not table.schema.version_append:
+        pred = _dml_condition(table, predicate, project_id, ts_lo, ts_hi)
+        src_flagged = F.broadcast(
+            source.withColumn("_tf_s", F.lit(True)).alias("_src")
+        )
+
+        # The target-only predicate is evaluated BEFORE the join (flag
+        # column), so bare column names in it can never collide with
+        # same-named source columns; `_tf_m` = source match AND target
+        # filter. Unmatched rows pass through unchanged.
+        def mark(df: DataFrame) -> DataFrame:
+            flagged = df.withColumn("_tf_p", F.coalesce(pred, F.lit(False)))
+            joined = flagged.alias("_tgt").join(src_flagged, cond, "left")
+            return joined.select(
+                *tgt_cols,
+                (F.col("_src._tf_s").isNotNull() & F.col("_tgt._tf_p")).alias("_tf_m"),
+                *[
+                    assignments[c]
+                    .cast(table.schema.spark_schema[c].dataType)
+                    .alias(f"_tf_new_{c}")
+                    for c in assignments
+                ],
+            )
+
+        if table.schema.dedup_keys:
+            # dedup-keyed plain table: match the VISIBLE rows (a raw join
+            # also matches superseded loser versions — review r10)
+            return _inplace_keyed(table, pred, mark, set(assignments))
+        raw, rf = table.pinned_raw()
+        matched = raw.where(pred).alias("_tgt").join(src, cond, "leftsemi")
+        return _inplace_rewrite(
+            table,
+            raw,
+            rf,
+            matched,
+            lambda df: _apply_marked(table, mark(df), assignments),
+        )
+    target = _resolve(table, predicate, project_id, ts_lo, ts_hi).alias("_tgt")
     joined = target.join(src, cond, "inner")
     # Select assignment expressions against the joined frame so `_src.`
     # references resolve; untouched columns pass through from the target.
@@ -752,11 +786,20 @@ def update_from(
             for f in table.schema.fields
         ]
     )
+    moved = _moved(table, assignments, "_tgt.")
+    tombs = None
+    if moved is not None:
+        tombs = (
+            joined.where(moved)
+            .select(*tgt_cols)
+            .withColumn(table.schema.tombstone_column, F.lit(True))
+        )
     # dedup view ⋈ distinct-keyed source (guarded above) keeps one row
     # per target key; key-unique unless an assignment rewrites a key
     return _count_and_append(
         table,
         new_versions,
         stamp,
-        key_unique=not (set(table.schema.dedup_keys or ()) & set(assignments)),
+        key_unique=not (set(table.version_key) & set(assignments)),
+        tombstones=tombs,
     )

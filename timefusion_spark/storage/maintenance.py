@@ -440,11 +440,12 @@ def dv_sweep(table: Table) -> int:
 
 def dedup_sweep(table: Table, partition_values: dict[str, str]) -> int:
     """Physical duplicate removal: rewrite one partition keeping only the
-    winning version per dedup key (database.rs:6737). Tombstone WINNERS are
-    kept — the key must stay masked for older versions living in other
-    partitions; fully dropping a key is `vacuum_tombstones`. Returns the
-    number of physical rows removed."""
-    if not table.schema.dedup_keys:
+    winning version per version key (database.rs:6737). Tombstone WINNERS
+    are kept: when `date` is outside the version key (the time column is
+    not a dedup key), older versions of the key may live in other date
+    partitions and must stay masked. Returns the number of physical rows
+    removed."""
+    if not table.version_key:
         return 0
     _check_partition_keys(table, partition_values)
     pinned, rf = table.pinned_raw()

@@ -87,7 +87,10 @@ class TableSchema:
     """Per-table declaration — the options are load-bearing for the write
     path and read view exactly as in the reference (schema_loader.rs):
 
-    - ``dedup_keys``: last-write-wins identity; empty = append-only.
+    - ``dedup_keys``: last-write-wins identity; empty = append-only. The
+      effective version key (`Table.version_key`) also includes the
+      ``partitions`` columns — `date` only when ``time_column`` is a dedup
+      key: the same dedup_keys in two tenants are two rows.
     - ``dedup_tiebreak``: greatest wins among duplicate keys, NULL lowest
       (schema_loader.rs:32-38); None = keep-last-by-position.
     - ``tombstone_column``: winning version `true` ⇒ row invisible; NULL and

@@ -11,7 +11,7 @@ Structured Streaming query (SURVEY §1.4):
                             partitioned append (Table.append, the exact
                             batch write path — no second code path)
   - checkpoint directory  = WAL (offsets + commit log; replay on restart)
-  - exactly-once          = checkpoint replay + dedup_keys collapsing
+  - exactly-once          = checkpoint replay + version-key collapsing
                             redelivered rows at read time (the reference's
                             LWW guarantee, buffered_write_layer.rs:2506)
 
@@ -88,7 +88,7 @@ def ingest_stream(
 
     `dedup_in_stream=True` additionally collapses redelivered keys BEFORE
     they are written — `withWatermark` + `dropDuplicatesWithinWatermark`
-    on the table's dedup_keys, state bounded by the watermark. This is
+    on the table's version key, state bounded by the watermark. This is
     physical exactly-once (no duplicate versions ever land), vs the
     default logical exactly-once where the read view collapses
     redeliveries (buffered_write_layer.rs:2506 does the same in-buffer
@@ -97,10 +97,18 @@ def ingest_stream(
     if not stream.isStreaming:
         raise ValueError("ingest_stream requires a streaming DataFrame")
     if dedup_in_stream:
-        keys = table.schema.dedup_keys
-        if not keys:
+        if not table.version_key:
             raise ValueError("dedup_in_stream requires dedup_keys on the table")
         from pyspark.sql import functions as F
+
+        # A version-key partition column the source does not deliver is
+        # NULL in every row, or (`date`) derived at coerce from the time
+        # column, which is then a dedup key (Table.version_key) — either
+        # way it cannot split a key, so only delivered ones join the key.
+        parts = table.schema.partitions
+        keys = [
+            k for k in table.version_key if k not in parts or k in stream.columns
+        ]
 
         tc = table.schema.time_column
         # The watermark needs event-time typed; sources often deliver the

@@ -7,7 +7,11 @@ Reference behaviors re-expressed (file:line in /root/reference/src/):
     mem_buffer.rs:637, database.rs:3023-3076 writer props).
   - read view = DedupExec keep-greatest / keep-first + tombstone filter
     (read_dedup.rs:1-160, database.rs:12906-12909) as a row_number() window —
-    SURVEY §2.7's ~3,000-LoC-to-20-lines collapse.
+    SURVEY §2.7's ~3,000-LoC-to-20-lines collapse. The window partitions
+    by `Table.version_key` = partition columns + dedup_keys (`date` only
+    when the time column is a dedup key), so LWW resolves per project as
+    the reference's per-project DedupExec does (database.rs:12553), and
+    filters on the key's partition columns prune partition directories.
   - timestamp→date partition derivation on scan (optimizers/mod.rs:100-150).
 
 Storage is partitioned parquet plus a JSON commit log (delta-spark is not
@@ -323,18 +327,49 @@ class Table:
         col = F.lit(stamp).cast("timestamp") if isinstance(stamp, str) else stamp
         return df.withColumn(self.schema.dedup_tiebreak, col)
 
+    @property
+    def version_key(self) -> list[str]:
+        """The row-version identity the merge-on-read view collapses on:
+        the partition columns the key fixes, then the declared dedup_keys —
+        last-write-wins resolves inside one tenant, like the reference's
+        per-project DedupExec (database.rs:12553). A filter on a version-key
+        column is a filter on the window's partition keys, which Spark
+        pushes below the window into the scan's PartitionFilters.
+
+        `date` is derived from the time column, so it joins the key only
+        when the time column is a dedup key; otherwise a newer version of
+        a key may land on another date and must still supersede the older
+        one. Every other partition column (project_id) always joins: the
+        same dedup_keys in two tenants are two rows. Empty for append-only
+        tables."""
+        keys = self.schema.dedup_keys
+        if not keys:
+            return []
+        parts = [
+            p
+            for p in self.schema.partitions
+            if p != "date" or self.schema.time_column in keys
+        ]
+        return [*parts, *(k for k in keys if k not in parts)]
+
+    @property
+    def versions_share_partition(self) -> bool:
+        """True when the version key holds every partition column, so all
+        versions of a key live in one partition directory."""
+        return set(self.schema.partitions) <= set(self.version_key)
+
     def dedup_batch(self, df: DataFrame) -> DataFrame:
-        """In-batch last-write-wins collapse on dedup_keys before the write
-        commits (mem_buffer.rs:637 `dedup_batches`): greatest tiebreak wins,
-        ties → last row seen in the batch."""
-        if not self.schema.dedup_keys:
+        """In-batch last-write-wins collapse on the version key before the
+        write commits (mem_buffer.rs:637 `dedup_batches`): greatest
+        tiebreak wins, ties → last row seen in the batch."""
+        if not self.version_key:
             return df
         from pyspark.sql import Window as W
 
         order = [F.col("_tf_pos").desc()]
         if self.schema.dedup_tiebreak:
             order.insert(0, F.col(self.schema.dedup_tiebreak).desc_nulls_last())
-        w = W.partitionBy(*self.schema.dedup_keys).orderBy(*order)
+        w = W.partitionBy(*self.version_key).orderBy(*order)
         return (
             df.withColumn("_tf_pos", F.monotonically_increasing_id())
             .withColumn("_tf_rn", F.row_number().over(w))
@@ -505,7 +540,7 @@ class Table:
         (database.rs:5181 — one transaction across several tables).
 
         `batch_key_unique=True` asserts the batch holds AT MOST ONE row
-        per dedup-key tuple, letting the in-batch LWW dedup window (a
+        per version-key tuple, letting the in-batch LWW dedup window (a
         full batch shuffle + sort per append) be skipped as a provable
         identity — the DML version-append path qualifies: its batches
         come from the dedup VIEW (one row per key) and the caller checks
@@ -894,9 +929,8 @@ class Table:
             out = out.unionByName(p)
         return out.withColumn("_change_type", change)
 
-    def _dedup_view(self, df: DataFrame, policy: str) -> DataFrame:
-        if not self.schema.dedup_keys:
-            return df
+    def _version_window(self, policy: str):
+        """The window that ranks a key's versions, winner first."""
         from pyspark.sql import Window as W
 
         tb = self.schema.dedup_tiebreak
@@ -909,9 +943,13 @@ class Table:
             order = [F.col(tb).asc_nulls_first()] if tb else [F.lit(1)]
         else:
             raise ValueError(f"unknown dedup policy {policy!r}")
-        w = W.partitionBy(*self.schema.dedup_keys).orderBy(*order)
+        return W.partitionBy(*self.version_key).orderBy(*order)
+
+    def _dedup_view(self, df: DataFrame, policy: str) -> DataFrame:
+        if not self.version_key:
+            return df
         return (
-            df.withColumn("_tf_rn", F.row_number().over(w))
+            df.withColumn("_tf_rn", F.row_number().over(self._version_window(policy)))
             .where(F.col("_tf_rn") == 1)
             .drop("_tf_rn")
         )
@@ -933,10 +971,13 @@ class Table:
         """The merge-on-read view (read_dedup.rs:25-40 + database.rs:12906),
         optionally time-traveled to log `version`.
 
-        Predicates later placed on this view sit ABOVE the window — exactly
-        the reference's rule that filters on version-mutable columns must
-        not push below DedupExec (database.rs:12507-12533). Partition-column
-        filters still prune the scan (window partition keys are preserved)."""
+        Predicates later placed on this view sit ABOVE the window unless
+        they reference only version-key columns — the reference's rule
+        that filters on version-mutable columns must not push below
+        DedupExec (database.rs:12507-12533), enforced by Catalyst. The
+        version key's partition columns lead it, so a project_id filter
+        (and a `date` filter when the time column is a dedup key) reaches
+        the scan as a PartitionFilter."""
         df = self._dedup_view(
             self.read_raw(version=version, include_group=include_group), policy
         )
@@ -950,15 +991,12 @@ class Table:
         policy: str = KEEP_GREATEST,
     ) -> DataFrame:
         """Routed scan (ProjectRoutingTable::scan analog, database.rs:12553):
-        project guard + timestamp bounds, with the derived `date` partition
-        bounds added so partition pruning engages (optimizers/mod.rs:100-150).
-
-        These filters sit BELOW the dedup window, which is safe because
-        project_id, date and the time column are immutable across row
-        versions (an UPDATE appends the row's ORIGINAL timestamp —
-        otel_logs_and_spans.yaml version_append note), so a version filtered
-        here can never be the winner of a key that survives the filter."""
-        df = self.read_raw()
+        the read view filtered by project and timestamp bounds, plus the
+        derived `date` partition bounds (optimizers/mod.rs:100-150).
+        Spark pushes the filters on version-key columns (project_id; date
+        when the time column is a dedup key) below the dedup window, where
+        they prune partition directories; the rest apply to the view."""
+        df = self.read(policy)
         tc = self.schema.time_column
         if project_id is not None and "project_id" in df.columns:
             df = df.where(F.col("project_id") == project_id)
@@ -970,13 +1008,13 @@ class Table:
             df = df.where(F.col(tc) < F.lit(ts_hi).cast("timestamp"))
             if "date" in self.schema.partitions:
                 df = df.where(F.col("date") <= F.lit(ts_hi).cast("timestamp").cast("date"))
-        return self._tombstone_filter(self._dedup_view(df, policy))
+        return df
 
     def guarded_where(self, predicate: str) -> DataFrame:
         """Tenant-guarded query entry: the predicate MUST pin project_id
         (optimizers/mod.rs:192-216 — AND-conjuncts only, OR rejected);
-        applied over the dedup view, with the project filter free to prune
-        partitions below the window (the key is version-immutable)."""
+        applied over the dedup view, where the project filter prunes
+        partitions because project_id is part of the version key."""
         from timefusion_spark.storage.guard import require_project_guard
 
         require_project_guard(predicate, table_name=self.schema.table_name)
