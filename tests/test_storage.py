@@ -81,6 +81,31 @@ class TestSchemaLoader:
         names = [f.name for f in load_schema_text(MOR_YAML).fields]
         assert names == ["date", "timestamp", "id", "value", "project_id", "updated_at", "deleted"]
 
+    def test_in_repo_metrics_schema_matches_fixtures(self):
+        """The packaged otel_metrics.yaml carries FIXTURES.md §2's columns,
+        NOT NULL marks and table options, plus the three columns
+        q_otel_metrics_rollup writes."""
+        from timefusion_spark.queries.storage_mor import _SCHEMA_DIR
+        from timefusion_spark.storage import load_schema
+
+        s = load_schema(os.path.join(_SCHEMA_DIR, "otel_metrics.yaml"))
+        assert len(s.fields) == 23
+        assert {f.name for f in s.fields if not f.nullable} == {
+            "timestamp", "date", "ingested_at", "id", "series_id",
+            "metric_name", "metric_unit", "metric_type", "flags",
+        }
+        assert s.partitions == ["project_id", "date"]
+        assert s.dedup_keys == ["timestamp", "id"]
+        assert (s.dedup_tiebreak, s.tombstone_column, s.version_append) == (
+            "updated_at", "deleted", True,
+        )
+        assert [(c.name, c.descending) for c in s.sorting_columns] == [
+            ("timestamp", True), ("metric_name", False), ("series_id", False),
+        ]
+        types = {f.name: f.data_type for f in s.fields}
+        assert types["value_double"] == "Float64"
+        assert types["dropped_attributes_count"] == types["message_size_bytes"] == "Int64"
+
 
 class TestWritePath:
     def test_derived_date_partition(self, spark, mor_table):

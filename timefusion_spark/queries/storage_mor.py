@@ -29,17 +29,11 @@ from timefusion_spark.registry import query
 
 _SCHEMA_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "schemas")
 
-# The reference's OWN schema declaration (92-column otel table). Our YAML
-# loader reads the reference format verbatim (same grammar — pinned by
-# tests/test_storage.py::TestReferenceSchemas); fall back to the compact
-# in-repo copy when the reference tree is absent.
-_REF_OTEL = "/root/reference/schemas/otel_logs_and_spans.yaml"
-
-
-def _otel_schema_path() -> str:
-    if os.path.exists(_REF_OTEL):
-        return _REF_OTEL
-    return os.path.join(_SCHEMA_DIR, "otel_logs_and_spans.yaml")
+# The otel queries load only the in-repo declaration, never a schema tree
+# found elsewhere on the box, so every run exercises the same table. The
+# loader reads the reference's YAML grammar verbatim (pinned by
+# tests/test_storage.py::TestReferenceSchemas).
+_OTEL_SCHEMA = os.path.join(_SCHEMA_DIR, "otel_logs_and_spans.yaml")
 
 
 _N = 2000
@@ -484,7 +478,7 @@ def q_streaming_multi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_otel_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from timefusion_spark.storage import Table, load_schema
 
-    schema = load_schema(_otel_schema_path())
+    schema = load_schema(_OTEL_SCHEMA)
     base_dir = tempfile.mkdtemp(prefix="tf_otel_")
     tbl = Table.create(spark, schema, os.path.join(base_dir, "otel"))
     try:
@@ -536,7 +530,7 @@ def q_otel_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_otel_recent_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from timefusion_spark.storage import Table, load_schema
 
-    schema = load_schema(_otel_schema_path())
+    schema = load_schema(_OTEL_SCHEMA)
     base_dir = tempfile.mkdtemp(prefix="tf_otel_topk_")
     tbl = Table.create(spark, schema, os.path.join(base_dir, "otel"))
     try:
@@ -584,7 +578,7 @@ def q_otel_recent_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_otel_promoted_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     from timefusion_spark.storage import Table, load_schema
 
-    schema = load_schema(_otel_schema_path())
+    schema = load_schema(_OTEL_SCHEMA)
     base_dir = tempfile.mkdtemp(prefix="tf_otel_promo_")
     tbl = Table.create(spark, schema, os.path.join(base_dir, "otel"))
     try:
@@ -630,24 +624,19 @@ def q_otel_promoted_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY metric_name
     """,
     doc="The reference's SECOND table type end-to-end: gauge points written "
-    "into the otel_metrics schema (the reference's own 69-column "
-    "declaration, schemas/otel_metrics.yaml) through the full write path, "
+    "into the otel_metrics schema (the in-repo 23-column reconstruction, "
+    "timefusion_spark/schemas/otel_metrics.yaml: FIXTURES.md §2 plus the "
+    "value/size columns this query writes) through the full write path, "
     "then a per-metric rollup (points, distinct series, avg/max) off the "
     "routed scan — metrics ingest + dashboard shape.",
 )
 def q_otel_metrics_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from timefusion_spark.storage import Table, load_schema
 
-    ref = "/root/reference/schemas/otel_metrics.yaml"
-    if not os.path.exists(ref):
-        # The 69-column metrics schema ships ONLY in the reference tree
-        # (no in-repo copy, unlike the otel schema's fallback): the
-        # query's whole point is exercising the reference's own
-        # declaration through the write path, so without the checkout
-        # there is nothing real to run — fail loudly rather than
-        # silently certifying a stand-in.
-        raise FileNotFoundError("reference otel_metrics.yaml not present")
-    schema = load_schema(ref)
+    # The in-repo reconstruction of the metrics table (23 columns:
+    # FIXTURES.md §2 plus the value/size columns written below), shipped
+    # in the package so the query runs without a reference checkout.
+    schema = load_schema(os.path.join(_SCHEMA_DIR, "otel_metrics.yaml"))
     base_dir = tempfile.mkdtemp(prefix="tf_metrics_")
     tbl = Table.create(spark, schema, os.path.join(base_dir, "metrics"))
     try:
@@ -1034,7 +1023,7 @@ def q_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_otel_hash_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from timefusion_spark.storage import Table, dml, load_schema
 
-    schema = load_schema(_otel_schema_path())
+    schema = load_schema(_OTEL_SCHEMA)
     base_dir = tempfile.mkdtemp(prefix="tf_otel_hash_")
     tbl = Table.create(spark, schema, os.path.join(base_dir, "otel"))
     try:
@@ -1767,7 +1756,7 @@ def q_streaming_changefeed_variant(spark: SparkSession, sf_dir: str) -> DataFram
     from timefusion_spark.storage import Table, load_schema
 
     register_sources(spark)
-    schema = load_schema(_otel_schema_path())
+    schema = load_schema(_OTEL_SCHEMA)
     base_dir = tempfile.mkdtemp(prefix="tf_cfv_")
     tbl = Table.create(spark, schema, os.path.join(base_dir, "otel"))
     try:
