@@ -2427,3 +2427,96 @@ class TestR13StorageHardening:
         assert not tbl.log.exists()
         with pytest.raises(ValueError, match="group/segment"):
             tbl.append(_rows(spark, BASE), group=object())
+
+
+def _jobs_run(spark, fn) -> int:
+    """Spark jobs `fn` starts on this thread, counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"tf-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events post async
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestSnapshotRelation:
+    """The scan relation is built from the commit log's file list, so its
+    cost does not grow a Spark job with the file count."""
+
+    @staticmethod
+    def _otel_rows(spark, rows):
+        return spark.createDataFrame(
+            rows, "timestamp string, id string, name string, project_id string"
+        )
+
+    def _env_with_files(self, spark, base, n_projects, n_days):
+        """An SltEnv whose otel table holds one file in each of
+        n_projects x n_days (project_id, date) partitions (one append)."""
+        from timefusion_spark.slt import SltEnv
+
+        env = SltEnv(spark, str(base))
+        tbl = env.tables["otel_logs_and_spans"]
+        tbl.append(
+            self._otel_rows(
+                spark,
+                [
+                    (f"2026-01-{d + 1:02d} 10:00:00", f"r{p}-{d}", "GET /x", f"p{p}")
+                    for p in range(n_projects)
+                    for d in range(n_days)
+                ],
+            )
+        )
+        assert len(tbl.log.snapshot().files) == n_projects * n_days
+        env.refresh_stale()
+        return env, tbl
+
+    def test_refresh_and_append_jobs_flat_in_file_count(self, spark, tmp_path):
+        """Refreshing a view after a commit runs 0 Spark jobs at 8 and at
+        200 live files, and a one-batch append runs the same number of
+        jobs at both (no parallel listing job past 32 paths)."""
+        counts = {}
+        for n_projects, n_days in ((2, 4), (20, 10)):
+            env, tbl = self._env_with_files(
+                spark, tmp_path / f"e{n_projects}", n_projects, n_days
+            )
+            one = self._otel_rows(spark, [("2026-01-01 11:00:00", "x", "GET /x", "p0")])
+            append_jobs = _jobs_run(spark, lambda: tbl.append(one))
+            refreshed = []
+            refresh_jobs = _jobs_run(
+                spark, lambda: refreshed.extend(env.refresh_stale())
+            )
+            assert refreshed == ["otel_logs_and_spans"]
+            counts[n_projects * n_days] = (refresh_jobs, append_jobs)
+        assert counts[8][0] == counts[200][0] == 0, counts
+        assert counts[8][1] == counts[200][1], counts
+
+    def test_refresh_records_tip_read_before_the_relation(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A commit that lands while a refresh builds its relation (Arrow
+        ingest commits outside the statement lock) is served by the next
+        refresh_stale, not recorded as seen while missing from the view."""
+        env, tbl = self._env_with_files(spark, tmp_path, 1, 1)
+        late = self._otel_rows(spark, [("2026-01-01 12:00:00", "late", "GET /x", "p0")])
+        real_read = Table.read
+        fired = []
+
+        def racing_read(self, *a, **kw):
+            df = real_read(self, *a, **kw)
+            if self is tbl and not fired:
+                fired.append(True)
+                self.append(late)  # commits after the frame's file list
+            return df
+
+        tbl.append(self._otel_rows(spark, [("2026-01-01 11:00:00", "b", "GET /x", "p0")]))
+        monkeypatch.setattr(Table, "read", racing_read)
+        env.refresh_stale()
+        env.refresh_stale()
+        assert fired
+        ids = {r["id"] for r in spark.sql("SELECT id FROM otel_logs_and_spans").collect()}
+        assert ids == {"r0-0", "b", "late"}

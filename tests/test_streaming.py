@@ -227,57 +227,25 @@ def test_redelivery_collapsed_by_dedup_keys(spark, tmp_path, table):
     assert table.read().count() == 30  # view serves each key once
 
 
-def test_in_stream_dedup_within_watermark(spark, tmp_path, table):
-    """dropDuplicatesWithinWatermark ingest (SURVEY §2.10 in-stream dedup):
-    redelivered keys inside the watermark are collapsed BEFORE the write —
-    physically exactly-once, no duplicate versions on disk (the in-buffer
-    collapse of buffered_write_layer.rs:2651-2674), with state bounded by
-    the watermark."""
+def test_redelivery_and_later_update_serve_the_update(spark, tmp_path, table):
+    """A redelivered batch and a genuine later update of one key both go
+    through ingest_stream: the redelivery adds versions, the update wins
+    (greatest tiebreak = latest append), and the view serves each key once
+    with the updated value."""
     src = str(tmp_path / "src")
-    _write_source_file(src, "b0.json", _rows(0, 30))
-    _write_source_file(src, "b1.json", _rows(0, 30))  # full redelivery
-    _write_source_file(src, "b2.json", _rows(30, 40))
-    q = ingest_stream(
-        table,
-        _stream(spark, src),
-        str(tmp_path / "ckpt"),
-        dedup_in_stream=True,
-        watermark="30 minutes",
-    )
-    q.awaitTermination(180)
-    assert table.read_raw().count() == 40  # duplicates never landed
-    assert table.read().count() == 40
-
-
-def test_in_stream_dedup_agrees_with_view_across_dates(spark, tmp_path):
-    """On an [id]-keyed table the time column is not a key, so a newer
-    version of an id may land on another date and still supersede the old
-    one: the in-stream dedup and the read view must both treat the same id
-    on two dates as ONE key."""
-    yaml = YAML.replace("dedup_keys: [timestamp, id]", "dedup_keys: [id]")
-    rows = [
-        {"timestamp": "2026-01-01 23:50:00", "id": "k", "value": 1.0, "project_id": "p1"},
-        {"timestamp": "2026-01-02 00:10:00", "id": "k", "value": 2.0, "project_id": "p1"},
-        {"timestamp": "2026-01-01 12:00:00", "id": "j", "value": 3.0, "project_id": "p1"},
-    ]
-    src = str(tmp_path / "src")
-    _write_source_file(src, "b0.json", rows)
-    counts = {}
-    for in_stream in (True, False):
-        t = Table.create(
-            spark, load_schema_text(yaml), str(tmp_path / f"t_{in_stream}")
-        )
-        q = ingest_stream(
-            t,
-            _stream(spark, src),
-            str(tmp_path / f"ckpt_{in_stream}"),
-            dedup_in_stream=in_stream,
-            watermark="1 day",
-        )
-        q.awaitTermination(180)
-        counts[in_stream] = (t.read_raw().count(), t.read().count())
-    assert counts[True] == (2, 2)
-    assert counts[False][1] == 2
+    ckpt = str(tmp_path / "ckpt")
+    update = dict(_rows(3, 4)[0], value=99.0)
+    # one availableNow run per file keeps the delivery order fixed
+    for name, rows in (
+        ("b0.json", _rows(0, 10)),
+        ("b1.json", _rows(0, 10)),  # full redelivery
+        ("b2.json", [update]),  # same (timestamp, id), new value
+    ):
+        _write_source_file(src, name, rows)
+        ingest_stream(table, _stream(spark, src), ckpt).awaitTermination(120)
+    assert table.read_raw().count() == 21  # every delivery landed
+    got = {r["id"]: r["value"] for r in table.read().collect()}
+    assert got == {f"id{i}": 99.0 if i == 3 else float(i) for i in range(10)}
 
 
 def test_windowed_counts_watermark_late_data(spark, tmp_path):

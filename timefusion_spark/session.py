@@ -37,6 +37,14 @@ def get_spark(app_name: str = "timefusion_spark", cpus: str | int | None = None)
         reference's hand-tuned target_partitions, database.rs:3046).
       - shuffle.partitions sized to cores locally; AQE coalesces up.
       - Arrow enabled: Pandas-UDF operators move columnar, not row-by-row.
+      - parallelPartitionDiscovery.threshold raised past any file count:
+        a table scan is built from the commit log's authoritative file
+        list (Table.read_raw), so Spark only stats those paths, and on
+        the local filesystem a driver-side stat is cheap. At the default
+        of 32 paths, every view refresh, DML read basis and append past
+        32 live files launched a Spark job to stat them. On an object
+        store each stat is a HEAD request; there a file index filled from
+        the manifest would skip the stats instead.
     """
     cpus = str(cpus or _DEFAULT_CPUS)
     builder = (
@@ -51,6 +59,9 @@ def get_spark(app_name: str = "timefusion_spark", cpus: str | int | None = None)
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)
+        )
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # µs-typed parquet timestamps (the reference's storage contract).
         # Spark's INT96 default writes timestamps with NO pushdown-usable

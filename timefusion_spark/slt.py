@@ -463,6 +463,12 @@ class SltEnv:
 
         invalidate_table_types(self.spark, name)
         tbl = self.tables[name]
+        # The tip is read BEFORE the relation is built: a commit landing
+        # in between (Arrow ingest commits under its own lock, not the
+        # statement lock) is then in the view or newer than the recorded
+        # version, so the next refresh_stale picks it up. Read after, it
+        # would be recorded as seen while missing from the view.
+        tip = tbl.log.latest_version() if tbl.log.exists() else -1
         try:
             df = tbl.read()
         except Exception:
@@ -489,9 +495,7 @@ class SltEnv:
             ]
             df = df.select(*vis)
         df.createOrReplaceTempView(name)
-        self._view_versions[name] = (
-            tbl.log.latest_version() if tbl.log.exists() else -1
-        )
+        self._view_versions[name] = tip
         if self.views:
             # dependent CREATE VIEW definitions captured the OLD analyzed
             # plan of this table's view — re-create them against the new one
@@ -561,8 +565,11 @@ class SltEnv:
         EXTERNAL writers (a streaming ingest, another process over the
         same store) become visible to the next statement, matching the
         reference's always-live snapshot listing. Cost per call is one
-        log-dir listing per table; runner-mediated writes refresh eagerly
-        so this is a no-op on the common path."""
+        log-dir listing per table, plus one view rebuild (Table.read, no
+        Spark job) per table that advanced. Runner-mediated SQL writes
+        refresh eagerly, but Arrow ingest commits outside the runner, so
+        under a steady ingest stream each read after a commit pays one
+        rebuild here."""
         # several envs can interleave on one shared SparkSession (tests,
         # embedded use); make THIS env's tables the ones pg_indexes sees
         # for the statement about to run — registration is a dict swap

@@ -75,8 +75,6 @@ def ingest_stream(
     checkpoint_dir: str,
     trigger_seconds: int | None = None,
     query_name: str | None = None,
-    dedup_in_stream: bool = False,
-    watermark: str = "10 minutes",
     rollup: tuple[str, object] | None = None,
 ) -> StreamingQuery:
     """Attach a streaming DataFrame to the table's write path.
@@ -86,35 +84,13 @@ def ingest_stream(
     partition — the reference's late-data policy (SURVEY §2.10): no
     watermark on the append path.
 
-    `dedup_in_stream=True` additionally collapses redelivered keys BEFORE
-    they are written — `withWatermark` + `dropDuplicatesWithinWatermark`
-    on the table's version key, state bounded by the watermark. This is
-    physical exactly-once (no duplicate versions ever land), vs the
-    default logical exactly-once where the read view collapses
-    redeliveries (buffered_write_layer.rs:2506 does the same in-buffer
-    collapse before flush). Late rows outside the watermark still append
-    and are still collapsed by the read view."""
+    Redeliveries are collapsed without stream state: a replayed
+    micro-batch is skipped by the commit log's txn watermark (below), and
+    rows redelivered through another query land as extra versions that
+    append's in-batch dedup and the read view collapse to the greatest
+    tiebreak, so a genuine later update always wins."""
     if not stream.isStreaming:
         raise ValueError("ingest_stream requires a streaming DataFrame")
-    if dedup_in_stream:
-        if not table.version_key:
-            raise ValueError("dedup_in_stream requires dedup_keys on the table")
-        from pyspark.sql import functions as F
-
-        # A version-key partition column the source does not deliver is
-        # NULL in every row, or (`date`) derived at coerce from the time
-        # column, which is then a dedup key (Table.version_key) — either
-        # way it cannot split a key, so only delivered ones join the key.
-        parts = table.schema.partitions
-        keys = [
-            k for k in table.version_key if k not in parts or k in stream.columns
-        ]
-
-        tc = table.schema.time_column
-        # The watermark needs event-time typed; sources often deliver the
-        # time column as text (the full coerce happens later in append).
-        stream = stream.withColumn(tc, F.col(tc).cast("timestamp"))
-        stream = stream.withWatermark(tc, watermark).dropDuplicatesWithinWatermark(keys)
 
     # Stable per-checkpoint transaction id: a restarted query on the same
     # checkpoint keeps the same app_id, so a replayed (uncommitted-at-kill)

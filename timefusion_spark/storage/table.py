@@ -677,7 +677,9 @@ class Table:
         from the commit log's CURRENT SNAPSHOT — exactly the committed
         files, never a concurrent writer's in-flight ones. The explicit
         file list keeps partition-value derivation and pruning (basePath
-        anchors the partition directory parse).
+        anchors the partition directory parse). Spark stats the listed
+        files on the driver, with no listing job at any file count
+        (session.get_spark raises parallelPartitionDiscovery.threshold).
 
         `version` time-travels: read the snapshot as of that log version
         (Delta's VERSION AS OF; the reference's snapshot_cache keeps old
@@ -1099,10 +1101,7 @@ class Table:
                 boundary.append(rel)
         scanned = 0
         if boundary:
-            df = self.spark.read.parquet(
-                *[os.path.join(self.path, p) for p in boundary]
-            )
-            scanned = df.where(
+            scanned = self.read_raw(snapshot_files=boundary).where(
                 (F.col(tc) >= F.lit(lo_ts)) & (F.col(tc) < F.lit(hi_ts))
             ).count()
         n = meta_rows + scanned
