@@ -3733,3 +3733,125 @@ class TestServerReviewR12:
         client.query("CLOSE fa_cur")
         client.query("COMMIT")
         client.query("DROP TABLE fa_t")
+
+
+class TestOneJobReads:
+    """A read whose input fits in one advisory partition is planned on the
+    server's sibling session (AQE off, one shuffle partition) and runs as
+    one Spark job; a single-partition result drains with one collect().
+    Larger inputs keep the main session's AQE plan and the partition-at-a-
+    time drain."""
+
+    TILE = (
+        "SELECT name, count(*) AS n FROM otel_logs_and_spans "
+        "WHERE project_id = 'p1' GROUP BY name ORDER BY n DESC, name LIMIT 5"
+    )
+
+    @staticmethod
+    def _tenant_server(spark, base):
+        srv = PgWireServer(spark, base_dir=str(base)).start()
+        names = ["GET /a", "GET /b", "POST /c"]
+        rows = [
+            (f"2026-01-0{d + 1} 10:{m:02d}:00", f"r{p}-{d}-{m}", names[m % 3], f"p{p}")
+            for p in range(3)
+            for d in range(2)
+            for m in range(4 + p)
+        ]
+        srv._server.runner.tables["otel_logs_and_spans"].append(
+            spark.createDataFrame(
+                rows, "timestamp string, id string, name string, project_id string"
+            )
+        )
+        return srv
+
+    @staticmethod
+    def _tagged_jobs(spark, tag: str) -> int:
+        sc = spark.sparkContext._jsc.sc()
+        sc.listenerBus().waitUntilEmpty()  # job events post async
+        return len(sc.statusTracker().getJobIdsForTag(tag))
+
+    def test_tenant_tile_runs_one_job(self, spark, tmp_path):
+        from timefusion_spark.server import _plan_read
+
+        key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+        srv = self._tenant_server(spark, tmp_path / "oj_data")
+        c = WireClient(srv.port)
+        try:
+            msgs = c.startup()
+            pid, _ = struct.unpack("!ii", [p for t, p in msgs if t == b"K"][0])
+            tag = f"pgwire-conn-{pid}"
+            before = self._tagged_jobs(spark, tag)
+            small = rows_of(c.query(self.TILE))
+            assert small == [["GET /a", "4"], ["GET /b", "4"], ["POST /c", "2"]]
+            assert self._tagged_jobs(spark, tag) - before == 1
+            plan = _plan_read(srv._server, spark.sql(self.TILE))
+            assert plan.sparkSession is srv._server.sibling
+            assert "AdaptiveSparkPlan" not in plan._jdf.queryExecution().executedPlan().toString()
+
+            # below the tenant's file bytes: the main session's AQE plan
+            spark.conf.set(key, "1k")
+            try:
+                plan = _plan_read(srv._server, spark.sql(self.TILE))
+                assert plan.sparkSession is spark
+                executed = plan._jdf.queryExecution().executedPlan().toString()
+                assert "AdaptiveSparkPlan" in executed
+                before = self._tagged_jobs(spark, tag)
+                assert rows_of(c.query(self.TILE)) == small
+                assert self._tagged_jobs(spark, tag) - before > 1
+            finally:
+                spark.conf.unset(key)
+            c.close()
+        finally:
+            srv.stop()
+
+    def test_sibling_carries_runtime_confs(self, spark, tmp_path):
+        marker = "spark.sql.tf.sibling.marker"
+        spark.conf.set(marker, "carried")
+        try:
+            srv = PgWireServer(spark, base_dir=str(tmp_path / "sib_data"))
+        finally:
+            spark.conf.unset(marker)
+        sib = srv._server.sibling
+        assert sib is not spark
+        for k in (
+            "spark.sql.session.timeZone",
+            "spark.sql.legacy.parquet.nanosAsLong",
+            "spark.sql.parquet.outputTimestampType",
+        ):
+            assert sib.conf.get(k) == spark.conf.get(k), k
+        assert sib.conf.get(marker) == "carried"
+        assert sib.conf.get("spark.sql.adaptive.enabled") == "false"
+        assert sib.conf.get("spark.sql.shuffle.partitions") == "1"
+        # the server's own session keeps AQE
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+    def test_multi_partition_source_streams(self, spark, tmp_path, monkeypatch):
+        import timefusion_spark.server as server_mod
+
+        drains: list[tuple[bool, bool]] = []
+        real = server_mod._result_rows
+
+        def recording(df):
+            out = real(df)
+            drains.append((df.sparkSession is spark, isinstance(out, list)))
+            return out
+
+        monkeypatch.setattr(server_mod, "_result_rows", recording)
+        rdd = spark.sparkContext.parallelize(range(400), 8).map(lambda i: (i,))
+        spark.createDataFrame(rdd, "id long").createOrReplaceTempView("drain_probe")
+        srv = self._tenant_server(spark, tmp_path / "dp_data")
+        try:
+            c = WireClient(srv.port)
+            c.startup()
+            rows = rows_of(c.query("SELECT id FROM drain_probe"))
+            assert sorted(int(r[0]) for r in rows) == list(range(400))
+            # a createDataFrame(rdd) leaf estimates Long.MaxValue bytes:
+            # main-session plan, partition-at-a-time toLocalIterator drain
+            assert drains == [(True, False)]
+            drains.clear()
+            assert len(rows_of(c.query(self.TILE))) == 3
+            assert drains == [(False, True)]  # sibling plan, one collect()
+            c.close()
+        finally:
+            srv.stop()
+            spark.catalog.dropTempView("drain_probe")

@@ -37,6 +37,8 @@ Concurrency: one OS thread per connection (socketserver.ThreadingMixIn);
 all connections share the one SparkSession — the reference likewise runs
 every connection against a single shared SessionContext
 (`database.rs:3221-3226`). Spark's SQL entry points are thread-safe.
+Small-input reads execute on one clone of that session, planned with AQE
+off and one shuffle partition (_plan_read): one Spark job per statement.
 """
 
 from __future__ import annotations
@@ -51,6 +53,7 @@ import struct
 import threading
 
 from pyspark.sql import types as T
+from pyspark.sql.classic.dataframe import DataFrame
 
 # ── PG type OIDs (pg_type.dat, public constants) ─────────────────────────
 _OID_BOOL = 16
@@ -986,7 +989,9 @@ class _Handler(socketserver.BaseRequestHandler):
                     return
                 # incremental drain, NOT collect: a fetch-paged portal
                 # over a huge result must never materialize driver-side
-                entry["rows"] = _RowStream(df, registry=self.server.open_streams)
+                entry["rows"] = _RowStream(
+                    _plan_read(self.server, df), registry=self.server.open_streams
+                )
             entry["fields"] = entry["rows"].fields
         stream, fields = entry["rows"], entry["fields"]
         sent_now = 0
@@ -1461,8 +1466,8 @@ class _Handler(socketserver.BaseRequestHandler):
     def _copy_out(self, m: re.Match) -> None:
         """COPY … TO STDOUT — the export half of the bulk protocol (psql
         \\copy out): rows stream as CopyData in text or CSV format,
-        driver memory bounded by toLocalIterator (one partition at a
-        time), lines coalesced into ~64 KB frames."""
+        driver memory bounded by one result partition (_result_rows),
+        lines coalesced into ~64 KB frames."""
         query, table, cols, opts = m.groups()
         opts = opts or ""
         _check_copy_options(opts)
@@ -1481,7 +1486,7 @@ class _Handler(socketserver.BaseRequestHandler):
             collist = cols.strip() if cols else "*"
             sql = f"SELECT {collist} FROM {table}"
         with self._statement_watchdog():
-            df = self._run(sql)
+            df = _plan_read(self.server, self._run(sql))
         fields = df.schema.fields
         self._send(
             b"H",
@@ -1515,7 +1520,7 @@ class _Handler(socketserver.BaseRequestHandler):
             )
         # the export's pinned plan references parquet files a concurrent
         # VACUUM/OPTIMIZE would delete mid-stream: register the drain in
-        # the maintenance guard like every other toLocalIterator drain
+        # the maintenance guard like every other result drain
         # (review r11 — this path was unguarded)
         drain = _LiveDrain()
         self.server.open_streams.add(drain)
@@ -1523,7 +1528,7 @@ class _Handler(socketserver.BaseRequestHandler):
             # statement_timeout applies to the export drain too — every
             # other Spark-action path is watchdog-guarded (review r12)
             with self._statement_watchdog():
-                for row in df.toLocalIterator():
+                for row in _result_rows(df):
                     cells = []
                     for f, v in zip(fields, row):
                         s = _pg_text(v, f.dataType)
@@ -1546,14 +1551,15 @@ class _Handler(socketserver.BaseRequestHandler):
         signature header, per tuple int16 field count + length-prefixed
         fields in each column's binary wire format (the same _pg_binary
         codecs the extended protocol uses), int16 -1 trailer. Memory
-        bounded by toLocalIterator; frames coalesce to ~64 KB."""
+        bounded by one result partition (_result_rows); frames coalesce
+        to ~64 KB."""
         if query is not None:
             sql = query
         else:
             collist = cols.strip() if cols else "*"
             sql = f"SELECT {collist} FROM {table}"
         with self._statement_watchdog():
-            df = self._run(sql)
+            df = _plan_read(self.server, self._run(sql))
         fields = df.schema.fields
         nf = len(fields)
         self._send(
@@ -1576,7 +1582,7 @@ class _Handler(socketserver.BaseRequestHandler):
             # statement_timeout applies to the binary export drain too
             # (review r12)
             with self._statement_watchdog():
-                for row in df.toLocalIterator():
+                for row in _result_rows(df):
                     rec = bytearray(struct.pack("!h", nf))
                     for f, v in zip(fields, row):
                         b = _pg_binary(v, f.dataType)
@@ -1849,7 +1855,7 @@ class _Handler(socketserver.BaseRequestHandler):
             if name in self._cursors:
                 raise ValueError(f'cursor "{name}" already exists')
             with self._statement_watchdog():
-                df = self._run(m.group("dsql"))
+                df = _plan_read(self.server, self._run(m.group("dsql")))
                 self._cursors[name] = _RowStream(
                     df, registry=self.server.open_streams
                 )
@@ -2092,14 +2098,15 @@ class _Handler(socketserver.BaseRequestHandler):
                         n = 0 if _is_status_frame(df) else df.count()
                         self._send(b"C", _command_tag(stmt, n).encode() + b"\x00")
                         continue
-                    # stream the result one partition at a time instead of
-                    # collect(): a huge simple-protocol SELECT must not
-                    # materialize driver-side either (the reference streams
-                    # record batches); prefetch pipelines the next
-                    # partition's job behind the send of the current one,
-                    # so small results pay no extra wall. A runtime error
-                    # mid-stream surfaces as ErrorResponse after the rows
-                    # already sent — exactly PG's behavior.
+                    # a small-input read runs as one Spark job; its
+                    # result drains with one collect() when the plan ends
+                    # in a single partition, else one partition at a time
+                    # (_result_rows): a huge simple-protocol SELECT must
+                    # not materialize driver-side either (the reference
+                    # streams record batches). A runtime error mid-stream
+                    # surfaces as ErrorResponse after the rows already
+                    # sent — exactly PG's behavior.
+                    df = _plan_read(self.server, df)
                     fields = df.schema.fields
                     self._send(b"T", self._row_description(fields))
                     n = 0
@@ -2112,7 +2119,7 @@ class _Handler(socketserver.BaseRequestHandler):
                     drain = _LiveDrain()
                     self.server.open_streams.add(drain)
                     try:
-                        for row in df.toLocalIterator(prefetchPartitions=True):
+                        for row in _result_rows(df):
                             self._send(b"D", self._data_row(fields, row))
                             n += 1
                     finally:
@@ -2137,6 +2144,63 @@ def _is_status_frame(df) -> bool:
     return [f.name for f in df.schema.fields] == ["status"] and df.isEmpty()
 
 
+def _plan_read(server, df):
+    """The plan that executes the read `df` (built on `server.spark`).
+
+    A read whose input fits in one advisory partition
+    (`spark.sql.adaptive.advisoryPartitionSizeInBytes` of `server.spark`,
+    read per statement) is re-planned on `server.sibling`, the session's
+    clone with AQE off and one shuffle partition, and runs as one Spark
+    job. At that size AQE would coalesce every shuffle to one partition
+    anyway, but it submits each shuffle stage as its own job; the static
+    one-partition plan pipelines them into the result job. A larger read
+    keeps `df`: AQE, parallel shuffles.
+
+    The rebind hands the sibling `df`'s analyzed plan (commands already
+    executed), so its views, UDFs and time zone stay resolved as on
+    `server.spark` and nothing is registered on the sibling. Input size
+    sums the leaves of the sibling's physical plan: a file scan counts
+    its partition-pruned files (a path-based relation is pruned only in
+    the scan; its optimized-plan leaf reports the whole table), another
+    leaf its logical estimate, and a leaf without one counts as large."""
+    jvm = server.spark._jvm
+    jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        server.sibling._jsparkSession, df._jdf.queryExecution().commandExecuted()
+    )
+    limit = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        server.spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    leaves = jdf.queryExecution().executedPlan().collectLeaves()
+    size = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "FileSourceScanExec":
+            size += leaf.selectedPartitions().totalFileSize()
+        else:
+            link = leaf.logicalLink()
+            if not link.isDefined():
+                return df
+            size += link.get().stats().sizeInBytes()
+        if size > limit:
+            return df
+    return DataFrame(jdf, server.sibling)
+
+
+def _result_rows(df):
+    """The rows of `df` for a one-pass send: one collect() when the
+    executed plan ends in a single partition, else toLocalIterator, one
+    partition per job (prefetch runs the next partition's job behind the
+    send of the current one). toLocalIterator also materializes a whole
+    partition on the driver per job, so for a one-partition result both
+    hold the same rows: the bound stays one partition, while collect()
+    saves the result job and its SinglePartition exchange (and lets
+    TakeOrderedAndProject skip its final exchange)."""
+    part = df._jdf.queryExecution().executedPlan().outputPartitioning()
+    if part.numPartitions() == 1:
+        return df.collect()
+    return df.toLocalIterator(prefetchPartitions=True)
+
+
 class _LiveDrain:
     """Sentinel registered in the server's open_streams WeakSet for the
     duration of a simple-protocol streaming drain — makes the drain
@@ -2152,14 +2216,18 @@ class _LiveDrain:
 
 class _RowStream:
     """Incremental driver-side drain of a result DataFrame for the
-    fetch-paged flows (extended-protocol portals, DECLARE…FETCH cursors,
-    simple-query result sets). The reference's pgwire layer streams
-    encode_dataframe record batches over the wire (pgwire_handlers.rs);
-    the Spark analog is toLocalIterator, which computes one partition at
-    a time on demand — a cursor over a 100×-scale table holds at most
-    the current partition plus one peeked row driver-side, never the
-    whole result (r8 verdict ask #1; the old path did df.collect() at
-    DECLARE/first-Execute).
+    fetch-paged flows (extended-protocol portals, DECLARE…FETCH cursors).
+    The reference's pgwire layer streams encode_dataframe record batches
+    over the wire (pgwire_handlers.rs); the Spark analog is
+    toLocalIterator, which computes one partition at a time on demand — a
+    cursor over a 100×-scale table holds at most the current partition
+    plus one peeked row driver-side, never the whole result (r8 verdict
+    ask #1; the old path did df.collect() at DECLARE/first-Execute).
+    Paging needs the lazy iterator, so these flows keep it even for a
+    single-partition result. The one-pass sends (simple query, COPY TO
+    STDOUT) use _result_rows instead: there a single-partition result
+    drains with one collect(), which holds the same one partition
+    toLocalIterator would, so the memory bound is the same.
 
     `pulled` counts rows drawn from Spark — tests pin the no-full-
     materialization contract on it."""
@@ -2818,6 +2886,13 @@ class PgWireServer:
             runner = SltEnv(spark, base_dir)
         self._server = _TCPServer((host, port), _Handler)
         self._server.spark = spark
+        # small-input reads plan here as one Spark job (see _plan_read):
+        # a clone carries every SQL conf the session holds now; confs are
+        # session-wide, so a per-statement conf.set would race connections
+        sibling = type(spark)(spark.sparkContext, spark._jsparkSession.cloneSession())
+        sibling.conf.set("spark.sql.adaptive.enabled", "false")
+        sibling.conf.set("spark.sql.shuffle.partitions", "1")
+        self._server.sibling = sibling
         # cleartext-password auth (pgwire_handlers.rs AuthConfig): None =
         # trust — the embedded/test posture; the CLI front door REQUIRES a
         # password unless --insecure-auth explicitly opts out

@@ -45,6 +45,14 @@ def get_spark(app_name: str = "timefusion_spark", cpus: str | int | None = None)
         32 live files launched a Spark job to stat them. On an object
         store each stat is a HEAD request; there a file index filled from
         the manifest would skip the stats instead.
+
+    The pgwire server plans a read without AQE when its input fits in
+    one advisory partition (spark.sql.adaptive.advisoryPartitionSizeInBytes):
+    on a clone of this session with AQE off and one shuffle partition
+    (server._plan_read). At that size AQE would coalesce each shuffle to
+    one partition anyway, yet it runs every shuffle stage as its own
+    Spark job, and that per-job cost dominates a dashboard read; the
+    static plan runs the statement as one job.
     """
     cpus = str(cpus or _DEFAULT_CPUS)
     builder = (

@@ -168,6 +168,18 @@ class _unshredded_variants:
         return False
 
 
+def _read_parquet(reader, paths: list[str]) -> DataFrame:
+    """`reader.parquet(*paths)` with the path list crossing py4j in one
+    call: PySpark converts a Python list one element per round trip
+    (~0.1 ms a path, 19 ms at 200 files). The list goes over as one
+    NUL-joined string, split JVM-side (no path can hold a NUL)."""
+    jvm = reader._spark._jvm
+    seq = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(
+        jvm.org.apache.commons.lang3.StringUtils.split("\0".join(paths), "\0")
+    )
+    return DataFrame(reader._jreader.parquet(seq), reader._spark)
+
+
 class Table:
     """One partitioned table. Construct via :meth:`create` or :meth:`open`."""
 
@@ -679,7 +691,8 @@ class Table:
         file list keeps partition-value derivation and pruning (basePath
         anchors the partition directory parse). Spark stats the listed
         files on the driver, with no listing job at any file count
-        (session.get_spark raises parallelPartitionDiscovery.threshold).
+        (session.get_spark raises parallelPartitionDiscovery.threshold),
+        and the file list crosses py4j in one call (_read_parquet).
 
         `version` time-travels: read the snapshot as of that log version
         (Delta's VERSION AS OF; the reference's snapshot_cache keeps old
@@ -719,10 +732,11 @@ class Table:
                     )
                     return empty.select(*cols, "_tf_dv_file", "_tf_dv_pos")
                 return empty.select(*cols)
-            df = (
-                self.spark.read.schema(self.schema.spark_schema)
-                .option("basePath", self.path)
-                .parquet(*[os.path.join(self.path, p) for p in data_rel])
+            df = _read_parquet(
+                self.spark.read.schema(self.schema.spark_schema).option(
+                    "basePath", self.path
+                ),
+                [os.path.join(self.path, p) for p in data_rel],
             )
             if dv_rel or _dv_coords:
                 # Physical row coordinates (file rel-path, row position).
@@ -745,8 +759,8 @@ class Table:
                 # ANTI-join on the coordinates — the original parquet
                 # stays live, reads pay one small hash-probe per row
                 # instead of a partition rewrite.
-                dv = self.spark.read.parquet(
-                    *[os.path.join(self.path, p) for p in dv_rel]
+                dv = _read_parquet(
+                    self.spark.read, [os.path.join(self.path, p) for p in dv_rel]
                 ).select("_tf_dv_file", "_tf_dv_pos")
                 df = df.join(
                     F.broadcast(dv), ["_tf_dv_file", "_tf_dv_pos"], "left_anti"
