@@ -3808,35 +3808,46 @@ class TestOneJobReads:
         marker = "spark.sql.tf.sibling.marker"
         spark.conf.set(marker, "carried")
         try:
-            srv = PgWireServer(spark, base_dir=str(tmp_path / "sib_data"))
+            srv = PgWireServer(spark, base_dir=str(tmp_path / "sib_data")).start()
         finally:
             spark.conf.unset(marker)
-        sib = srv._server.sibling
-        assert sib is not spark
-        for k in (
-            "spark.sql.session.timeZone",
-            "spark.sql.legacy.parquet.nanosAsLong",
-            "spark.sql.parquet.outputTimestampType",
-        ):
-            assert sib.conf.get(k) == spark.conf.get(k), k
-        assert sib.conf.get(marker) == "carried"
-        assert sib.conf.get("spark.sql.adaptive.enabled") == "false"
-        assert sib.conf.get("spark.sql.shuffle.partitions") == "1"
-        # the server's own session keeps AQE
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+        try:
+            sib = srv._server.sibling
+            assert sib is not spark
+            for k in (
+                "spark.sql.session.timeZone",
+                "spark.sql.legacy.parquet.nanosAsLong",
+                "spark.sql.parquet.outputTimestampType",
+            ):
+                assert sib.conf.get(k) == spark.conf.get(k), k
+            assert sib.conf.get(marker) == "carried"
+            assert sib.conf.get("spark.sql.adaptive.enabled") == "false"
+            assert sib.conf.get("spark.sql.shuffle.partitions") == "1"
+            # the server's own session keeps AQE
+            assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+        finally:
+            srv.stop()
 
     def test_multi_partition_source_streams(self, spark, tmp_path, monkeypatch):
         import timefusion_spark.server as server_mod
+        from pyspark.sql.classic.dataframe import DataFrame
 
-        drains: list[tuple[bool, bool]] = []
-        real = server_mod._result_rows
+        drains: list[tuple[bool, int]] = []
+        iterated: list[bool] = []
+        real_rows, real_iter = server_mod._result_rows, DataFrame.toLocalIterator
 
-        def recording(df):
-            out = real(df)
-            drains.append((df.sparkSession is spark, isinstance(out, list)))
+        def recording(df, **kw):
+            before = len(iterated)
+            out = real_rows(df, **kw)
+            drains.append((df.sparkSession is spark, len(iterated) - before))
             return out
 
+        def iterating(df, *a, **kw):
+            iterated.append(True)
+            return real_iter(df, *a, **kw)
+
         monkeypatch.setattr(server_mod, "_result_rows", recording)
+        monkeypatch.setattr(DataFrame, "toLocalIterator", iterating)
         rdd = spark.sparkContext.parallelize(range(400), 8).map(lambda i: (i,))
         spark.createDataFrame(rdd, "id long").createOrReplaceTempView("drain_probe")
         srv = self._tenant_server(spark, tmp_path / "dp_data")
@@ -3847,11 +3858,67 @@ class TestOneJobReads:
             assert sorted(int(r[0]) for r in rows) == list(range(400))
             # a createDataFrame(rdd) leaf estimates Long.MaxValue bytes:
             # main-session plan, partition-at-a-time toLocalIterator drain
-            assert drains == [(True, False)]
+            assert drains == [(True, 1)]
             drains.clear()
             assert len(rows_of(c.query(self.TILE))) == 3
-            assert drains == [(False, True)]  # sibling plan, one collect()
+            assert drains == [(False, 0)]  # sibling plan, collect()'s one job
             c.close()
         finally:
             srv.stop()
             spark.catalog.dropTempView("drain_probe")
+
+    def test_single_partition_result_reaches_python_lazily(
+        self, spark, tmp_path, monkeypatch
+    ):
+        from pyspark.serializers import CPickleSerializer
+        from pyspark.sql import functions as F
+
+        from timefusion_spark.server import _plan_read, _result_rows
+
+        loaded = [0]
+        real = CPickleSerializer.loads
+
+        def counting(self, obj, *a, **kw):
+            batch = real(self, obj, *a, **kw)
+            loaded[0] += len(batch)
+            return batch
+
+        srv = PgWireServer(spark, base_dir=str(tmp_path / "lz_data")).start()
+        try:
+            n = 20000
+            wide = spark.range(n).selectExpr("id", "repeat('x', 64) AS pad")
+            df = _plan_read(srv._server, wide.orderBy(F.desc("id")))
+            assert df.sparkSession is srv._server.sibling
+            part = df._jdf.queryExecution().executedPlan().outputPartitioning()
+            assert part.numPartitions() == 1
+            monkeypatch.setattr(CPickleSerializer, "loads", counting)
+            rows = _result_rows(df)
+            head = [next(rows).id for _ in range(10)]
+            assert head == list(range(n - 1, n - 11, -1))
+            # the batches read so far (they double from one row), not the
+            # whole sorted partition as a Python list
+            assert loaded[0] < 64
+            assert 10 + sum(1 for _ in rows) == n
+            assert loaded[0] == n
+        finally:
+            srv.stop()
+
+    def test_subquery_input_counts_toward_the_size(self, spark, tmp_path):
+        from timefusion_spark.server import _plan_read
+
+        rdd = spark.sparkContext.parallelize(range(400), 8).map(lambda i: (i,))
+        spark.createDataFrame(rdd, "id long").createOrReplaceTempView("sq_big")
+        srv = PgWireServer(spark, base_dir=str(tmp_path / "sq_data")).start()
+        try:
+            outer = "SELECT count(*) FROM range(10) WHERE id < "
+            small = _plan_read(srv._server, spark.sql(outer + "5"))
+            assert small.sparkSession is srv._server.sibling
+            # the scalar subquery scans a leaf with no size estimate: the
+            # main session's AQE plan, though the outer scan is small
+            sub = spark.sql(outer + "(SELECT max(id) FROM sq_big)")
+            plan = _plan_read(srv._server, sub)
+            assert plan.sparkSession is spark
+            assert plan.collect()[0][0] == 10
+        finally:
+            srv.stop()
+            spark.catalog.dropTempView("sq_big")

@@ -2495,6 +2495,20 @@ class TestSnapshotRelation:
         assert counts[8][0] == counts[200][0] == 0, counts
         assert counts[8][1] == counts[200][1], counts
 
+    def test_bloom_filters_sized_to_the_batch(self, spark, tmp_path):
+        """A small batch's file carries both id bloom filters at their
+        64 KB floor, not 1 MB each: the scan size the server's one-job
+        rule counts is row data, not fixed-size filters."""
+        env, tbl = self._env_with_files(spark, tmp_path, 1, 1)
+        rows = [(f"2026-01-01 10:{m:02d}:00", f"b{m}", "GET /x", "p0") for m in range(30)]
+        tbl.append(self._otel_rows(spark, rows))
+        files = tbl.log.snapshot().files
+        sizes = {f: os.path.getsize(os.path.join(tbl.path, f)) for f in files}
+        assert all(128 * 1024 < s < 512 * 1024 for s in sizes.values()), sizes
+        env.refresh_stale()
+        got = spark.sql("SELECT name FROM otel_logs_and_spans WHERE id = 'b7'").collect()
+        assert [r["name"] for r in got] == ["GET /x"]
+
     def test_refresh_records_tip_read_before_the_relation(
         self, spark, tmp_path, monkeypatch
     ):

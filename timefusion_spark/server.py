@@ -52,8 +52,10 @@ import socketserver
 import struct
 import threading
 
+from pyspark.serializers import BatchedSerializer, CPickleSerializer
 from pyspark.sql import types as T
 from pyspark.sql.classic.dataframe import DataFrame
+from pyspark.util import _load_from_socket
 
 # ── PG type OIDs (pg_type.dat, public constants) ─────────────────────────
 _OID_BOOL = 16
@@ -2098,9 +2100,10 @@ class _Handler(socketserver.BaseRequestHandler):
                         n = 0 if _is_status_frame(df) else df.count()
                         self._send(b"C", _command_tag(stmt, n).encode() + b"\x00")
                         continue
-                    # a small-input read runs as one Spark job; its
-                    # result drains with one collect() when the plan ends
-                    # in a single partition, else one partition at a time
+                    # a small-input read runs as one Spark job; a result
+                    # whose plan ends in a single partition runs as
+                    # collect()'s job, any other one partition per job,
+                    # and both reach Python a batch at a time
                     # (_result_rows): a huge simple-protocol SELECT must
                     # not materialize driver-side either (the reference
                     # streams record batches). A runtime error mid-stream
@@ -2119,7 +2122,7 @@ class _Handler(socketserver.BaseRequestHandler):
                     drain = _LiveDrain()
                     self.server.open_streams.add(drain)
                     try:
-                        for row in _result_rows(df):
+                        for row in _result_rows(df, prefetch=True):
                             self._send(b"D", self._data_row(fields, row))
                             n += 1
                     finally:
@@ -2158,11 +2161,7 @@ def _plan_read(server, df):
 
     The rebind hands the sibling `df`'s analyzed plan (commands already
     executed), so its views, UDFs and time zone stay resolved as on
-    `server.spark` and nothing is registered on the sibling. Input size
-    sums the leaves of the sibling's physical plan: a file scan counts
-    its partition-pruned files (a path-based relation is pruned only in
-    the scan; its optimized-plan leaf reports the whole table), another
-    leaf its logical estimate, and a leaf without one counts as large."""
+    `server.spark` and nothing is registered on the sibling."""
     jvm = server.spark._jvm
     jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
         server.sibling._jsparkSession, df._jdf.queryExecution().commandExecuted()
@@ -2170,35 +2169,57 @@ def _plan_read(server, df):
     limit = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
         server.spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
     )
-    leaves = jdf.queryExecution().executedPlan().collectLeaves()
-    size = 0
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        if leaf.getClass().getSimpleName() == "FileSourceScanExec":
-            size += leaf.selectedPartitions().totalFileSize()
-        else:
-            link = leaf.logicalLink()
-            if not link.isDefined():
-                return df
-            size += link.get().stats().sizeInBytes()
-        if size > limit:
-            return df
+    if _input_bytes(jdf.queryExecution().executedPlan(), limit) > limit:
+        return df
     return DataFrame(jdf, server.sibling)
 
 
-def _result_rows(df):
-    """The rows of `df` for a one-pass send: one collect() when the
-    executed plan ends in a single partition, else toLocalIterator, one
-    partition per job (prefetch runs the next partition's job behind the
-    send of the current one). toLocalIterator also materializes a whole
-    partition on the driver per job, so for a one-partition result both
-    hold the same rows: the bound stays one partition, while collect()
-    saves the result job and its SinglePartition exchange (and lets
-    TakeOrderedAndProject skip its final exchange)."""
+def _input_bytes(plan, limit: int) -> int:
+    """Bytes the physical `plan` reads, summed over its leaves and the
+    leaves of its subqueries (a scalar or IN subquery runs its own
+    scans); counting stops once the sum passes `limit`. A file scan
+    counts its partition-pruned files (a path-based relation is pruned
+    only in the scan; its optimized-plan leaf reports the whole table),
+    another leaf its logical estimate, and a leaf without one counts as
+    more than `limit`."""
+    subs = plan.subqueriesAll()
+    size = 0
+    for p in [plan, *(subs.apply(i) for i in range(subs.size()))]:
+        leaves = p.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.getClass().getSimpleName() == "FileSourceScanExec":
+                size += leaf.selectedPartitions().totalFileSize()
+            else:
+                link = leaf.logicalLink()
+                if not link.isDefined():
+                    return limit + 1
+                size += link.get().stats().sizeInBytes()
+            if size > limit:
+                return size
+    return size
+
+
+def _result_rows(df, prefetch: bool = False):
+    """The rows of `df` for a one-pass send (simple query, COPY TO
+    STDOUT), read as the send consumes them.
+
+    A plan that ends in a single partition runs as collect()'s one job:
+    no result job and SinglePartition exchange of its own, and
+    TakeOrderedAndProject skips its final exchange. Its rows are read
+    off the result socket lazily, not built into a list, so Python holds
+    one pickled batch at a time while the JVM holds the one partition,
+    as toLocalIterator's job for that partition would. Any other plan
+    drains through toLocalIterator, one partition per job; `prefetch`
+    runs the next partition's job behind the send of the current one and
+    so holds two partitions (the simple-query send sets it, the bulk
+    COPY export does not)."""
     part = df._jdf.queryExecution().executedPlan().outputPartitioning()
     if part.numPartitions() == 1:
-        return df.collect()
-    return df.toLocalIterator(prefetchPartitions=True)
+        return _load_from_socket(
+            df._jdf.collectToPython(), BatchedSerializer(CPickleSerializer())
+        )
+    return df.toLocalIterator(prefetchPartitions=prefetch)
 
 
 class _LiveDrain:
@@ -2226,8 +2247,8 @@ class _RowStream:
     Paging needs the lazy iterator, so these flows keep it even for a
     single-partition result. The one-pass sends (simple query, COPY TO
     STDOUT) use _result_rows instead: there a single-partition result
-    drains with one collect(), which holds the same one partition
-    toLocalIterator would, so the memory bound is the same.
+    runs as collect()'s one job and its rows are still read lazily, one
+    pickled batch at a time, so the bound stays one partition.
 
     `pulled` counts rows drawn from Spark — tests pin the no-full-
     materialization contract on it."""

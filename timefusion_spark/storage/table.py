@@ -168,18 +168,6 @@ class _unshredded_variants:
         return False
 
 
-def _read_parquet(reader, paths: list[str]) -> DataFrame:
-    """`reader.parquet(*paths)` with the path list crossing py4j in one
-    call: PySpark converts a Python list one element per round trip
-    (~0.1 ms a path, 19 ms at 200 files). The list goes over as one
-    NUL-joined string, split JVM-side (no path can hold a NUL)."""
-    jvm = reader._spark._jvm
-    seq = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(
-        jvm.org.apache.commons.lang3.StringUtils.split("\0".join(paths), "\0")
-    )
-    return DataFrame(reader._jreader.parquet(seq), reader._spark)
-
-
 class Table:
     """One partitioned table. Construct via :meth:`create` or :meth:`open`."""
 
@@ -401,8 +389,15 @@ class Table:
 
     def _writer_options(self) -> dict[str, str]:
         # Parquet bloom filters for id-lookup columns (database.rs:3056-3076,
-        # yaml `bloom_filter: true` fields).
-        opts: dict[str, str] = {"compression": "zstd"}
+        # yaml `bloom_filter: true` fields). Adaptive: the writer keeps
+        # candidate filters from 1 MB down to 64 KB and stores the smallest
+        # one that holds the row group's distinct values at the same false-
+        # positive rate; a fixed filter takes the full 1 MB per column
+        # whatever the row count (a 30-row file was 2.1 MB, 132 KB adaptive).
+        opts: dict[str, str] = {
+            "compression": "zstd",
+            "parquet.bloom.filter.adaptive.enabled": "true",
+        }
         for f in self.schema.fields:
             # No bloom filters on Variant columns: the physical layout is a
             # binary pair, not a hashable scalar (the reference's yaml only
@@ -691,8 +686,7 @@ class Table:
         file list keeps partition-value derivation and pruning (basePath
         anchors the partition directory parse). Spark stats the listed
         files on the driver, with no listing job at any file count
-        (session.get_spark raises parallelPartitionDiscovery.threshold),
-        and the file list crosses py4j in one call (_read_parquet).
+        (session.get_spark raises parallelPartitionDiscovery.threshold).
 
         `version` time-travels: read the snapshot as of that log version
         (Delta's VERSION AS OF; the reference's snapshot_cache keeps old
@@ -732,11 +726,10 @@ class Table:
                     )
                     return empty.select(*cols, "_tf_dv_file", "_tf_dv_pos")
                 return empty.select(*cols)
-            df = _read_parquet(
-                self.spark.read.schema(self.schema.spark_schema).option(
-                    "basePath", self.path
-                ),
-                [os.path.join(self.path, p) for p in data_rel],
+            df = (
+                self.spark.read.schema(self.schema.spark_schema)
+                .option("basePath", self.path)
+                .parquet(*[os.path.join(self.path, p) for p in data_rel])
             )
             if dv_rel or _dv_coords:
                 # Physical row coordinates (file rel-path, row position).
@@ -759,8 +752,8 @@ class Table:
                 # ANTI-join on the coordinates — the original parquet
                 # stays live, reads pay one small hash-probe per row
                 # instead of a partition rewrite.
-                dv = _read_parquet(
-                    self.spark.read, [os.path.join(self.path, p) for p in dv_rel]
+                dv = self.spark.read.parquet(
+                    *[os.path.join(self.path, p) for p in dv_rel]
                 ).select("_tf_dv_file", "_tf_dv_pos")
                 df = df.join(
                     F.broadcast(dv), ["_tf_dv_file", "_tf_dv_pos"], "left_anti"
