@@ -3737,9 +3737,10 @@ class TestServerReviewR12:
 
 class TestOneJobReads:
     """A read whose input fits in one advisory partition is planned on the
-    server's sibling session (AQE off, one shuffle partition) and runs as
-    one Spark job; a single-partition result drains with one collect().
-    Larger inputs keep the main session's AQE plan and the partition-at-a-
+    server's sibling session (AQE off, one shuffle partition, each file
+    scan read as one partition) and runs as one stage and one task; a
+    single-partition result drains with one collect(). Larger inputs keep
+    the main session's AQE plan, parallel scans and the partition-at-a-
     time drain."""
 
     TILE = (
@@ -3765,10 +3766,21 @@ class TestOneJobReads:
         return srv
 
     @staticmethod
-    def _tagged_jobs(spark, tag: str) -> int:
+    def _tagged_jobs(spark, tag: str) -> set[int]:
         sc = spark.sparkContext._jsc.sc()
         sc.listenerBus().waitUntilEmpty()  # job events post async
-        return len(sc.statusTracker().getJobIdsForTag(tag))
+        return set(sc.statusTracker().getJobIdsForTag(tag))
+
+    @staticmethod
+    def _stage_tasks(spark, jobs) -> list[int]:
+        """Task count of each stage the `jobs` ran."""
+        tracker = spark.sparkContext._jsc.sc().statusTracker()
+        stages = [s for j in sorted(jobs) for s in tracker.getJobInfo(j).get().stageIds()]
+        return [tracker.getStageInfo(s).get().numTasks() for s in stages]
+
+    @staticmethod
+    def _executed(df) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
 
     def test_tenant_tile_runs_one_job(self, spark, tmp_path):
         from timefusion_spark.server import _plan_read
@@ -3783,26 +3795,108 @@ class TestOneJobReads:
             before = self._tagged_jobs(spark, tag)
             small = rows_of(c.query(self.TILE))
             assert small == [["GET /a", "4"], ["GET /b", "4"], ["POST /c", "2"]]
-            assert self._tagged_jobs(spark, tag) - before == 1
+            jobs = self._tagged_jobs(spark, tag) - before
+            assert len(jobs) == 1
+            # the scan, dedup window, aggregate and top-k in one task
+            assert self._stage_tasks(spark, jobs) == [1]
             plan = _plan_read(srv._server, spark.sql(self.TILE))
             assert plan.sparkSession is srv._server.sibling
-            assert "AdaptiveSparkPlan" not in plan._jdf.queryExecution().executedPlan().toString()
+            executed = self._executed(plan)
+            assert "AdaptiveSparkPlan" not in executed
+            assert "Coalesce 1" in executed and "Exchange" not in executed
 
-            # below the tenant's file bytes: the main session's AQE plan
+            # below the tenant's file bytes: the main session's AQE plan,
+            # its scans not coalesced
             spark.conf.set(key, "1k")
             try:
                 plan = _plan_read(srv._server, spark.sql(self.TILE))
                 assert plan.sparkSession is spark
-                executed = plan._jdf.queryExecution().executedPlan().toString()
+                executed = self._executed(plan)
                 assert "AdaptiveSparkPlan" in executed
+                optimized = plan._jdf.queryExecution().optimizedPlan().toString()
+                assert "Repartition" not in optimized
+                assert not re.search(r"\bCoalesce \d", executed)
                 before = self._tagged_jobs(spark, tag)
                 assert rows_of(c.query(self.TILE)) == small
-                assert self._tagged_jobs(spark, tag) - before > 1
+                jobs = self._tagged_jobs(spark, tag) - before
+                assert len(jobs) > 1
+                # the tenant's two date partitions scan as two tasks
+                assert max(self._stage_tasks(spark, jobs)) > 1
             finally:
                 spark.conf.unset(key)
             c.close()
         finally:
             srv.stop()
+
+    def test_deletion_vector_read_on_one_stage(self, spark, server, client):
+        from timefusion_spark.server import _plan_read
+        from timefusion_spark.storage import dml
+
+        client.query("CREATE TABLE dv_wire (ts TIMESTAMP, id TEXT, val DOUBLE, project_id TEXT)")
+        try:
+            for day in (1, 2):  # two data files
+                client.query(
+                    "INSERT INTO dv_wire VALUES "
+                    + ", ".join(
+                        f"('2026-01-0{day} 10:0{i}:00', 'k{day}{i}', {day * 10 + i}.5, 'p1')"
+                        for i in range(4)
+                    )
+                )
+            tbl = server._server.runner.tables["dv_wire"]
+            assert dml.delete(tbl, predicate="val < 12 OR id = 'k23'", deletion_vectors=True) == 3
+            sql = "SELECT id, val FROM dv_wire ORDER BY id"
+            got = rows_of(client.query(sql))
+            want = [[r.id, str(r.val)] for r in tbl.read().orderBy("id").collect()]
+            assert got == want
+            assert [r[0] for r in got] == ["k12", "k13", "k20", "k21", "k22"]
+            plan = _plan_read(server._server, spark.sql(sql))
+            assert plan.sparkSession is server._server.sibling
+            # the `_metadata` coordinates and the DV anti-join sit above
+            # the coalesced scan; only the DV side is broadcast
+            executed = self._executed(plan)
+            assert "Coalesce 1" in executed
+            assert not re.search(r"(?<!Broadcast)Exchange", executed)
+        finally:
+            client.query("DROP TABLE dv_wire")
+
+    def test_join_and_subquery_on_the_sibling(self, spark, server, client):
+        from timefusion_spark.server import _plan_read
+
+        client.query("CREATE TABLE jn_l (ts TIMESTAMP, id TEXT, val DOUBLE, project_id TEXT)")
+        client.query("CREATE TABLE jn_r (ts TIMESTAMP, id TEXT, note TEXT, project_id TEXT)")
+        try:
+            for t, third in (("jn_l", lambda i: f"{i}.5"), ("jn_r", lambda i: f"'n{i % 3}'")):
+                for day in (1, 2):  # two data files per table
+                    client.query(
+                        f"INSERT INTO {t} VALUES "
+                        + ", ".join(
+                            f"('2026-01-0{day} 10:0{i}:00', 'k{i}', {third(day * 10 + i)}, 'p1')"
+                            for i in range(5)
+                        )
+                    )
+            join = (
+                "SELECT r.note, count(*) AS n, sum(l.val) AS s FROM jn_l l "
+                "JOIN jn_r r ON l.id = r.id AND l.ts = r.ts "
+                "GROUP BY r.note ORDER BY r.note"
+            )
+            sub = (
+                "SELECT id, val - (SELECT avg(val) FROM jn_r r JOIN jn_l l ON r.id = l.id) AS d "
+                "FROM jn_l WHERE id IN (SELECT id FROM jn_r WHERE note = 'n0') ORDER BY d"
+            )
+            for sql in (join, sub):
+                got = rows_of(client.query(sql))
+                want = [[str(v) for v in r] for r in spark.sql(sql).collect()]
+                assert got == want and got, sql
+                plan = _plan_read(server._server, spark.sql(sql))
+                assert plan.sparkSession is server._server.sibling, sql
+                assert "Coalesce 1" in self._executed(plan), sql
+            # both join sides read as one partition: no shuffle under the join
+            assert not re.search(
+                r"(?<!Broadcast)Exchange", self._executed(_plan_read(server._server, spark.sql(join)))
+            )
+        finally:
+            client.query("DROP TABLE jn_l")
+            client.query("DROP TABLE jn_r")
 
     def test_sibling_carries_runtime_confs(self, spark, tmp_path):
         marker = "spark.sql.tf.sibling.marker"

@@ -38,7 +38,8 @@ all connections share the one SparkSession — the reference likewise runs
 every connection against a single shared SessionContext
 (`database.rs:3221-3226`). Spark's SQL entry points are thread-safe.
 Small-input reads execute on one clone of that session, planned with AQE
-off and one shuffle partition (_plan_read): one Spark job per statement.
+off, one shuffle partition and each file scan read as one partition
+(_plan_read): one stage and one task per statement.
 """
 
 from __future__ import annotations
@@ -2100,7 +2101,7 @@ class _Handler(socketserver.BaseRequestHandler):
                         n = 0 if _is_status_frame(df) else df.count()
                         self._send(b"C", _command_tag(stmt, n).encode() + b"\x00")
                         continue
-                    # a small-input read runs as one Spark job; a result
+                    # a small-input read runs as one stage; a result
                     # whose plan ends in a single partition runs as
                     # collect()'s job, any other one partition per job,
                     # and both reach Python a batch at a time
@@ -2153,18 +2154,23 @@ def _plan_read(server, df):
     A read whose input fits in one advisory partition
     (`spark.sql.adaptive.advisoryPartitionSizeInBytes` of `server.spark`,
     read per statement) is re-planned on `server.sibling`, the session's
-    clone with AQE off and one shuffle partition, and runs as one Spark
-    job. At that size AQE would coalesce every shuffle to one partition
-    anyway, but it submits each shuffle stage as its own job; the static
-    one-partition plan pipelines them into the result job. A larger read
-    keeps `df`: AQE, parallel shuffles.
+    clone with AQE off and one shuffle partition, with each file scan
+    read as one partition (_coalesce_scans). Every operator above a scan
+    then sees a single partition, so the dedup window, tombstone filter,
+    aggregates and sort need no exchange: the statement runs as one
+    stage and one task. At that size AQE would coalesce every shuffle to
+    one partition anyway, but it submits each shuffle stage as its own
+    job, and a static plan still writes and reads each shuffle. A larger
+    read keeps `df`: AQE, parallel scans and shuffles.
 
     The rebind hands the sibling `df`'s analyzed plan (commands already
     executed), so its views, UDFs and time zone stay resolved as on
     `server.spark` and nothing is registered on the sibling."""
     jvm = server.spark._jvm
+    plan = df._jdf.queryExecution().commandExecuted()
     jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-        server.sibling._jsparkSession, df._jdf.queryExecution().commandExecuted()
+        server.sibling._jsparkSession,
+        _coalesce_scans(plan, server.coalesce) or plan,
     )
     limit = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
         server.spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
@@ -2172,6 +2178,27 @@ def _plan_read(server, df):
     if _input_bytes(jdf.queryExecution().executedPlan(), limit) > limit:
         return df
     return DataFrame(jdf, server.sibling)
+
+
+def _coalesce_scans(plan, coalesce):
+    """The logical `plan` with a one-partition, non-shuffle `coalesce`
+    (Repartition(1, shuffle=false)) above each file relation, or None
+    when it reads none. Only the nodes on the path to a relation are
+    rebuilt, a few py4j calls per node. Subquery expressions are not
+    walked: their plans keep their own partitioning."""
+    children = plan.children()
+    n = children.size()
+    if n == 0:
+        if plan.nodeName() == "LogicalRelation":
+            return coalesce(1, False, plan)
+        return None
+    rebuilt = False
+    for i in range(n):
+        child = _coalesce_scans(children.apply(i), coalesce)
+        if child is not None:
+            children = children.updated(i, child)
+            rebuilt = True
+    return plan.withNewChildren(children) if rebuilt else None
 
 
 def _input_bytes(plan, limit: int) -> int:
@@ -2907,13 +2934,17 @@ class PgWireServer:
             runner = SltEnv(spark, base_dir)
         self._server = _TCPServer((host, port), _Handler)
         self._server.spark = spark
-        # small-input reads plan here as one Spark job (see _plan_read):
-        # a clone carries every SQL conf the session holds now; confs are
-        # session-wide, so a per-statement conf.set would race connections
+        # small-input reads plan here as one stage and one task (see
+        # _plan_read): a clone carries every SQL conf the session holds
+        # now; confs are session-wide, so a per-statement conf.set would
+        # race connections
         sibling = type(spark)(spark.sparkContext, spark._jsparkSession.cloneSession())
         sibling.conf.set("spark.sql.adaptive.enabled", "false")
         sibling.conf.set("spark.sql.shuffle.partitions", "1")
         self._server.sibling = sibling
+        # the logical coalesce _plan_read puts over each scan, resolved
+        # once: each package step of a py4j class lookup is a round trip
+        self._server.coalesce = spark._jvm.org.apache.spark.sql.catalyst.plans.logical.Repartition
         # cleartext-password auth (pgwire_handlers.rs AuthConfig): None =
         # trust — the embedded/test posture; the CLI front door REQUIRES a
         # password unless --insecure-auth explicitly opts out

@@ -48,11 +48,13 @@ def get_spark(app_name: str = "timefusion_spark", cpus: str | int | None = None)
 
     The pgwire server plans a read without AQE when its input fits in
     one advisory partition (spark.sql.adaptive.advisoryPartitionSizeInBytes):
-    on a clone of this session with AQE off and one shuffle partition
-    (server._plan_read). At that size AQE would coalesce each shuffle to
-    one partition anyway, yet it runs every shuffle stage as its own
-    Spark job, and that per-job cost dominates a dashboard read; the
-    static plan runs the statement as one job.
+    on a clone of this session with AQE off and one shuffle partition,
+    each file scan read as one partition (server._plan_read). At that
+    size AQE would coalesce each shuffle to one partition anyway, yet it
+    runs every shuffle stage as its own Spark job, and a static plan
+    still writes and reads every shuffle; that per-stage cost dominates
+    a dashboard read. With one-partition scans the statement runs as one
+    stage and one task, with no exchange.
     """
     cpus = str(cpus or _DEFAULT_CPUS)
     builder = (
