@@ -1411,15 +1411,32 @@ class TestCancelRequest:
         c.query("ROLLBACK")
         c.close()
 
-    def test_cursor_streams_without_full_materialization(self, spark, server):
+    @pytest.mark.parametrize(
+        "one_partition", [False, True], ids=["many_partitions", "one_partition"]
+    )
+    def test_cursor_streams_without_full_materialization(
+        self, spark, server, monkeypatch, one_partition
+    ):
         """The fetch-paged flows exist so a huge result never materializes
-        driver-side: DECLARE opens an incremental toLocalIterator drain and
-        the first FETCH computes only a prefix of the partitions. Pinned
-        end-to-end with a per-partition accumulator: after FETCH 10 from a
-        16-partition view, most partitions have NOT been computed (the old
-        collect()-at-DECLARE path would bump all 16 before the first row)."""
+        driver-side: DECLARE opens a drain that runs no job, and the first
+        FETCH of a 16-partition view computes only a prefix of the
+        partitions through toLocalIterator. Pinned end-to-end with a
+        per-partition accumulator: after FETCH 10, most partitions have NOT
+        been computed (the old collect()-at-DECLARE path would bump all 16
+        before the first row). A one-partition result drains through
+        collect()'s one job instead, started by the first FETCH too."""
         import time
 
+        from pyspark.sql.classic.dataframe import DataFrame
+
+        iterated: list[bool] = []
+        real_iter = DataFrame.toLocalIterator
+
+        def iterating(df, *a, **kw):
+            iterated.append(True)
+            return real_iter(df, *a, **kw)
+
+        monkeypatch.setattr(DataFrame, "toLocalIterator", iterating)
         acc = spark.sparkContext.accumulator(0)
 
         def bump(it):
@@ -1432,7 +1449,10 @@ class TestCancelRequest:
             .mapPartitions(bump)
             .map(lambda i: (i,))
         )
-        spark.createDataFrame(rdd, "id long").createOrReplaceTempView("cursor_probe")
+        probe = spark.createDataFrame(rdd, "id long")
+        if one_partition:
+            probe = probe.coalesce(1)
+        probe.createOrReplaceTempView("cursor_probe")
         try:
             c = WireClient(server.port)
             c.startup()
@@ -1443,14 +1463,17 @@ class TestCancelRequest:
             msgs = c.query("FETCH 10 FROM bigpager")
             assert len(rows_of(msgs)) == 10
             assert command_tags(msgs) == ["FETCH 10"]
-            time.sleep(0.5)
-            assert acc.value < n_parts // 2, (
-                f"first page computed {acc.value}/{n_parts} partitions — "
-                "the drain materialized (nearly) the whole result"
-            )
+            assert len(iterated) == (0 if one_partition else 1)
+            if not one_partition:
+                time.sleep(0.5)
+                assert acc.value < n_parts // 2, (
+                    f"first page computed {acc.value}/{n_parts} partitions — "
+                    "the drain materialized (nearly) the whole result"
+                )
             msgs = c.query("FETCH ALL FROM bigpager")
             assert len(rows_of(msgs)) == n_parts * per_part - 10
-            c.query("CLOSE bigpager")
+            assert command_tags(c.query("CLOSE bigpager")) == ["CLOSE CURSOR"]
+            assert b"E" in tags_of(c.query("FETCH 1 FROM bigpager"))
             c.close()
         finally:
             spark.catalog.dropTempView("cursor_probe")
@@ -3883,7 +3906,13 @@ class TestOneJobReads:
                 "SELECT id, val - (SELECT avg(val) FROM jn_r r JOIN jn_l l ON r.id = l.id) AS d "
                 "FROM jn_l WHERE id IN (SELECT id FROM jn_r WHERE note = 'n0') ORDER BY d"
             )
-            for sql in (join, sub):
+            # the scalar subquery is pushed into the scan's data filters
+            # too, so the plan holds it twice, once as a ReusedSubqueryExec
+            reused = (
+                "SELECT l.id, l.val, r.note FROM jn_l l JOIN jn_r r ON l.id = r.id AND l.ts = r.ts "
+                "WHERE l.val > (SELECT avg(val) FROM jn_l) ORDER BY l.id, l.val"
+            )
+            for sql in (join, sub, reused):
                 got = rows_of(client.query(sql))
                 want = [[str(v) for v in r] for r in spark.sql(sql).collect()]
                 assert got == want and got, sql
@@ -4016,3 +4045,99 @@ class TestOneJobReads:
         finally:
             srv.stop()
             spark.catalog.dropTempView("sq_big")
+
+
+class TestProtocolParity:
+    """Simple Query and Parse/Bind/Describe/Execute/Sync run a statement
+    through the same dispatcher, so the admin verbs, cursors and reads
+    answer with the same tags and rows on both; a portal's Describe
+    builds the statement once for its Execute."""
+
+    @staticmethod
+    def _pbdes(c, sql: str):
+        parse = b"\x00" + sql.encode() + b"\x00" + struct.pack("!h", 0)
+        bind = b"\x00\x00" + struct.pack("!hhh", 0, 0, 0)
+        execute = b"\x00" + struct.pack("!i", 0)
+        return _ext_msgs(
+            c, (b"P", parse), (b"B", bind), (b"D", b"P\x00"), (b"E", execute)
+        )
+
+    @staticmethod
+    def _answer(msgs):
+        assert not [p for t, p in msgs if t == b"E"], msgs
+        return command_tags(msgs), row_desc_of(msgs), rows_of(msgs)
+
+    def _both(self, c, sql: str):
+        simple = self._answer(c.query(sql))
+        assert self._answer(self._pbdes(c, sql)) == simple, sql
+        return simple
+
+    def test_cancel_backend_of_unknown_pid(self, client):
+        tags, desc, rows = self._both(client, "SELECT pg_cancel_backend(999999)")
+        assert (tags, desc, rows) == (["SELECT 1"], [("pg_cancel_backend", 16)], [["f"]])
+
+    def test_cursor_verbs(self, client):
+        flow = [
+            "BEGIN",
+            "DECLARE par_cur CURSOR FOR SELECT id FROM range(6) ORDER BY id",
+            "FETCH 2 FROM par_cur",
+            "MOVE 1 FROM par_cur",
+            "FETCH ALL FROM par_cur",
+            "CLOSE par_cur",
+            "COMMIT",
+        ]
+        runs = [
+            [self._answer(client.query(sql)) for sql in flow],
+            [self._answer(self._pbdes(client, sql)) for sql in flow],
+        ]
+        assert runs[0] == runs[1]
+        assert [tags for tags, _, _ in runs[0]] == [
+            ["BEGIN"], ["DECLARE CURSOR"], ["FETCH 2"], ["MOVE 1"],
+            ["FETCH 3"], ["CLOSE CURSOR"], ["COMMIT"],
+        ]
+        assert [rows for _, _, rows in runs[0]][2:5] == [[["0"], ["1"]], [], [["3"], ["4"], ["5"]]]
+
+    def test_handoff(self, spark, tmp_path):
+        srv = PgWireServer(
+            spark, base_dir=str(tmp_path / "par_data"), handoff_lease_s=1.0
+        ).start()
+        c = WireClient(srv.port)
+        try:
+            c.startup()
+            tags, desc, rows = self._both(c, "HANDOFF")
+            assert re.fullmatch(r"HANDOFF \d+", tags[0]) and tags[1:] == []
+            assert (desc, rows) == ([], [])
+            c.close()
+        finally:
+            srv.stop()
+
+    def test_read_is_built_once_per_portal(self, server, client, monkeypatch):
+        import timefusion_spark.pgshim as pgshim
+
+        client.query("CREATE TABLE par_t (ts TIMESTAMP, id TEXT, val DOUBLE, project_id TEXT)")
+        try:
+            client.query(
+                "INSERT INTO par_t VALUES ('2026-01-01 10:00:00', 'a', 1.5, 'p1'), "
+                "('2026-01-01 10:01:00', 'b', 2.5, 'p1')"
+            )
+            sql = "SELECT id, val FROM par_t ORDER BY id"
+            assert self._both(client, sql)[2] == [["a", "1.5"], ["b", "2.5"]]
+            calls: list[str] = []
+            real_sql, runner = pgshim.pg_sql, server._server.runner
+            real_refresh = runner.refresh_stale
+
+            def pg_sql(*a, **kw):
+                calls.append("pg_sql")
+                return real_sql(*a, **kw)
+
+            def refresh_stale():
+                calls.append("refresh_stale")
+                return real_refresh()
+
+            monkeypatch.setattr(pgshim, "pg_sql", pg_sql)
+            monkeypatch.setattr(runner, "refresh_stale", refresh_stale)
+            assert rows_of(self._pbdes(client, sql)) == [["a", "1.5"], ["b", "2.5"]]
+            # Describe built and planned the read; Execute only drained it
+            assert sorted(calls) == ["pg_sql", "refresh_stale"]
+        finally:
+            client.query("DROP TABLE par_t")

@@ -25,6 +25,15 @@ Scope:
   per-column format codes honored in RowDescription and DataRow, and
   1-D array columns declare their real array OIDs. Unsupported binary
   OIDs error clearly on both directions rather than misparse.
+- Both protocols run a statement through one dispatcher
+  (_Handler._statement), so transaction verbs, pg_cancel_backend,
+  HANDOFF, cursors (DECLARE/FETCH/MOVE/CLOSE), storage DDL/DML and reads
+  behave the same on either; only COPY's subprotocol is simple-Query
+  only (the extended protocol refuses it clearly). A portal keeps the
+  result its Describe built, so Execute plans nothing again.
+- Every result drains through one _RowStream: started on the first row
+  pulled (a Describe or DECLARE runs no job), read a batch at a time
+  (_result_rows), and registered as open for the maintenance guard.
 - Auth: cleartext-password startup exchange when a password is
   configured (AuthenticationCleartextPassword → PasswordMessage, wrong
   credentials FATAL 28P01 before any query — the reference's required
@@ -47,11 +56,13 @@ from __future__ import annotations
 import contextlib
 import datetime as dt
 import decimal
+import itertools
 import re
 import socket
 import socketserver
 import struct
 import threading
+import time
 
 from pyspark.serializers import BatchedSerializer, CPickleSerializer
 from pyspark.sql import types as T
@@ -518,6 +529,11 @@ _ROLLBACK_TO_RE = re.compile(
 _RELEASE_RE = re.compile(r"(?is)^\s*RELEASE\s+(?:SAVEPOINT\s+)?([A-Za-z_]\w*)\s*;?\s*$")
 
 
+def _is_txn_verb(stmt: str) -> bool:
+    """A statement _Handler._txn_verb runs (ROLLBACK TO rides ROLLBACK)."""
+    return any(r.match(stmt) for r in (_TXN_VERB_RE, _SAVEPOINT_RE, _RELEASE_RE))
+
+
 # keywords a table reference directly follows; and the clause keywords
 # that END a FROM-list at the same paren depth (so a `,` in a SELECT
 # list or an IN-list never marks table position)
@@ -698,6 +714,9 @@ class _Handler(socketserver.BaseRequestHandler):
     # ── protocol ─────────────────────────────────────────────────────────
     def handle(self) -> None:  # noqa: C901 — the protocol state machine
         self._txn = None
+        self._prepared: dict[str, tuple[str, list[int]]] = {}
+        self._portals: dict[str, dict] = {}
+        self._cursors: dict[str, _RowStream] = {}
         try:
             if not self._startup():
                 return
@@ -726,9 +745,7 @@ class _Handler(socketserver.BaseRequestHandler):
                     self._skip_phase = True
                 elif tag == b"S":  # Sync: end of the extended batch
                     self._skip_phase = False
-                    act = self.server.activity.get(getattr(self, "_pid", None))
-                    if act is not None:
-                        act.update(state="idle", query_start=None)
+                    self._set_activity(state="idle", query_start=None)
                     self._ready()
                 # anything else: ignore (per-protocol NoticeResponse optional)
         except (ConnectionError, OSError):
@@ -737,10 +754,9 @@ class _Handler(socketserver.BaseRequestHandler):
             # connection teardown releases every open cursor/portal result
             # stream (their JVM local-iterator serving resources must not
             # wait for GC — the same prompt-release contract as Close)
-            for entry in getattr(self, "_portals", {}).values():
-                if isinstance(entry.get("rows"), _RowStream):
-                    entry["rows"].close()
-            for cur in getattr(self, "_cursors", {}).values():
+            for entry in self._portals.values():
+                _release(entry["rows"])
+            for cur in self._cursors.values():
                 cur.close()
             if getattr(self, "_pid", None) is not None:
                 self.server.cancel_keys.pop((self._pid, self._secret), None)
@@ -825,9 +841,6 @@ class _Handler(socketserver.BaseRequestHandler):
         # literals regardless (the shim's SQL casts type them), but
         # BINARY-format values need the OID to pick the wire decoder
         oids = list(struct.unpack(f"!{n_types}i", payload[off : off + 4 * n_types]))
-        if not hasattr(self, "_prepared"):
-            self._prepared: dict[str, tuple[str, list[int]]] = {}
-            self._portals: dict[str, dict] = {}
         self._prepared[name] = (sql, oids)
         self._send(b"1")  # ParseComplete
 
@@ -867,35 +880,45 @@ class _Handler(socketserver.BaseRequestHandler):
         rfmts = struct.unpack(f"!{n_rfmt}h", payload[off : off + 2 * n_rfmt])
         if any(f not in (0, 1) for f in rfmts):
             raise ValueError(f"unknown result format code in {list(rfmts)}")
-        if not hasattr(self, "_portals"):
-            self._portals = {}
         # re-Bind over an existing portal implicitly closes it (PG
         # semantics) — release its live _RowStream promptly instead of
         # leaking the JVM local-iterator serving thread until GC
-        old = self._portals.get(portal)
-        if old is not None and isinstance(old.get("rows"), _RowStream):
-            old["rows"].close()
-        # mutable cursor state: Execute with a row limit materializes the
-        # result once, then drains it across successive Execute messages
-        # (PortalSuspended between fetches — the JDBC setFetchSize /
-        # libpq single-row-mode flow)
+        if (old := self._portals.get(portal)) is not None:
+            _release(old["rows"])
+        # the portal's statement is dispatched once, by its first Describe
+        # or Execute (_portal); Execute with a row limit then drains the
+        # result across successive Execute messages (PortalSuspended
+        # between fetches — the JDBC setFetchSize / libpq single-row-mode
+        # flow), `held` keeping the row peeked past the limit
         self._portals[portal] = {
             "sql": _substitute_params(sql, params),
             "rfmts": tuple(rfmts),
-            "rows": None,
             "fields": None,
+            "rows": None,
+            "tag": None,
+            "held": (),
             "sent": 0,
         }
         self._send(b"2")  # BindComplete
 
     def _prepared_entry(self, stmt: str) -> tuple[str, list[int]]:
-        store = getattr(self, "_prepared", {})
-        if stmt not in store:
+        if stmt not in self._prepared:
             raise ValueError(f"prepared statement {stmt!r} does not exist")
-        return store[stmt]
+        return self._prepared[stmt]
 
-    def _prepared_sql(self, stmt: str) -> str:
-        return self._prepared_entry(stmt)[0]
+    def _portal(self, name: str) -> dict:
+        """The bound portal `name` with its statement dispatched: the
+        first Describe or Execute runs _statement, and every later
+        message of the portal reuses that result."""
+        entry = self._portals.get(name)
+        if entry is None:
+            raise ValueError(f"portal {name!r} does not exist")
+        # pg_stat_activity shows the extended protocol's statements too;
+        # the Sync handler resets the connection to idle
+        self._set_activity(state="active", query=entry["sql"][:500], query_start=time.time())
+        if entry["rows"] is None:
+            entry["fields"], entry["rows"], entry["tag"] = self._statement(entry["sql"])
+        return entry
 
     def _describe(self, payload: bytes) -> None:
         kind = payload[0:1]
@@ -919,115 +942,44 @@ class _Handler(socketserver.BaseRequestHandler):
             # plan; drivers accept NoData and re-describe the portal
             self._send(b"n")
             return
-        entry = self._portals.get(name) if hasattr(self, "_portals") else None
-        if entry is None:
-            raise ValueError(f"portal {name!r} does not exist")
-        sql, rfmts = entry["sql"], entry["rfmts"]
-        if (
-            _NO_RESULTSET.match(sql)
-            or _COPY_RE.match(sql)
-            or (self.server.runner is not None and _is_storage_stmt(sql))
-        ):
+        with self._statement_watchdog():
+            entry = self._portal(name)
+        if entry["fields"] is None:
             self._send(b"n")  # NoData
         else:
-            self._send(
-                b"T", self._row_description(self._run(sql).schema.fields, rfmts)
-            )
+            self._send(b"T", self._row_description(entry["fields"], entry["rfmts"]))
 
     def _execute(self, payload: bytes) -> None:
-        from timefusion_spark.pgshim import pg_sql  # noqa: F401 — via _run
-
         portal, off = self._cstr(payload, 0)
-        entry = self._portals.get(portal) if hasattr(self, "_portals") else None
-        if entry is None:
-            raise ValueError(f"portal {portal!r} does not exist")
         # int32 row limit after the portal name: 0 = no limit; nonzero =
         # fetch that many rows and suspend the portal (PG wire spec)
         max_rows = struct.unpack("!i", payload[off : off + 4])[0] if len(payload) >= off + 4 else 0
-        sql, rfmts = entry["sql"], entry["rfmts"]
-        # pg_stat_activity visibility for the extended protocol too:
-        # JDBC/psycopg3 queries used to run with the entry stuck on
-        # state='idle', query=None — invisible to the monitoring view and
-        # to pg_cancel_backend discovery (review r12). The Sync handler
-        # resets to idle like the simple path's tail.
-        import time as _time
-
-        act = self.server.activity.get(getattr(self, "_pid", None))
-        if act is not None:
-            act.update(state="active", query=sql[:500], query_start=_time.time())
-        if self._handle_txn_verb(sql):
-            return
-        self._check_txn_failed()
-        self._check_txn_allowed(sql)
-        if _COPY_RE.match(sql):
-            # the COPY-in subprotocol interleaves with the extended
-            # message flow; PG drivers issue COPY via simple Query
-            raise ValueError(
-                "COPY FROM STDIN is supported only via the simple query "
-                "protocol"
-            )
-        if _COPY_OUT_RE.match(sql):
-            # same for the export half: a clear routing error instead of
-            # the shim's opaque parse failure (review r11)
-            raise ValueError(
-                "COPY TO STDOUT is supported only via the simple query "
-                "protocol"
-            )
-        self._check_write_admission(sql)
-        self._check_maintenance_allowed(sql)
-        if self.server.runner is not None and _is_storage_stmt(sql):
-            with self._admitted_write(sql):
-                with self._statement_watchdog(), self.server.lock:
-                    n_rows = self.server.runner.run_statement(
-                        sql, txn=self._txn
-                    )
-            self._send(b"C", _command_tag(sql, n_rows or 0).encode() + b"\x00")
-            return
-        if entry["rows"] is None:
-            with self._statement_watchdog():
-                df = self._run(sql)
-                if _NO_RESULTSET.match(sql):
-                    n = 0 if _is_status_frame(df) else df.count()
-                    self._send(b"C", _command_tag(sql, n).encode() + b"\x00")
-                    return
-                # incremental drain, NOT collect: a fetch-paged portal
-                # over a huge result must never materialize driver-side
-                entry["rows"] = _RowStream(
-                    _plan_read(self.server, df), registry=self.server.open_streams
-                )
-            entry["fields"] = entry["rows"].fields
-        stream, fields = entry["rows"], entry["fields"]
-        sent_now = 0
+        limit = max_rows if max_rows > 0 else None
+        sent = 0
         with self._statement_watchdog():
-            if max_rows <= 0:
-                # unbounded Execute streams per row (review r12: take(None)
-                # materialized the full result driver-side)
-                for row in stream.iter_rows():
-                    self._send(b"D", self._data_row(fields, row, rfmts))
-                    sent_now += 1
-                suspended = False
-            else:
-                for row in stream.iter_rows(max_rows):
-                    self._send(b"D", self._data_row(fields, row, rfmts))
-                    sent_now += 1
-                suspended = not stream.exhausted()
-        entry["sent"] += sent_now
-        if suspended:
+            entry = self._portal(portal)
+            rows = itertools.chain(entry["held"], entry["rows"])
+            for row in itertools.islice(rows, limit):
+                self._send(b"D", self._data_row(entry["fields"], row, entry["rfmts"]))
+                sent += 1
+            # peek one row past the limit: CommandComplete exactly when the
+            # source is drained, PortalSuspended while rows remain
+            entry["held"] = tuple(itertools.islice(rows, 1 if limit else 0))
+        entry["sent"] += sent
+        if entry["held"]:
             self._send(b"s")  # PortalSuspended — client re-Executes to drain
         else:
             # completion tag counts ALL rows the portal delivered (PG
             # accumulates es_processed across Execute runs of one portal)
-            self._send(b"C", _command_tag(sql, entry["sent"]).encode() + b"\x00")
+            self._send(b"C", entry["tag"](entry["sent"]).encode() + b"\x00")
 
     def _close_msg(self, payload: bytes) -> None:
         kind = payload[0:1]
         name, _ = self._cstr(payload, 1)
         if kind == b"S":
-            getattr(self, "_prepared", {}).pop(name, None)
-        else:
-            entry = getattr(self, "_portals", {}).pop(name, None)
-            if entry is not None and isinstance(entry.get("rows"), _RowStream):
-                entry["rows"].close()
+            self._prepared.pop(name, None)
+        elif (entry := self._portals.pop(name, None)) is not None:
+            _release(entry["rows"])
         self._send(b"3")  # CloseComplete
 
     def _run(self, sql: str):
@@ -1084,13 +1036,11 @@ class _Handler(socketserver.BaseRequestHandler):
     # statement but COMMIT/ROLLBACK answers 25P02, and COMMIT of a failed
     # block rolls back (returning the ROLLBACK tag, exactly like PG).
 
-    def _handle_txn_verb(self, stmt: str) -> bool:
-        """Intercept a transaction-control statement; True if handled."""
-        if self._handle_savepoint_verb(stmt):
-            return True
+    def _txn_verb(self, stmt: str) -> str:
+        """Run a transaction-control statement (_is_txn_verb); its tag."""
+        if tag := self._savepoint_verb(stmt):
+            return tag
         m = _TXN_VERB_RE.match(stmt)
-        if m is None:
-            return False
         # Modifier validation rides the shim's own rule (raises on
         # SAVEPOINT forms, COMMIT PREPARED, compound statements, …).
         from timefusion_spark.pgshim import _apply_settings_statement
@@ -1119,14 +1069,13 @@ class _Handler(socketserver.BaseRequestHandler):
                     # drain before declaring the tail settled
                     self.server.open_txns.add(id(self._txn))
             # BEGIN inside an open block: PG warns and leaves it open.
-            self._send(b"C", b"BEGIN\x00")
-            return True
+            return "BEGIN"
         txn, self._txn = self._txn, None
         if txn is not None:
             with self.server.lock:
                 self.server.open_txns.discard(id(txn))
         if verb in ("COMMIT", "END"):
-            tag = b"COMMIT"
+            tag = "COMMIT"
             if txn is not None and runner is not None:
                 try:
                     if txn.failed:
@@ -1134,14 +1083,13 @@ class _Handler(socketserver.BaseRequestHandler):
                         # and reports it in the command tag.
                         with self.server.lock:
                             runner.rollback_txn(txn)
-                        tag = b"ROLLBACK"
+                        tag = "ROLLBACK"
                     else:
                         with self.server.lock:
                             runner.commit_txn(txn)
                 finally:
                     runner.drop_txn_views(txn)
-            self._send(b"C", tag + b"\x00")
-            return True
+            return tag
         # ROLLBACK / ABORT
         if txn is not None and runner is not None:
             try:
@@ -1149,40 +1097,36 @@ class _Handler(socketserver.BaseRequestHandler):
                     runner.rollback_txn(txn)
             finally:
                 runner.drop_txn_views(txn)
-        self._send(b"C", b"ROLLBACK\x00")
-        return True
+        return "ROLLBACK"
 
-    def _handle_savepoint_verb(self, stmt: str) -> bool:
+    def _savepoint_verb(self, stmt: str) -> str | None:
         """SAVEPOINT / ROLLBACK TO [SAVEPOINT] / RELEASE [SAVEPOINT] — the
         PG nested-transaction surface (psycopg2's with-block emulation).
         Savepoints ride abort-only segment guards on the commit log:
         ROLLBACK TO settles the segments at-and-after the savepoint
         aborted (their staged commits die forever) and — per PG — clears
         the block's failed state; COMMIT remains one atomic umbrella
-        publish."""
+        publish. Its tag, or None for another statement."""
         runner = self.server.runner
         if m := _SAVEPOINT_RE.match(stmt):
             self._require_block("SAVEPOINT")
             self._check_txn_failed()
             with self.server.lock:
                 runner.savepoint(self._txn, m.group(1))
-            self._send(b"C", b"SAVEPOINT\x00")
-            return True
+            return "SAVEPOINT"
         if m := _ROLLBACK_TO_RE.match(stmt):
             self._require_block("ROLLBACK TO SAVEPOINT")
             with self.server.lock:
                 runner.rollback_to_savepoint(self._txn, m.group(1))
             self._txn.failed = False  # PG: rollback-to recovers the block
-            self._send(b"C", b"ROLLBACK\x00")
-            return True
+            return "ROLLBACK"
         if m := _RELEASE_RE.match(stmt):
             self._require_block("RELEASE SAVEPOINT")
             self._check_txn_failed()
             with self.server.lock:
                 runner.release_savepoint(self._txn, m.group(1))
-            self._send(b"C", b"RELEASE\x00")
-            return True
-        return False
+            return "RELEASE"
+        return None
 
     def _require_block(self, what: str) -> None:
         if self._txn is None or self.server.runner is None:
@@ -1206,12 +1150,12 @@ class _Handler(socketserver.BaseRequestHandler):
             raise ValueError(f"{verb} cannot run inside a transaction block")
 
     def _check_maintenance_allowed(self, stmt: str) -> None:
-        """Decline file-rewriting maintenance while any cursor/portal holds
-        an open result stream. The lazy drains (_RowStream) pin a plan over
-        the parquet files that existed at DECLARE/Bind time; OPTIMIZE /
-        VACUUM delete superseded files, so a concurrent rewrite would fail
-        the cursor mid-FETCH — PG cursors are snapshot-stable for their
-        lifetime, so the maintenance verb yields, not the cursor."""
+        """Decline file-rewriting maintenance while any result stream is
+        open. A _RowStream pins a plan over the parquet files that existed
+        when it was planned; OPTIMIZE / VACUUM delete superseded files, so
+        a concurrent rewrite would fail the cursor mid-FETCH — PG cursors
+        are snapshot-stable for their lifetime, so the maintenance verb
+        yields, not the cursor."""
         if not _MAINT_VERB_RE.match(stmt):
             return
         # snapshot defensively: other handler threads register/close
@@ -1249,7 +1193,7 @@ class _Handler(socketserver.BaseRequestHandler):
     # (the open transaction's, or a per-COPY ephemeral one), so a mid-copy
     # failure or CopyFail publishes nothing.
 
-    def _copy_in(self, m: re.Match) -> None:
+    def _copy_in(self, m: re.Match) -> str:
         runner = self.server.runner
         if runner is None:
             raise ValueError("COPY FROM STDIN requires a storage runner")
@@ -1464,33 +1408,31 @@ class _Handler(socketserver.BaseRequestHandler):
             with self.server.lock:
                 runner.commit_txn(txn)  # atomic publish of every chunk
             runner.drop_txn_views(txn)
-        self._send(b"C", f"COPY {total}".encode() + b"\x00")
+        return f"COPY {total}"
 
-    def _copy_out(self, m: re.Match) -> None:
+    def _copy_out(self, m: re.Match) -> str:
         """COPY … TO STDOUT — the export half of the bulk protocol (psql
         \\copy out): rows stream as CopyData in text or CSV format,
-        driver memory bounded by one result partition (_result_rows),
-        lines coalesced into ~64 KB frames."""
+        driver memory bounded by one result partition (_RowStream),
+        lines coalesced into ~64 KB frames. Its tag."""
         query, table, cols, opts = m.groups()
         opts = opts or ""
         _check_copy_options(opts)
+        # the export's pinned plan references parquet files a concurrent
+        # VACUUM/OPTIMIZE would delete mid-stream: the stream is
+        # registered in the maintenance guard like every result drain
+        if query is None:
+            query = f"SELECT {cols.strip() if cols else '*'} FROM {table}"
+        rows = self._read(query)
         if re.search(r"(?i)\bbinary\b", opts):
-            self._copy_out_binary(query, table, cols)
-            return
+            return self._copy_out_binary(rows)
         fmt_csv = re.search(r"(?i)\bcsv\b", opts) is not None
         header = fmt_csv and re.search(r"(?i)\bheader\b", opts) is not None
         dm = re.search(r"(?i)\bDELIMITER\s+E?'(.*?)'", opts)
         delim = dm.group(1).replace("\\t", "\t") if dm else ("," if fmt_csv else "\t")
         nm = re.search(r"(?i)\bNULL\s+'(.*?)'", opts)
         null_s = nm.group(1) if nm else ("" if fmt_csv else "\\N")
-        if query is not None:
-            sql = query
-        else:
-            collist = cols.strip() if cols else "*"
-            sql = f"SELECT {collist} FROM {table}"
-        with self._statement_watchdog():
-            df = _plan_read(self.server, self._run(sql))
-        fields = df.schema.fields
+        fields = rows.fields
         self._send(
             b"H",
             struct.pack("!bh", 0, len(fields))
@@ -1521,49 +1463,31 @@ class _Handler(socketserver.BaseRequestHandler):
                 delim.join(_copy_csv_field(f.name, delim, null_s) for f in fields)
                 + "\n"
             )
-        # the export's pinned plan references parquet files a concurrent
-        # VACUUM/OPTIMIZE would delete mid-stream: register the drain in
-        # the maintenance guard like every other result drain
-        # (review r11 — this path was unguarded)
-        drain = _LiveDrain()
-        self.server.open_streams.add(drain)
-        try:
-            # statement_timeout applies to the export drain too — every
-            # other Spark-action path is watchdog-guarded (review r12)
-            with self._statement_watchdog():
-                for row in _result_rows(df):
-                    cells = []
-                    for f, v in zip(fields, row):
-                        s = _pg_text(v, f.dataType)
-                        if fmt_csv:
-                            cells.append(_copy_csv_field(s, delim, null_s))
-                        else:
-                            cells.append(
-                                null_s if s is None else _copy_text_escape(s, delim)
-                            )
-                    emit(delim.join(cells) + "\n")
-                    n += 1
-        finally:
-            drain.done = True
+        with contextlib.closing(rows):
+            for row in rows:
+                cells = []
+                for f, v in zip(fields, row):
+                    s = _pg_text(v, f.dataType)
+                    if fmt_csv:
+                        cells.append(_copy_csv_field(s, delim, null_s))
+                    else:
+                        cells.append(
+                            null_s if s is None else _copy_text_escape(s, delim)
+                        )
+                emit(delim.join(cells) + "\n")
+                n += 1
         flush()
         self._send(b"c")  # CopyDone
-        self._send(b"C", f"COPY {n}".encode() + b"\x00")
+        return f"COPY {n}"
 
-    def _copy_out_binary(self, query, table, cols) -> None:
+    def _copy_out_binary(self, rows: "_RowStream") -> str:
         """COPY … TO STDOUT (FORMAT binary): the PG binary COPY stream —
         signature header, per tuple int16 field count + length-prefixed
         fields in each column's binary wire format (the same _pg_binary
         codecs the extended protocol uses), int16 -1 trailer. Memory
-        bounded by one result partition (_result_rows); frames coalesce
-        to ~64 KB."""
-        if query is not None:
-            sql = query
-        else:
-            collist = cols.strip() if cols else "*"
-            sql = f"SELECT {collist} FROM {table}"
-        with self._statement_watchdog():
-            df = _plan_read(self.server, self._run(sql))
-        fields = df.schema.fields
+        bounded by one result partition (_RowStream); frames coalesce
+        to ~64 KB. Its tag."""
+        fields = rows.fields
         nf = len(fields)
         self._send(
             b"H",
@@ -1578,31 +1502,23 @@ class _Handler(socketserver.BaseRequestHandler):
                 self._send(b"d", bytes(out))
                 out = bytearray()
 
-        # maintenance-guard registration, same contract as _copy_out
-        drain = _LiveDrain()
-        self.server.open_streams.add(drain)
-        try:
-            # statement_timeout applies to the binary export drain too
-            # (review r12)
-            with self._statement_watchdog():
-                for row in _result_rows(df):
-                    rec = bytearray(struct.pack("!h", nf))
-                    for f, v in zip(fields, row):
-                        b = _pg_binary(v, f.dataType)
-                        if b is None:
-                            rec += struct.pack("!i", -1)
-                        else:
-                            rec += struct.pack("!i", len(b)) + b
-                    out += rec
-                    n += 1
-                    if len(out) >= 65536:
-                        flush()
-        finally:
-            drain.done = True
+        with contextlib.closing(rows):
+            for row in rows:
+                rec = bytearray(struct.pack("!h", nf))
+                for f, v in zip(fields, row):
+                    b = _pg_binary(v, f.dataType)
+                    if b is None:
+                        rec += struct.pack("!i", -1)
+                    else:
+                        rec += struct.pack("!i", len(b)) + b
+                out += rec
+                n += 1
+                if len(out) >= 65536:
+                    flush()
         out += struct.pack("!h", -1)  # trailer
         flush()
         self._send(b"c")  # CopyDone
-        self._send(b"C", f"COPY {n}".encode() + b"\x00")
+        return f"COPY {n}"
 
     def _startup(self) -> bool:
         while True:
@@ -1828,75 +1744,59 @@ class _Handler(socketserver.BaseRequestHandler):
             ]),
         ).createOrReplaceTempView("__pg_stat_activity")
 
-    def _cancel_backend(self, pid: int) -> None:
+    def _cancel_backend(self, pid: int):
+        """SELECT pg_cancel_backend(pid)'s one row, cancelling that
+        backend's Spark jobs via its job tag (the SQL face of the wire
+        CancelRequest) when the row is pulled; false when the pid is
+        unknown, as PG."""
         found = pid in self.server.activity
         if found:
             try:
                 self.server.spark.sparkContext.cancelJobsWithTag(f"pgwire-conn-{pid}")
             except Exception:  # noqa: BLE001 — cancel is best-effort
                 found = False
-        from pyspark.sql import types as T
+        yield (found,)
 
-        fields = [T.StructField("pg_cancel_backend", T.BooleanType())]
-        self._send(b"T", self._row_description(fields))
-        self._send(b"D", self._data_row(fields, (found,)))
-        self._send(b"C", b"SELECT 1\x00")
-
-    def _cursor_verb(self, m: re.Match) -> None:
+    def _cursor_verb(self, m: re.Match):
         """DECLARE name CURSOR FOR … / FETCH [n|ALL] FROM name / MOVE /
-        CLOSE — PG's simple-protocol paging. DECLARE analyzes the plan
-        and opens an incremental _RowStream drain (toLocalIterator — one
-        partition at a time, never a full collect: the paged flows exist
-        precisely so a huge result doesn't materialize at once); each
-        FETCH pulls its page under the statement watchdog. FETCH returns
-        a result set with PG's 'FETCH n' tag, MOVE advances without
-        rows, CLOSE drops the cursor."""
-        if not hasattr(self, "_cursors"):
-            self._cursors: dict[str, dict] = {}
-        if m.group("dname"):
-            name = m.group("dname")
-            if name in self._cursors:
-                raise ValueError(f'cursor "{name}" already exists')
-            with self._statement_watchdog():
-                df = _plan_read(self.server, self._run(m.group("dsql")))
-                self._cursors[name] = _RowStream(
-                    df, registry=self.server.open_streams
-                )
-            self._send(b"C", b"DECLARE CURSOR\x00")
-            return
-        if m.group("cname"):
-            name = m.group("cname")
-            cur = self._cursors.pop(name, None)
-            if cur is None:
-                raise ValueError(f'cursor "{name}" does not exist')
-            cur.close()
-            self._send(b"C", b"CLOSE CURSOR\x00")
-            return
+        CLOSE — PG's cursor paging, as a _statement result. DECLARE plans
+        the read and opens its _RowStream, which runs no job until the
+        first FETCH pulls a row and then reads a batch at a time, so a
+        huge result never materializes at once. FETCH returns a result
+        set with PG's 'FETCH n' tag, MOVE advances without rows, CLOSE
+        drops the cursor."""
+        if name := m.group("dname"):
+
+            def declare() -> str:
+                if name in self._cursors:
+                    raise ValueError(f'cursor "{name}" already exists')
+                self._cursors[name] = self._read(m.group("dsql"))
+                return "DECLARE CURSOR"
+
+            return _command(declare)
+        if name := m.group("cname"):
+
+            def close() -> str:
+                cur = self._cursors.pop(name, None)
+                if cur is None:
+                    raise ValueError(f'cursor "{name}" does not exist')
+                cur.close()
+                return "CLOSE CURSOR"
+
+            return _command(close)
         name = m.group("fname")
         cur = self._cursors.get(name)
         if cur is None:
             raise ValueError(f'cursor "{name}" does not exist')
         raw = m.group("count")
-        n = None if raw and raw.upper() == "ALL" else int(raw) if raw else 1
-        verb = m.group("verb").upper()
-        if verb == "MOVE":
+        page = itertools.islice(
+            cur, None if raw and raw.upper() == "ALL" else int(raw) if raw else 1
+        )
+        if m.group("verb").upper() == "MOVE":
             # count without retaining (review r12: MOVE ALL built the
             # full row list only to len() it)
-            moved = 0
-            with self._statement_watchdog():
-                for _ in cur.iter_rows(n):
-                    moved += 1
-            self._send(b"C", f"MOVE {moved}\x00".encode())
-            return
-        self._send(b"T", self._row_description(cur.fields))
-        sent = 0
-        with self._statement_watchdog():
-            # per-row streaming drain — FETCH ALL over a huge cursor must
-            # never materialize driver-side (review r12)
-            for row in cur.iter_rows(n):
-                self._send(b"D", self._data_row(cur.fields, row))
-                sent += 1
-        self._send(b"C", f"FETCH {sent}\x00".encode())
+            return _command(lambda: f"MOVE {sum(1 for _ in page)}")
+        return cur.fields, page, lambda n: f"FETCH {n}"
 
     # ── HANDOFF: deploy-drain verb (pgwire_handlers.rs:274-282,768) ──────
     #
@@ -1954,7 +1854,7 @@ class _Handler(socketserver.BaseRequestHandler):
             with self.server.lock:
                 self.server.open_txns.discard(id(token))
 
-    def _run_handoff(self) -> None:
+    def _run_handoff(self) -> str:
         import time as _time
 
         if self.server.runner is None and not self.server.streams:
@@ -2033,102 +1933,110 @@ class _Handler(socketserver.BaseRequestHandler):
                 f"HANDOFF drain failed; write admission reopened: {e}"
             ) from e
         rows_after = _manifest_rows(self.server.tables)
-        self._send(b"C", f"HANDOFF {rows_after - rows_before}\x00".encode())
+        return f"HANDOFF {rows_after - rows_before}"
+
+    def _set_activity(self, **fields) -> None:
+        act = self.server.activity.get(getattr(self, "_pid", None))
+        if act is not None:
+            act.update(**fields)
+
+    def _read(self, sql: str, prefetch: bool = False) -> "_RowStream":
+        """The rows of the read `sql`, planned by _plan_read."""
+        df = _plan_read(self.server, self._run(sql))
+        return _RowStream(df, self.server.open_streams, prefetch=prefetch)
+
+    def _statement(self, stmt: str, simple: bool = False):
+        """The one statement path of both protocols: `stmt` checked and
+        dispatched in the reference's do_query order, as (fields, rows,
+        tag). `fields` is None for a statement without a result set;
+        `rows` is lazy, so nothing executes until its first row is pulled
+        (a Describe only plans a read); `tag(n)` is the CommandComplete
+        tag once n rows were sent. `simple`: the statement came in a
+        simple Query, the only protocol that carries COPY's subprotocol
+        and prefetches a read's next partition."""
+        if _is_txn_verb(stmt):
+            # before the failed-block check: COMMIT/ROLLBACK end a failed block
+            return _command(lambda: self._txn_verb(stmt))
+        self._check_txn_failed()
+        self._check_txn_allowed(stmt)
+        if m := _CANCEL_BACKEND_RE.match(stmt):
+            return _CANCEL_FIELDS, self._cancel_backend(int(m.group(1))), lambda n: f"SELECT {n}"
+        if _HANDOFF_RE.match(stmt):
+            return _command(self._run_handoff)
+        self._check_write_admission(stmt)
+        self._check_maintenance_allowed(stmt)
+        if m := _CURSOR_RE.match(stmt):
+            return self._cursor_verb(m)
+        copy_in, copy_out = _COPY_RE.match(stmt), _COPY_OUT_RE.match(stmt)
+        if (copy_in or copy_out) and not simple:
+            # the COPY subprotocol interleaves with the extended message
+            # flow; PG drivers issue COPY via simple Query
+            direction = "FROM STDIN" if copy_in else "TO STDOUT"
+            raise ValueError(
+                f"COPY {direction} is supported only via the simple query protocol"
+            )
+        if copy_in:
+
+            def copy() -> str:
+                # admitted-writer registration spans the whole COPY
+                # subprotocol: a client mid-stream when HANDOFF starts is
+                # part of the tail the drain waits for
+                with self._admitted_write(stmt):
+                    return self._copy_in(copy_in)
+
+            return _command(copy)
+        if copy_out:
+            return _command(lambda: self._copy_out(copy_out))
+        if self.server.runner is not None and _is_storage_stmt(stmt):
+
+            def write() -> str:
+                # storage DDL/DML (CREATE TABLE / INSERT / UPDATE / DELETE
+                # / DROP) rides the slt runner's real write path — the
+                # pgwire INSERT sink of the reference; inside BEGIN…COMMIT
+                # the INSERT stages under the transaction's commit group
+                with self._admitted_write(stmt), self.server.lock:
+                    n_rows = self.server.runner.run_statement(stmt, txn=self._txn)
+                return _command_tag(stmt, n_rows or 0)
+
+            return _command(write)
+        if _NO_RESULTSET.match(stmt):
+
+            def run() -> str:
+                # the shim returns an empty status frame for a command
+                df = self._run(stmt)
+                return _command_tag(stmt, 0 if _is_status_frame(df) else df.count())
+
+            return _command(run)
+        rows = self._read(stmt, prefetch=simple)
+        return rows.fields, rows, lambda n: _command_tag(stmt, n)
 
     def _simple_query(self, sql: str) -> None:
-        from timefusion_spark.pgshim import pg_sql
-
         stmts = _split_statements(sql)
         if not stmts:
             self._send(b"I")  # EmptyQueryResponse
             self._ready()
             return
-        import time as _time
-
         for stmt in stmts:
-            act = self.server.activity.get(getattr(self, "_pid", None))
-            if act is not None:
-                act.update(state="active", query=stmt[:500], query_start=_time.time())
+            self._set_activity(state="active", query=stmt[:500], query_start=time.time())
             try:
-                if self._handle_txn_verb(stmt):
-                    continue
-                self._check_txn_failed()
-                self._check_txn_allowed(stmt)
-                if m := _CANCEL_BACKEND_RE.match(stmt):
-                    # SELECT pg_cancel_backend(pid): cancel that backend's
-                    # Spark jobs via its job tag (the SQL face of the wire
-                    # CancelRequest); false when the pid is unknown, as PG
-                    self._cancel_backend(int(m.group(1)))
-                    continue
-                if _HANDOFF_RE.match(stmt):
-                    self._run_handoff()
-                    continue
-                self._check_write_admission(stmt)
-                self._check_maintenance_allowed(stmt)
-                if m := _CURSOR_RE.match(stmt):
-                    self._cursor_verb(m)
-                    continue
-                if m := _COPY_RE.match(stmt):
-                    # admitted-writer registration spans the whole COPY
-                    # subprotocol: a client mid-stream when HANDOFF starts
-                    # is part of the tail the drain waits for
-                    with self._admitted_write(stmt):
-                        self._copy_in(m)
-                    continue
-                if m := _COPY_OUT_RE.match(stmt):
-                    self._copy_out(m)
-                    continue
-                if self.server.runner is not None and _is_storage_stmt(stmt):
-                    # storage DDL/DML (CREATE TABLE / INSERT / UPDATE /
-                    # DELETE / DROP) rides the slt runner's real write
-                    # path — the pgwire INSERT sink of the reference;
-                    # inside BEGIN…COMMIT the INSERT stages under the
-                    # transaction's commit group
-                    with self._admitted_write(stmt):
-                        with self._statement_watchdog(), self.server.lock:
-                            n_rows = self.server.runner.run_statement(
-                                stmt, txn=self._txn
-                            )
-                    self._send(
-                        b"C", _command_tag(stmt, n_rows or 0).encode() + b"\x00"
-                    )
-                    continue
+                n = 0
                 with self._statement_watchdog():
-                    df = self._run(stmt)
-                    if _NO_RESULTSET.match(stmt):
-                        # command statements complete without a result set
-                        # (the shim returns an empty status frame for them)
-                        n = 0 if _is_status_frame(df) else df.count()
-                        self._send(b"C", _command_tag(stmt, n).encode() + b"\x00")
-                        continue
-                    # a small-input read runs as one stage; a result
-                    # whose plan ends in a single partition runs as
-                    # collect()'s job, any other one partition per job,
-                    # and both reach Python a batch at a time
-                    # (_result_rows): a huge simple-protocol SELECT must
-                    # not materialize driver-side either (the reference
-                    # streams record batches). A runtime error mid-stream
-                    # surfaces as ErrorResponse after the rows already
-                    # sent — exactly PG's behavior.
-                    df = _plan_read(self.server, df)
-                    fields = df.schema.fields
-                    self._send(b"T", self._row_description(fields))
-                    n = 0
-                    # register this drain in the maintenance guard for its
-                    # duration: the lazily-pinned plan references parquet
-                    # files a concurrent VACUUM/OPTIMIZE would delete
-                    # mid-send — the same snapshot-stability contract the
-                    # cursor _RowStreams get (review r10: this path was
-                    # unguarded)
-                    drain = _LiveDrain()
-                    self.server.open_streams.add(drain)
+                    fields, rows, tag = self._statement(stmt, simple=True)
                     try:
-                        for row in _result_rows(df, prefetch=True):
+                        if fields is not None:
+                            self._send(b"T", self._row_description(fields))
+                        # a read's rows reach Python a batch at a time
+                        # (_RowStream): a huge SELECT never materializes
+                        # driver-side (the reference streams record
+                        # batches). A runtime error mid-stream surfaces as
+                        # ErrorResponse after the rows already sent —
+                        # exactly PG's behavior.
+                        for row in rows:
                             self._send(b"D", self._data_row(fields, row))
                             n += 1
                     finally:
-                        drain.done = True
-                self._send(b"C", _command_tag(stmt, n).encode() + b"\x00")
+                        _release(rows)
+                self._send(b"C", tag(n).encode() + b"\x00")
             except Exception as e:  # noqa: BLE001 — every error goes on the wire
                 msg, code = _wire_error(e)
                 self._send_error(msg, code=code)
@@ -2139,13 +2047,34 @@ class _Handler(socketserver.BaseRequestHandler):
                     self._txn.failed = True
                 break  # PG aborts the rest of a multi-statement on error
             finally:
-                if act is not None:
-                    act.update(state="idle", query_start=None)
+                self._set_activity(state="idle", query_start=None)
         self._ready()
 
 
 def _is_status_frame(df) -> bool:
     return [f.name for f in df.schema.fields] == ["status"] and df.isEmpty()
+
+
+_CANCEL_FIELDS = [T.StructField("pg_cancel_backend", T.BooleanType())]
+
+
+def _command(run):
+    """A statement without a result set, as _Handler._statement returns
+    it: `run()` executes it when its (empty) rows are pulled and returns
+    its CommandComplete tag."""
+    tags: list[str] = []
+
+    def rows():
+        tags.append(run())
+        yield from ()
+
+    return None, rows(), lambda n: tags[0]
+
+
+def _release(rows) -> None:
+    """Close a result's rows now if they hold a drain (_RowStream.close)."""
+    if isinstance(rows, _RowStream):
+        rows.close()
 
 
 def _plan_read(server, df):
@@ -2166,13 +2095,12 @@ def _plan_read(server, df):
     The rebind hands the sibling `df`'s analyzed plan (commands already
     executed), so its views, UDFs and time zone stay resolved as on
     `server.spark` and nothing is registered on the sibling."""
-    jvm = server.spark._jvm
     plan = df._jdf.queryExecution().commandExecuted()
-    jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+    jdf = server.dataset.ofRows(
         server.sibling._jsparkSession,
         _coalesce_scans(plan, server.coalesce) or plan,
     )
-    limit = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+    limit = server.java_utils.byteStringAsBytes(
         server.spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
     )
     if _input_bytes(jdf.queryExecution().executedPlan(), limit) > limit:
@@ -2207,6 +2135,7 @@ def _input_bytes(plan, limit: int) -> int:
     scans); counting stops once the sum passes `limit`. A file scan
     counts its partition-pruned files (a path-based relation is pruned
     only in the scan; its optimized-plan leaf reports the whole table),
+    a reused subquery nothing (its plan is counted where it is planned),
     another leaf its logical estimate, and a leaf without one counts as
     more than `limit`."""
     subs = plan.subqueriesAll()
@@ -2215,9 +2144,10 @@ def _input_bytes(plan, limit: int) -> int:
         leaves = p.collectLeaves()
         for i in range(leaves.size()):
             leaf = leaves.apply(i)
-            if leaf.getClass().getSimpleName() == "FileSourceScanExec":
+            kind = leaf.getClass().getSimpleName()
+            if kind == "FileSourceScanExec":
                 size += leaf.selectedPartitions().totalFileSize()
-            else:
+            elif kind != "ReusedSubqueryExec":
                 link = leaf.logicalLink()
                 if not link.isDefined():
                     return limit + 1
@@ -2228,8 +2158,8 @@ def _input_bytes(plan, limit: int) -> int:
 
 
 def _result_rows(df, prefetch: bool = False):
-    """The rows of `df` for a one-pass send (simple query, COPY TO
-    STDOUT), read as the send consumes them.
+    """The rows of `df`, read as the caller consumes them (the drain of
+    every _RowStream).
 
     A plan that ends in a single partition runs as collect()'s one job:
     no result job and SinglePartition exchange of its own, and
@@ -2239,8 +2169,8 @@ def _result_rows(df, prefetch: bool = False):
     as toLocalIterator's job for that partition would. Any other plan
     drains through toLocalIterator, one partition per job; `prefetch`
     runs the next partition's job behind the send of the current one and
-    so holds two partitions (the simple-query send sets it, the bulk
-    COPY export does not)."""
+    so holds two partitions (the simple-query send sets it; COPY,
+    portals and cursors do not)."""
     part = df._jdf.queryExecution().executedPlan().outputPartitioning()
     if part.numPartitions() == 1:
         return _load_from_socket(
@@ -2249,105 +2179,51 @@ def _result_rows(df, prefetch: bool = False):
     return df.toLocalIterator(prefetchPartitions=prefetch)
 
 
-class _LiveDrain:
-    """Sentinel registered in the server's open_streams WeakSet for the
-    duration of a simple-protocol streaming drain — makes the drain
-    visible to _check_maintenance_allowed exactly like a cursor/portal
-    _RowStream (the pinned plan references files a maintenance rewrite
-    would delete mid-send)."""
-
-    __slots__ = ("done", "__weakref__")
-
-    def __init__(self) -> None:
-        self.done = False
-
-
 class _RowStream:
-    """Incremental driver-side drain of a result DataFrame for the
-    fetch-paged flows (extended-protocol portals, DECLARE…FETCH cursors).
-    The reference's pgwire layer streams encode_dataframe record batches
-    over the wire (pgwire_handlers.rs); the Spark analog is
-    toLocalIterator, which computes one partition at a time on demand — a
-    cursor over a 100×-scale table holds at most the current partition
-    plus one peeked row driver-side, never the whole result (r8 verdict
-    ask #1; the old path did df.collect() at DECLARE/first-Execute).
-    Paging needs the lazy iterator, so these flows keep it even for a
-    single-partition result. The one-pass sends (simple query, COPY TO
-    STDOUT) use _result_rows instead: there a single-partition result
-    runs as collect()'s one job and its rows are still read lazily, one
-    pickled batch at a time, so the bound stays one partition.
+    """The one drain of a result DataFrame, for every site that sends
+    one: the simple-query send, COPY TO STDOUT (text and binary), portal
+    Execute and DECLARE cursors. The reference's pgwire layer streams
+    encode_dataframe record batches over the wire (pgwire_handlers.rs);
+    here the rows come through _result_rows, which starts on the first
+    row pulled, so opening a stream (Describe, DECLARE) runs no job, and
+    a cursor over a huge result holds one partition driver-side, never
+    the whole result.
 
-    `pulled` counts rows drawn from Spark — tests pin the no-full-
-    materialization contract on it."""
+    For its lifetime the stream sits in the server's `open_streams`
+    registry (a WeakSet); while it is open and undrained, VACUUM /
+    OPTIMIZE are declined, since its lazily pinned plan references
+    parquet files a maintenance rewrite would delete mid-FETCH (PG
+    cursors are snapshot-stable; see _check_maintenance_allowed)."""
 
-    def __init__(self, df, registry=None):
+    def __init__(self, df, open_streams, prefetch: bool = False):
         self.fields = df.schema.fields
-        self._it = df.toLocalIterator()
-        self._peek = None
+        self._df = df
+        self._prefetch = prefetch
+        self._it = None
         self.done = False
-        self.pulled = 0
-        # live-stream registry (a WeakSet on the server): while this
-        # stream is open and undrained, VACUUM/OPTIMIZE are declined —
-        # the lazily-pinned plan references parquet files a maintenance
-        # rewrite would delete mid-FETCH (PG cursors are snapshot-stable
-        # for their lifetime; see _check_maintenance_allowed)
-        if registry is not None:
-            registry.add(self)
+        open_streams.add(self)
 
-    def _next(self):
-        if self._peek is not None:
-            row, self._peek = self._peek, None
-            return row
-        row = next(self._it)  # may raise StopIteration
-        self.pulled += 1
-        return row
+    def __iter__(self):
+        return self
 
-    def take(self, n: int | None) -> list:
-        """Up to n rows (None = all remaining)."""
-        out: list = []
+    def __next__(self):
         if self.done:
-            return out
+            raise StopIteration
+        if self._it is None:
+            self._it = _result_rows(self._df, prefetch=self._prefetch)
         try:
-            while n is None or len(out) < n:
-                out.append(self._next())
+            return next(self._it)
         except StopIteration:
-            self.done = True
-        return out
-
-    def iter_rows(self, n: int | None = None):
-        """Yield up to n rows (None = all remaining) ONE AT A TIME — the
-        unbounded drains (FETCH ALL, Execute with no row limit) used
-        take(None), which accumulated the whole result driver-side and
-        defeated this class's no-materialization contract (review r12)."""
-        if self.done:
-            return
-        sent = 0
-        try:
-            while n is None or sent < n:
-                yield self._next()
-                sent += 1
-        except StopIteration:
-            self.done = True
-
-    def exhausted(self) -> bool:
-        """True iff no rows remain (peeks at most one row ahead, so the
-        portal-suspend decision matches the collect-based behavior:
-        CommandComplete exactly when the source is drained)."""
-        if self.done:
-            return True
-        if self._peek is None:
-            try:
-                self._peek = self._next()
-            except StopIteration:
-                self.done = True
-        return self.done
+            self.close()
+            raise
 
     def close(self) -> None:
-        """Release the underlying local-iterator connection promptly
-        (CLOSE portal/cursor on a long-lived session shouldn't wait for
-        GC to free the JVM-side serving thread)."""
+        """Release the drain now (a local iterator's JVM serving thread,
+        a collect's result socket): CLOSE of a portal or cursor on a
+        long-lived session shouldn't wait for GC."""
         self.done = True
-        close_fn = getattr(self._it, "close", None)
+        it, self._it = self._it, None
+        close_fn = getattr(it, "close", None)
         if close_fn is not None:
             try:
                 close_fn()
@@ -2381,10 +2257,10 @@ class _TCPServer(socketserver.ThreadingMixIn, socketserver.TCPServer):
         # streaming-ingest queries HANDOFF must settle
         self.open_txns: set[int] = set()
         self.streams: list = []
-        # live cursor/portal result streams (weak: drained-and-dropped
-        # streams vanish on GC) — VACUUM/OPTIMIZE are declined while any
-        # is open, since their pinned plans reference on-disk files a
-        # maintenance rewrite would delete mid-FETCH
+        # live result streams, each _RowStream for its lifetime (weak:
+        # dropped streams vanish on GC) — VACUUM/OPTIMIZE are declined
+        # while any is open and undrained, since their pinned plans
+        # reference on-disk files a maintenance rewrite would delete
         import weakref
 
         self.open_streams = weakref.WeakSet()
@@ -2942,9 +2818,13 @@ class PgWireServer:
         sibling.conf.set("spark.sql.adaptive.enabled", "false")
         sibling.conf.set("spark.sql.shuffle.partitions", "1")
         self._server.sibling = sibling
-        # the logical coalesce _plan_read puts over each scan, resolved
-        # once: each package step of a py4j class lookup is a round trip
-        self._server.coalesce = spark._jvm.org.apache.spark.sql.catalyst.plans.logical.Repartition
+        # the JVM classes _plan_read uses (the logical coalesce it puts
+        # over each scan, the rebind, the size parse), resolved once: each
+        # package step of a py4j class lookup is a round trip
+        jvm = spark._jvm
+        self._server.coalesce = jvm.org.apache.spark.sql.catalyst.plans.logical.Repartition
+        self._server.dataset = jvm.org.apache.spark.sql.classic.Dataset
+        self._server.java_utils = jvm.org.apache.spark.network.util.JavaUtils
         # cleartext-password auth (pgwire_handlers.rs AuthConfig): None =
         # trust — the embedded/test posture; the CLI front door REQUIRES a
         # password unless --insecure-auth explicitly opts out
