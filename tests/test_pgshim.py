@@ -73,10 +73,45 @@ from timefusion_spark.pgshim import pg_sql, pg_to_spark_sql
             "SELECT '->> not an op', x FROM t -- y::int8",
             "SELECT '->> not an op', x FROM t -- y::int8",
         ),
+        # an apostrophe inside a quoted identifier is not a literal's
+        # quote: the call rewrites after it still run
+        (
+            "SELECT 1 AS \"it's\", string_to_array(s, ',') FROM t",
+            "SELECT 1 AS `it's`, CASE WHEN (s) = '' THEN array() WHEN (',') = ''"
+            " THEN array(s) ELSE split(s, concat('\\\\Q', ',', '\\\\E'), -1) END FROM t",
+        ),
+        (
+            "SELECT 1 AS \"it's\", EXTRACT(EPOCH FROM ts) FROM t",
+            "SELECT 1 AS `it's`, (cast(unix_micros(ts) AS double) / 1000000.0) FROM t",
+        ),
+        # DISTINCT ON keys that are quoted identifiers holding `)` and `,`
+        (
+            'SELECT DISTINCT ON ("a)", "b,c") "a)", "b,c", d FROM t ORDER BY "a)", "b,c", d',
+            "SELECT * EXCEPT (__rn) FROM (SELECT `a)`, `b,c`, d, row_number() OVER"
+            " (PARTITION BY `a)`, `b,c` ORDER BY d) AS __rn FROM t) WHERE __rn = 1",
+        ),
     ],
 )
 def test_translation(pg, expected):
     assert pg_to_spark_sql(pg) == expected
+
+
+@pytest.mark.parametrize(
+    "text,close,args",
+    [
+        ('f("x)", 1)', 9, ['"x)"', " 1"]),
+        ("f(`a,b`, 1)", 10, ["`a,b`", " 1"]),
+        ("f(/* ) */ 1)", 11, ["/* ) */ 1"]),
+        ("f($$a, b$$)", 10, ["$$a, b$$"]),
+    ],
+)
+def test_region_scan(text, close, args):
+    """A bracket or separator inside a region is text: the call closes at
+    its real ')' and splits only at its real commas."""
+    from timefusion_spark.sqltext import close_paren, split_top
+
+    assert close_paren(text, 1) == close
+    assert split_top(text[2:close]) == args
 
 
 def test_end_to_end_execution(spark):

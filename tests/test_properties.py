@@ -282,6 +282,79 @@ class TestWireParsingProperties:
         sql = f"SELECT {decoy}\n {exprs}"
         assert _param_indices(sql) == set(range(1, n + 1))
 
+    @given(
+        st.lists(
+            st.one_of(
+                st.tuples(st.just("code"), st.text(alphabet="ab (),;", max_size=6)),
+                st.tuples(
+                    st.sampled_from(["'", '"', "`", "$$", "$t$", "--", "/*", "/*/*"]),
+                    st.text(alphabet="ab (),;'\"`", max_size=8),
+                ),
+            ),
+            max_size=8,
+        )
+    )
+    @settings(max_examples=300, deadline=None)
+    def test_region_scans_never_cut_inside_a_region(self, parts):
+        """Text interleaving code with every sqltext region kind, each
+        region holding ( ) , ; ' and ": split_top, close_paren and
+        outside_regions act only on code, as an independent model of the
+        code characters says, and the statement splitter is split_top
+        on ';' with comments blanked."""
+        from timefusion_spark.server import _split_statements
+        from timefusion_spark.sqltext import close_paren, outside_regions, split_top, walk
+
+        sql, blank, spans, code = "", "", [], []  # code: (pos in sql, pos in blank)
+        for kind, body in parts:
+            if sql:
+                sql, blank = sql + " ", blank + " "
+            if kind == "code":
+                code += [(len(sql) + k, len(blank) + k) for k in range(len(body))]
+                sql, blank = sql + body, blank + body
+                continue
+            if kind in ("'", '"', "`"):
+                region = kind + body.replace(kind, kind * 2) + kind
+            elif kind.startswith("$"):
+                region = kind + body + kind
+            elif kind == "--":
+                region = "--" + body + "\n"
+            elif kind == "/*":
+                region = "/*" + body + "*/"
+            else:  # PG block comments nest
+                region = "/*" + body + "/*" + body + "*/" + body + "*/"
+            spans.append((len(sql), len(sql) + len(region)))
+            sql += region
+            blank += " " if kind.startswith(("--", "/*")) else region
+
+        assert [(i, j) for i, j, _, k in walk(sql) if k in ("quote", "comment")] == spans
+
+        depth, cuts = 0, []
+        for k, b in code:
+            depth += {"(": 1, ")": -1}.get(sql[k], 0)
+            if sql[k] == ";" and depth <= 0:
+                cuts.append((k, b))
+        edges = [(-1, -1)] + cuts + [(len(sql), len(blank))]
+        assert split_top(sql, ";") == [
+            sql[a + 1 : z] for (a, _), (z, _) in zip(edges, edges[1:])
+        ]
+        stmts = [blank[a + 1 : z].strip() for (_, a), (_, z) in zip(edges, edges[1:])]
+        assert _split_statements(sql) == [s for s in stmts if s]
+
+        opens = [n for n, (k, _) in enumerate(code) if sql[k] == "("]
+        for n in opens:
+            depth, want = 0, None
+            for k, _ in code[n:]:
+                depth += {"(": 1, ")": -1}.get(sql[k], 0)
+                if depth == 0:
+                    want = k
+                    break
+            assert close_paren(sql, code[n][0]) == want
+
+        up = outside_regions(sql, str.upper)
+        assert len(up) == len(sql)
+        assert all(up[i:j] == sql[i:j] for i, j in spans)
+        assert all(up[k] == sql[k].upper() for k, _ in code)
+
 
 class TestRewriteIdents:
     """Property tests for the transaction view-overlay identifier rewrite

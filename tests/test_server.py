@@ -315,6 +315,11 @@ class TestSimpleQuery:
         assert "/* t too */" in out
         assert "= 't'" in out
 
+    def test_rewrite_idents_passes_non_ascii_letters(self):
+        from timefusion_spark.server import _rewrite_idents
+
+        assert _rewrite_idents("SELECT é, \"t\" FROM t", {"t": "v"}) == "SELECT é, \"t\" FROM v"
+
     def _ext(self, c, *messages):
         """Send extended-protocol messages then Sync; return all messages
         up to ReadyForQuery."""
@@ -4110,6 +4115,27 @@ class TestProtocolParity:
             c.close()
         finally:
             srv.stop()
+
+    @pytest.mark.parametrize(
+        "sql,tags",
+        [
+            ("/* app */ BEGIN", ["BEGIN"]),
+            ("/* app */ SELECT pg_cancel_backend(999999)", ["SELECT 1"]),
+            ("-- c\nSELECT 1 AS a", ["SELECT 1"]),
+        ],
+        ids=["block_comment_begin", "block_comment_cancel", "line_comment_read"],
+    )
+    def test_comments_strip_alike(self, client, sql, tags):
+        try:
+            assert self._both(client, sql)[0] == tags
+        finally:
+            client.query("ROLLBACK")
+
+    def test_parse_holds_one_statement(self, client):
+        parse = b"\x00SELECT 1; SELECT 2\x00" + struct.pack("!h", 0)
+        errs = [p for t, p in _ext_msgs(client, (b"P", parse)) if t == b"E"]
+        assert len(errs) == 1 and b"C42601\x00" in errs[0], errs
+        assert rows_of(client.query("SELECT 3 AS x")) == [["3"]]
 
     def test_read_is_built_once_per_portal(self, server, client, monkeypatch):
         import timefusion_spark.pgshim as pgshim

@@ -4,8 +4,10 @@ The reference accepts PostgreSQL syntax over pgwire and rewrites the
 PG-isms before planning (synonyms pgwire_handlers.rs:654; `->`/`->>`
 arrow chains functions.rs:94-254; `&&` overlap functions.rs:104-114;
 `= ANY` membership; array literals optimizers/pg_array_literal_rewriter.rs;
-`::` casts). This shim is the same layer for Spark: a token-level (quote-
-and comment-aware) translator producing `spark.sql`-ready text. No
+`::` casts). This shim is the same layer for Spark: a token-level
+translator producing `spark.sql`-ready text. Quoted text and comments
+are never rewritten: every scan here takes its regions (literals,
+quoted identifiers, dollar bodies, comments) from `sqltext`. No
 Catalyst rule needed — the translation is purely syntactic.
 
 Supported rewrites:
@@ -27,6 +29,8 @@ debuggable against the translated text (returned verbatim).
 from __future__ import annotations
 
 import re
+
+from timefusion_spark import sqltext
 
 # PG type name → Spark SQL type (for `::` casts and array element types).
 PG_TYPE_MAP: dict[str, str] = {
@@ -59,18 +63,16 @@ PG_TYPE_MAP: dict[str, str] = {
     "uuid": "STRING",
 }
 
+# every token but sqltext's regions, which _tokenize takes whole (a `-`
+# or `/` that opens a comment is not an operator)
 _TOKEN_RE = re.compile(
     r"""
-      (?P<string>'(?:''|[^'])*')
-    | (?P<qident>"(?:""|[^"])*")
-    | (?P<lcomment>--[^\n]*)
-    | (?P<bcomment>/\*.*?\*/)
-    | (?P<number>\d+(?:\.\d*)?(?:[eE][+-]?\d+)?)
+      (?P<number>\d+(?:\.\d*)?(?:[eE][+-]?\d+)?)
     | (?P<word>[A-Za-z_][A-Za-z0-9_]*)
-    | (?P<op>->>|->|::|~\*|&&|<=|>=|<>|!=|=|~|[(),\[\].*+\-/<>;])
+    | (?P<op>->>|->|::|~\*|&&|<=|>=|<>|!=|=|~|[(),\[\].*+<>;]|-(?!-)|/(?!\*))
     | (?P<ws>\s+)
 """,
-    re.VERBOSE | re.DOTALL,
+    re.VERBOSE,
 )
 
 
@@ -87,13 +89,13 @@ _SQL_KEYWORDS = {
 def _tokenize(sql: str) -> list[str]:
     out, i = [], 0
     while i < len(sql):
-        m = _TOKEN_RE.match(sql, i)
-        if not m:
-            out.append(sql[i])
-            i += 1
-            continue
-        out.append(m.group(0))
-        i = m.end()
+        if m := _TOKEN_RE.match(sql, i):
+            j = m.end()
+        else:
+            reg = sqltext.skip_region(sql, i)
+            j = reg[0] if reg else i + 1
+        out.append(sql[i:j])
+        i = j
     return out
 
 
@@ -272,7 +274,7 @@ def _variant_producing(x: str) -> str | None:
         return f"({x})" if m.group(1).lower() in _active_variant_cols() else None
     m = re.match(r"(?is)^variant_get\s*\((.*)\)$", x)
     if m:
-        args = _split_args(m.group(1))
+        args = [a.strip() for a in sqltext.split_top(m.group(1))]
         if len(args) == 2 and args[1].startswith("'"):
             inner = _variant_producing(args[0]) or f"try_parse_json({args[0]})"
             return f"variant_get({inner}, '{_variant_path(args[1])}', 'variant')"
@@ -310,62 +312,53 @@ _SUBSCRIPT_STOPWORDS = frozenset(
 )
 
 
+_SUBSCRIPT_RE = re.compile(r"\[\s*(\d+)\s*\]")
+
+
 def _subscripts_to_element_at(sql: str) -> str:
     """Rewrite PG 1-based integer subscripts to element_at: both
-    `fn(...)[n]` and bare `col[n]`, outside string literals. One forward
-    scan with an open-paren stack (literals are consumed atomically, so
+    `fn(...)[n]` and bare `col[n]`, outside sqltext's regions. One
+    forward walk with an open-paren stack (regions are consumed whole, so
     parens inside them never enter the balance — review r12). A
     keyword before '(' is a parenthesized expression, not a call name,
     and stays outside the wrapped base."""
     open_stack: list[int] = []
     last_call: tuple[int, int] | None = None  # (open_pos, one-past-')') of last close
-    out = ""
-    i, n = 0, len(sql)
-    while i < n:
+    out, skip = "", 0
+    for i, j, _, kind in sqltext.walk(sql):
+        if i < skip:
+            continue  # inside a subscript already rewritten
         ch = sql[i]
-        if ch == "'":
-            m = re.match(r"'(?:''|[^'])*'", sql[i:])
-            frag = m.group(0) if m else ch
-            out += frag
-            i += len(frag)
-            continue
-        if ch == "(":
+        if kind == "open" and ch == "(":
             open_stack.append(len(out))
-        elif ch == ")":
-            if open_stack:
-                last_call = (open_stack.pop(), len(out) + 1)
-        elif ch == "[":
-            m = re.match(r"\[\s*(\d+)\s*\]", sql[i:])
-            if m:
-                stripped = out.rstrip()
-                start = None
-                if (
-                    stripped.endswith(")")
-                    and last_call
-                    and last_call[1] == len(stripped)
-                ):
-                    start = last_call[0]
-                    k = re.search(r"[A-Za-z_][\w\.]*\s*$", out[:start])
-                    if k and k.group(0).strip().lower() not in _SUBSCRIPT_STOPWORDS:
-                        start = k.start()
-                else:
-                    # match on the rstripped text: PG allows whitespace
-                    # between the column and '[' ("tags [1]"), which the
-                    # un-rstripped anchor silently missed (review r12)
-                    k = re.search(r"[A-Za-z_][\w\.]*\s*$", out)
-                    if (
-                        k
-                        and k.group(0).strip().lower() not in _SUBSCRIPT_STOPWORDS
-                    ):
-                        start = k.start()
-                if start is not None:
-                    base = out[start:].rstrip()
-                    out = f"{out[:start]}element_at({base}, {m.group(1)})"
-                    last_call = (start, len(out))
-                    i += len(m.group(0))
-                    continue
-        out += ch
-        i += 1
+        elif kind == "close" and ch == ")" and open_stack:
+            last_call = (open_stack.pop(), len(out) + 1)
+        elif kind == "open" and (m := _SUBSCRIPT_RE.match(sql, i)):
+            stripped = out.rstrip()
+            start = None
+            if (
+                stripped.endswith(")")
+                and last_call
+                and last_call[1] == len(stripped)
+            ):
+                start = last_call[0]
+                k = re.search(r"[A-Za-z_][\w\.]*\s*$", out[:start])
+                if k and k.group(0).strip().lower() not in _SUBSCRIPT_STOPWORDS:
+                    start = k.start()
+            else:
+                # match on the rstripped text: PG allows whitespace
+                # between the column and '[' ("tags [1]"), which the
+                # un-rstripped anchor silently missed (review r12)
+                k = re.search(r"[A-Za-z_][\w\.]*\s*$", out)
+                if k and k.group(0).strip().lower() not in _SUBSCRIPT_STOPWORDS:
+                    start = k.start()
+            if start is not None:
+                base = out[start:].rstrip()
+                out = f"{out[:start]}element_at({base}, {m.group(1)})"
+                last_call = (start, len(out))
+                skip = m.end()
+                continue
+        out += sql[i:j]
     return out
 
 
@@ -711,70 +704,27 @@ def _translate_casts(toks: list[str]) -> list[str]:
     return out
 
 
-def _split_args(argtext: str) -> list[str]:
-    """Split a function-call argument list at top-level commas
-    (paren/bracket/quote aware)."""
-    args, depth, buf, i = [], 0, [], 0
-    while i < len(argtext):
-        ch = argtext[i]
-        if ch == "'":
-            m = re.match(r"'(?:''|[^'])*'", argtext[i:])
-            frag = m.group(0) if m else ch
-            buf.append(frag)
-            i += len(frag)
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            args.append("".join(buf).strip())
-            buf = []
-            i += 1
-            continue
-        buf.append(ch)
-        i += 1
-    tail = "".join(buf).strip()
-    if tail:
-        args.append(tail)
-    return args
-
-
 def _rewrite_calls(sql: str, name: str, fn) -> str:
-    """Rewrite every call of `name(...)` via fn(args list) → replacement
-    text (or None to leave unchanged). Handles nesting by repeating from the
-    innermost match until fixpoint."""
+    """Rewrite every call of `name(...)` outside sqltext's regions via
+    fn(stripped args list) → replacement text (or None to leave it).
+    Handles nesting by repeating from the first match until fixpoint."""
     pat = re.compile(rf"\b{name}\s*\(", re.IGNORECASE)
     changed = True
     while changed:
         changed = False
-        for m in pat.finditer(sql):
-            # Skip if inside a string literal (count quotes before).
-            if sql.count("'", 0, m.start()) % 2 == 1:
-                continue
-            depth, i = 0, m.end() - 1
-            while i < len(sql):
-                if sql[i] == "'":
-                    mm = re.match(r"'(?:''|[^'])*'", sql[i:])
-                    i += len(mm.group(0)) if mm else 1
-                    continue
-                if sql[i] == "(":
-                    depth += 1
-                elif sql[i] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                i += 1
-            if depth != 0:
+        for m, _ in sqltext.finditer(pat, sql):
+            close = sqltext.close_paren(sql, m.end() - 1)
+            if close is None:
                 continue
             # Nested same-name calls converge without inner-first ordering:
             # the replacement embeds inner text verbatim and the loop
             # re-scans until no 2-arg/user-form occurrence remains.
-            inner = sql[m.end() : i]
-            repl = fn(_split_args(inner))
+            inner = sql[m.end() : close]
+            args = [a.strip() for a in sqltext.split_top(inner)] if inner.strip() else []
+            repl = fn(args)
             if repl is None:
                 continue
-            sql = sql[: m.start()] + repl + sql[i + 1 :]
+            sql = sql[: m.start()] + repl + sql[close + 1 :]
             changed = True
             break
     return sql
@@ -1147,24 +1097,6 @@ def _translate_fn_calls(sql: str) -> str:
     return sql.replace("__TOJSON__", "to_json").replace("__ISVNULL__", "is_variant_null")
 
 
-def _find_close_paren(sql: str, open_idx: int) -> int | None:
-    """Index of the ')' balancing the '(' at open_idx (quote-aware)."""
-    depth, j = 0, open_idx
-    while j < len(sql):
-        if sql[j] == "'":
-            mm = re.match(r"'(?:''|[^'])*'", sql[j:])
-            j += len(mm.group(0)) if mm else 1
-            continue
-        if sql[j] == "(":
-            depth += 1
-        elif sql[j] == ")":
-            depth -= 1
-            if depth == 0:
-                return j
-        j += 1
-    return None
-
-
 def _translate_select_list_unnest(sql: str) -> str:
     """``SELECT unnest(e1) AS c1, unnest(e2) AS c2, …`` (no FROM) →
     zipped-rows subquery. This is the reference's PRODUCTION enrichment
@@ -1178,7 +1110,7 @@ def _translate_select_list_unnest(sql: str) -> str:
     pat = re.compile(r"\bSELECT\s+", re.IGNORECASE)
     pos = 0
     while True:
-        m = pat.search(sql, pos)
+        m = sqltext.search(pat, sql, pos)
         if m is None:
             return sql
         j = m.end()
@@ -1189,7 +1121,7 @@ def _translate_select_list_unnest(sql: str) -> str:
             if not mu:
                 ok = False
                 break
-            close = _find_close_paren(sql, j + mu.end() - 1)
+            close = sqltext.close_paren(sql, j + mu.end() - 1)
             if close is None:
                 ok = False
                 break
@@ -1218,33 +1150,21 @@ def _translate_select_list_unnest(sql: str) -> str:
             pos = m.end()
 
 
+_CLAUSE_KW_RE = re.compile(r"\b(SELECT|FROM|WHERE|GROUP|ORDER|HAVING)\b", re.IGNORECASE)
+
+
 def _last_clause_keyword(prev: str) -> str | None:
     """The last SELECT/FROM/WHERE/GROUP/ORDER/HAVING keyword at the SAME
-    paren depth as the end of ``prev`` (quote-aware) — decides whether a
-    trailing comma belongs to a select list or a FROM list."""
-    kw_re = re.compile(r"\b(SELECT|FROM|WHERE|GROUP|ORDER|HAVING)\b", re.IGNORECASE)
-    depth, j, marks = 0, 0, []
-    while j < len(prev):
-        ch = prev[j]
-        if ch == "'":
-            mm = re.match(r"'(?:''|[^'])*'", prev[j:])
-            j += len(mm.group(0)) if mm else 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        else:
-            km = kw_re.match(prev, j)
-            if km:
-                marks.append((depth, km.group(1).upper()))
-                j = km.end()
-                continue
-        j += 1
-    for d, kw in reversed(marks):
-        if d == depth:
-            return kw
-    return None
+    paren depth as the end of ``prev`` (which ends in code: the caller's
+    trailing comma) — decides whether that comma belongs to a select
+    list or a FROM list."""
+    last: dict[int, str] = {}
+    depth = 0
+    for i, j, depth, kind in sqltext.walk(prev):
+        if kind == "code":
+            for km in _CLAUSE_KW_RE.finditer(prev, i, j):
+                last[depth] = km.group(1).upper()
+    return last.get(depth)
 
 
 def _translate_unnest(sql: str) -> str:
@@ -1262,7 +1182,7 @@ def _translate_unnest(sql: str) -> str:
     i = 0
     pat = re.compile(r"\bunnest\s*\(", re.IGNORECASE)
     while True:
-        m = pat.search(sql, i)
+        m = sqltext.search(pat, sql, i)
         if m is None:
             out.append(sql[i:])
             break
@@ -1281,25 +1201,12 @@ def _translate_unnest(sql: str) -> str:
             out.append(sql[i : m.end()])
             i = m.end()
             continue
-        # balanced-paren arg extraction (quote-aware)
-        depth, j = 0, m.end() - 1
-        while j < len(sql):
-            if sql[j] == "'":
-                mm = re.match(r"'(?:''|[^'])*'", sql[j:])
-                j += len(mm.group(0)) if mm else 1
-                continue
-            if sql[j] == "(":
-                depth += 1
-            elif sql[j] == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            j += 1
-        if depth != 0:
+        j = sqltext.close_paren(sql, m.end() - 1)
+        if j is None:
             out.append(sql[i : m.end()])
             i = m.end()
             continue
-        args = _split_args(sql[m.end() : j])
+        args = [a.strip() for a in sqltext.split_top(sql[m.end() : j])]
         repl = f"(SELECT inline(arrays_zip({', '.join(args)})))"
         tail = sql[j + 1 :]
         am = re.match(r"\s*(?:AS\s+)?([A-Za-z_]\w*)\s*(\()?", tail, re.IGNORECASE)
@@ -1319,51 +1226,39 @@ def _translate_unnest(sql: str) -> str:
     return "".join(out)
 
 
+_DISTINCT_ON_RE = re.compile(r"(?is)\bSELECT\s+DISTINCT\s+ON\s*\(")
+_ORDER_BY_RE = re.compile(r"(?is)\bORDER\s+BY\s+")
+_FROM_RE = re.compile(r"(?is)\bFROM\b")
+
+
+def _top_search(pattern: re.Pattern, sql: str) -> re.Match | None:
+    """The first match of `pattern` in code outside every bracket."""
+    return next((m for m, depth in sqltext.finditer(pattern, sql) if depth == 0), None)
+
+
 def _translate_distinct_on(sql: str) -> str:
     """PG `SELECT DISTINCT ON (keys) select_list ... ORDER BY o...` →
     row_number window rewrite (keep the first row per key group under the
     ORDER BY, which is PG's semantic)."""
-    m = re.search(r"(?is)\bSELECT\s+DISTINCT\s+ON\s*\(", sql)
-    if not m:
+    m = sqltext.search(_DISTINCT_ON_RE, sql)
+    close = sqltext.close_paren(sql, m.end() - 1) if m else None
+    if close is None:
         return sql
-    # keys list — balanced parens
-    depth, i = 0, m.end() - 1
-    while i < len(sql):
-        if sql[i] == "(":
-            depth += 1
-        elif sql[i] == ")":
-            depth -= 1
-            if depth == 0:
-                break
-        i += 1
-    keys = [k.strip() for k in _split_args(sql[m.end() : i])]
-    rest = sql[i + 1 :]
+    keys = [k.strip() for k in sqltext.split_top(sql[m.end() : close])]
+    rest = sql[close + 1 :]
     # Bound the statement scope: it ends where paren depth goes negative
     # (the ')' closing an enclosing subquery) or at end of text.
-    depth, j = 0, 0
-    while j < len(rest):
-        ch = rest[j]
-        if ch == "'":
-            mm = re.match(r"'(?:''|[^'])*'", rest[j:])
-            j += len(mm.group(0)) if mm else 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth < 0:
-                break
-        j += 1
-    rest, trailer = rest[:j], rest[j:]
-    om = re.search(r"(?is)\bORDER\s+BY\s+", rest)
+    end = next((i for i, _, depth, _ in sqltext.walk(rest) if depth < 0), len(rest))
+    rest, trailer = rest[:end], rest[end:]
+    om = _top_search(_ORDER_BY_RE, rest)
     if not om:
         return sql
     body, order_text = rest[: om.start()], rest[om.end() :]
-    fm = re.search(r"(?is)\bFROM\b", body)
+    fm = _top_search(_FROM_RE, body)
     if not fm:
         return sql
     select_list, from_part = body[: fm.start()].strip(), body[fm.end() :].strip()
-    order_items = _split_args(order_text)
+    order_items = [o.strip() for o in sqltext.split_top(order_text)]
     # window order = ORDER BY items minus the leading DISTINCT ON keys
     tail = [
         o
@@ -2235,12 +2130,10 @@ def _apply_text_match_statement(spark, stripped: str, tables):
     Declines: joins / derived sources, set ops, locking clauses, and a
     TOP-LEVEL OR in the WHERE (routing one AND-conjunct under an OR
     would change precedence — VERDICT r10 #1)."""
-    from timefusion_spark import slt as _slt
-
     m = re.match(r"(?is)^SELECT\s+(.+)$", stripped)
     if not m:
         return None
-    parts = _slt._split_top_kw(m.group(1), "FROM")
+    parts = sqltext.split_top(m.group(1), "FROM")
     if len(parts) != 2:
         return None  # no table, or multiple top-level FROMs (set ops)
     proj, after = parts[0].strip(), parts[1].strip()
@@ -2267,13 +2160,13 @@ def _apply_text_match_statement(spark, stripped: str, tables):
     # unresolved relation where the scan path serves it; decline
     if re.search(r"(?i)\btable_changes\s*\(", stripped):
         return None
-    # _split_top (not _split_top_kw): the keyword may sit flush against
-    # ')' or a closing quote — `…)UNION SELECT` is valid SQL the
-    # whitespace-bounded splitter misses (review r12, ADVICE r11 #1 class)
+    # a word split, not a whitespace-bounded one: the keyword may sit
+    # flush against ')' or a closing quote — `…)UNION SELECT` is valid SQL
+    # a whitespace-bounded splitter misses (review r12, ADVICE r11 #1 class)
     for kw in ("UNION", "INTERSECT", "EXCEPT", "FOR"):
         if (
-            len(_slt._split_top(rest, kw)) > 1
-            or len(_slt._split_top(proj, kw)) > 1
+            len(sqltext.split_top(rest, kw)) > 1
+            or len(sqltext.split_top(proj, kw)) > 1
         ):
             return None
     # split the WHERE region from trailing clauses; the tail re-applies
@@ -2282,7 +2175,7 @@ def _apply_text_match_statement(spark, stripped: str, tables):
     where = rest
     for kw in ("GROUP", "ORDER", "HAVING", "LIMIT",
                "WINDOW", "OFFSET", "FETCH"):
-        pieces = _slt._split_top(where, kw)
+        pieces = sqltext.split_top(where, kw)
         if len(pieces) > 1:
             where = pieces[0]
     tail = rest[len(where):]
@@ -2292,14 +2185,14 @@ def _apply_text_match_statement(spark, stripped: str, tables):
     # (tantivy_rewriter.rs:23-26: routing never changes answers) holds
     # for mixed AND/OR statements (VERDICT r10 #1). Punctuation-
     # permissive split: `…'%x%' AND lang='en' OR(author='bob')` has no
-    # whitespace after OR, which the _split_top_kw form missed — the
+    # whitespace after OR, which a whitespace-bounded split missed — the
     # LIKE conjunct routed and rows satisfying only the OR arm were
     # silently dropped (ADVICE r11 #1)
-    if len(_slt._split_top(where, "OR")) > 1:
+    if len(sqltext.split_top(where, "OR")) > 1:
         return None
 
     hits = None
-    for conj in _slt._split_top(where, "AND"):
+    for conj in sqltext.split_top(where, "AND"):
         if conj.strip():
             hits = _route_text_pred(tbl, conj.strip())
             if hits is not None:
@@ -2889,61 +2782,6 @@ _FORMAT_TYPE_MAP = (
 )
 
 
-def _apply_outside_quotes(sql: str, transform) -> str:
-    """Apply `transform` (str → str) only to the segments of `sql`
-    OUTSIDE quoted regions ('…' with '' escapes, "…" identifiers,
-    $tag$…$tag$ bodies) and comments (`--` line, nesting /* */ block).
-    psql's own catalog queries carry relation names inside string
-    literals and regex patterns ('^(pg_class)$'); a whole-string re.sub
-    would corrupt those literals."""
-    out: list[str] = []
-    plain: list[str] = []
-    i, n = 0, len(sql)
-
-    def flush():
-        if plain:
-            out.append(transform("".join(plain)))
-            plain.clear()
-
-    while i < n:
-        c = sql[i]
-        j = None
-        if c == "'":
-            m = re.match(r"'(?:''|[^'])*'", sql[i:])
-            j = i + len(m.group(0)) if m else n
-        elif c == '"':
-            k = sql.find('"', i + 1)
-            j = n if k < 0 else k + 1
-        elif c == "$":
-            m = re.match(r"\$[A-Za-z_]*\$", sql[i:])
-            if m:
-                tag = m.group(0)
-                k = sql.find(tag, i + len(tag))
-                j = n if k < 0 else k + len(tag)
-        elif c == "-" and sql[i : i + 2] == "--":
-            k = sql.find("\n", i)
-            j = n if k < 0 else k + 1
-        elif c == "/" and sql[i : i + 2] == "/*":
-            depth, k = 1, i + 2
-            while k < n and depth:
-                if sql[k : k + 2] == "/*":
-                    depth, k = depth + 1, k + 2
-                elif sql[k : k + 2] == "*/":
-                    depth, k = depth - 1, k + 2
-                else:
-                    k += 1
-            j = k
-        if j is not None:
-            flush()
-            out.append(sql[i:j])
-            i = j
-            continue
-        plain.append(c)
-        i += 1
-    flush()
-    return "".join(out)
-
-
 def _rewrite_pg_catalog(sql: str) -> str:
     """Rewrite psql's pg_catalog references/idioms to the shim's views.
 
@@ -2959,7 +2797,7 @@ def _rewrite_pg_catalog(sql: str) -> str:
     # '-string literal would also be stripped, but psql's catalog
     # queries never quote a COLLATE clause into a literal.
     sql = re.sub(r"(?i)\s+COLLATE\s+(pg_catalog\s*\.\s*default|\"[A-Za-z_.]+\")", " ", sql)
-    return _apply_outside_quotes(sql, _rewrite_pg_catalog_plain)
+    return sqltext.outside_regions(sql, _rewrite_pg_catalog_plain)
 
 
 def _rewrite_pg_catalog_plain(sql: str) -> str:
@@ -3001,15 +2839,7 @@ def expand_qualified_star_in_calls(spark, sql: str) -> str:
     if not fm:
         return sql
     start = fm.end() - 1
-    depth, end = 0, None
-    for i in range(start, len(sql)):
-        if sql[i] == "(":
-            depth += 1
-        elif sql[i] == ")":
-            depth -= 1
-            if depth == 0:
-                end = i
-                break
+    end = sqltext.close_paren(sql, start)
     if end is None:
         return sql
     am = re.match(r"\s*(?:AS\s+)?([A-Za-z_]\w*)", sql[end + 1 :], re.IGNORECASE)
@@ -3130,7 +2960,7 @@ def _translate_and_run(spark: SparkSession, sql: str) -> DataFrame:
     if re.search(r"(?i)\binformation_schema\s*\.\s*(tables|columns)\b", sql):
         _ensure_information_schema(spark)
         # outside quotes only — same literal-safety rule as pg_indexes
-        sql = _apply_outside_quotes(
+        sql = sqltext.outside_regions(
             sql,
             lambda s: re.sub(
                 r"(?i)\binformation_schema\s*\.\s*(tables|columns)\b",
@@ -3142,7 +2972,7 @@ def _translate_and_run(spark: SparkSession, sql: str) -> DataFrame:
         _ensure_pg_indexes(spark)
         # outside quotes only: 'pg_indexes' as a STRING LITERAL (e.g. a
         # tablename predicate value) must not be rewritten
-        sql = _apply_outside_quotes(
+        sql = sqltext.outside_regions(
             sql,
             lambda s: re.sub(
                 r"(?i)\b(?:pg_catalog\s*\.\s*)?pg_indexes\b", "__pg_indexes", s

@@ -69,6 +69,8 @@ from pyspark.sql import types as T
 from pyspark.sql.classic.dataframe import DataFrame
 from pyspark.util import _load_from_socket
 
+from timefusion_spark import sqltext
+
 # ── PG type OIDs (pg_type.dat, public constants) ─────────────────────────
 _OID_BOOL = 16
 _OID_BYTEA = 17
@@ -256,72 +258,22 @@ def _pg_array_elem(v, dtype) -> str:
     return s
 
 
-def _skip_region(sql: str, i: int) -> tuple[int, bool] | None:
-    """If sql[i] opens a quoted or comment region, return (one past its
-    end, is_comment) — clamped to len(sql) for unterminated regions;
-    else None. Regions: '…' (with '' escapes), "…" identifiers, $tag$…$tag$
-    bodies, `--` line comments and NESTING /* */ block comments (PG block
-    comments nest, unlike C). Every protocol scanner (statement splitter,
-    identifier rewriter, parameter binder/counter) passes these through
-    without interpreting their contents."""
-    n = len(sql)
-    c = sql[i]
-    if c == "'":
-        m = re.match(r"'(?:''|[^'])*'", sql[i:])
-        return (i + len(m.group(0)) if m else n, False)
-    if c == '"':
-        j = sql.find('"', i + 1)
-        return (n if j < 0 else j + 1, False)
-    if c == "$":
-        m = re.match(r"\$[A-Za-z_]*\$", sql[i:])
-        if m:
-            tag = m.group(0)
-            j = sql.find(tag, i + len(tag))
-            return (n if j < 0 else j + len(tag), False)
-        return None
-    if c == "-" and sql[i : i + 2] == "--":
-        j = sql.find("\n", i)
-        return (n if j < 0 else j + 1, True)
-    if c == "/" and sql[i : i + 2] == "/*":
-        depth, j = 1, i + 2
-        while j < n and depth:
-            if sql[j : j + 2] == "/*":
-                depth += 1
-                j += 2
-            elif sql[j : j + 2] == "*/":
-                depth -= 1
-                j += 2
-            else:
-                j += 1
-        return (j, True)
-    return None
-
-
 def _split_statements(sql: str) -> list[str]:
-    """Split a simple-query payload on top-level semicolons — outside
-    single/double quotes, dollar-quoted strings, `--` line comments and
-    /* */ block comments (a semicolon inside a comment is text, not a
-    separator). Comments are replaced by one space so verb-detection
+    """Split a simple-query payload on top-level semicolons — a semicolon
+    inside a quoted region or a comment (sqltext's regions) is text, not
+    a separator. Comments are replaced by one space so verb-detection
     regexes see the statement head and comment-only payloads come out
-    empty, exactly PG's behavior for a comment-only simple query."""
-    out, buf = [], []
-    i, n = 0, len(sql)
-    while i < n:
-        reg = _skip_region(sql, i)
-        if reg is not None:
-            j, is_comment = reg
-            buf.append(" " if is_comment else sql[i:j])
-            i = j
-            continue
-        if sql[i] == ";":
-            out.append("".join(buf))
-            buf = []
-            i += 1
-            continue
-        buf.append(sql[i])
-        i += 1
-    out.append("".join(buf))
-    return [s.strip() for s in out if s.strip()]
+    empty, exactly PG's behavior for a comment-only simple query. A
+    Parse message's text goes through the same split."""
+    out = []
+    for piece in sqltext.split_top(sql, ";"):
+        stmt = "".join(
+            " " if kind == "comment" else piece[i:j]
+            for i, j, _, kind in sqltext.walk(piece)
+        ).strip()
+        if stmt:
+            out.append(stmt)
+    return out
 
 
 _TXN_VERB_RE = re.compile(r"(?is)^\s*(BEGIN|START\s+TRANSACTION|COMMIT|END|ROLLBACK|ABORT)\b")
@@ -357,10 +309,9 @@ def _check_copy_options(opts: str) -> None:
     """Reject COPY options this endpoint does not implement — PG errors
     on unknown options up front; silently accepting `QUOTE '|'` and
     emitting standard-quoted output the client then misparses is data
-    corruption (review r12). Quoted option VALUES are blanked first:
+    corruption (review r12). Quoted option VALUES are not searched:
     `NULL 'QUOTE'` names a sentinel string, not an option."""
-    bare = re.sub(r"'(?:''|[^'])*'", "''", opts or "")
-    m = _COPY_UNSUPPORTED_OPTS.search(bare)
+    m = sqltext.search(_COPY_UNSUPPORTED_OPTS, opts or "")
     if m:
         raise ValueError(f"COPY option {m.group(1).upper()} is not supported")
 
@@ -543,15 +494,16 @@ _FROM_LIST_END = frozenset({
     "select", "set", "union", "intersect", "except", "offset", "fetch",
     "returning", "values", "when", "then", "else", "case", "end",
 })
+_IDENT_TOKEN_RE = re.compile(r"(?P<word>[A-Za-z_]\w*)|.", re.DOTALL)
+_QUALIFIER_DOT_RE = re.compile(r"[ \t\r\n]*\.")
 
 
 def _rewrite_idents(sql: str, mapping: dict[str, str]) -> str:
     """Replace unquoted table identifiers IN TABLE POSITION with their
     transaction-overlay view names (read-your-own-writes SELECTs inside
-    BEGIN…COMMIT). Quote-aware — single-, double- and dollar-quoted
-    regions pass through verbatim, so literals and quoted identifiers are
-    never touched; comments pass through verbatim (a table name inside a
-    `--` or /* */ comment is prose, not a reference).
+    BEGIN…COMMIT). Every sqltext region passes through verbatim:
+    literals and quoted identifiers are never touched, and a table name
+    inside a `--` or /* */ comment is prose, not a reference.
 
     Table position (review r11 — a bare rewrite of every matching word
     broke column references sharing a touched table's name, e.g.
@@ -564,62 +516,39 @@ def _rewrite_idents(sql: str, mapping: dict[str, str]) -> str:
         return sql
     low = {k.lower(): v for k, v in mapping.items()}
     out: list[str] = []
-    i, n = 0, len(sql)
-    depth = 0
-    in_from: dict[int, bool] = {0: False}
+    in_from: dict[int, bool] = {}
     prev_tok = ""  # last meaningful token (lowercased word or punct char)
-    while i < n:
-        c = sql[i]
-        reg = _skip_region(sql, i)
-        if reg is not None:
-            out.append(sql[i : reg[0]])
-            if not reg[1]:  # a literal is an operand; a comment is not
+    for i, j, depth, kind in sqltext.walk(sql):
+        if kind in ("quote", "comment"):
+            out.append(sql[i:j])
+            if kind == "quote":  # a literal is an operand; a comment is not
                 prev_tok = "'"
-            i = reg[0]
             continue
-        if c in "([":
-            depth += 1
-            in_from[depth] = False
-            out.append(c)
-            prev_tok = c
-            i += 1
-            continue
-        if c in ")]":
-            in_from.pop(depth, None)
-            depth = max(0, depth - 1)
-            out.append(c)
-            prev_tok = c
-            i += 1
-            continue
-        if c.isalpha() or c == "_":
-            m = re.match(r"[A-Za-z_]\w*", sql[i:])
-            word = m.group(0)
-            lw = word.lower()
-            prev = sql[i - 1] if i else " "
-            j = i + len(word)
-            while j < n and sql[j] in " \t\r\n":
-                j += 1
-            qualifier = j < n and sql[j] == "."
+        if kind == "open":
+            in_from[depth + 1] = False
+        elif kind == "close":
+            in_from.pop(depth + 1, None)
+        for m in _IDENT_TOKEN_RE.finditer(sql, i, j):
+            tok = m.group()
+            if m.lastgroup != "word":
+                out.append(tok)
+                if not tok.isspace():
+                    prev_tok = tok
+                continue
+            lw = tok.lower()
             repl = low.get(lw)
             table_pos = (
                 prev_tok in _TBL_POS_KEYWORDS
                 or (prev_tok == "," and in_from.get(depth, False))
-                or qualifier
+                or _QUALIFIER_DOT_RE.match(sql, m.end()) is not None
             )
-            out.append(
-                repl if repl is not None and prev != "." and table_pos else word
-            )
+            after_dot = m.start() > 0 and sql[m.start() - 1] == "."
+            out.append(repl if repl is not None and not after_dot and table_pos else tok)
             if lw in ("from", "join"):
                 in_from[depth] = True
             elif lw in _FROM_LIST_END:
                 in_from[depth] = False
-            i += len(word)
             prev_tok = lw
-            continue
-        out.append(c)
-        if not c.isspace():
-            prev_tok = c
-        i += 1
     return "".join(out)
 
 
@@ -629,9 +558,12 @@ _NO_RESULTSET = re.compile(
 )
 
 
+_MULTI_PARSE = "cannot insert multiple commands into a prepared statement"
+
+
 def _wire_error(e: Exception) -> tuple[str, str]:
     """(message, SQLSTATE) for an execution error: failed-block 25P02;
-    user cancel 57014 — a job killed via cancelJobGroup surfaces as a
+    a multi-statement Parse 42601; user cancel 57014 — a job killed via cancelJobGroup surfaces as a
     SparkException whose 'cancelled … job tags' detail sits on a LATER
     line of the Py4J error text, so code detection scans the full text
     and the wire message becomes PG's canonical one; else XX000 with the
@@ -642,6 +574,8 @@ def _wire_error(e: Exception) -> tuple[str, str]:
         return msg, "25P02"
     if msg.startswith("canceling statement due to statement timeout"):
         return msg, "57014"
+    if msg.startswith(_MULTI_PARSE):
+        return msg, "42601"
     low = full.lower()
     if ("cancelled" in low or "canceled" in low) and (
         "job group" in low or "job tag" in low
@@ -835,6 +769,12 @@ class _Handler(socketserver.BaseRequestHandler):
     def _parse(self, payload: bytes) -> None:
         name, off = self._cstr(payload, 0)
         sql, off = self._cstr(payload, off)
+        # the statement text simple Query would run: comments stripped,
+        # and (as in PG) one statement per prepared statement
+        stmts = _split_statements(sql)
+        if len(stmts) > 1:
+            raise ValueError(_MULTI_PARSE)
+        sql = stmts[0] if stmts else ""
         (n_types,) = struct.unpack("!h", payload[off : off + 2])
         off += 2
         # declared parameter-type OIDs: text-format values bind as quoted
@@ -983,20 +923,20 @@ class _Handler(socketserver.BaseRequestHandler):
         self._send(b"3")  # CloseComplete
 
     def _run(self, sql: str):
-        from timefusion_spark.pgshim import _apply_outside_quotes, pg_sql
+        from timefusion_spark.pgshim import pg_sql
 
         # pg_backend_pid() folds to this connection's pid literal;
         # pg_stat_activity materializes from the server's live registry.
         # Outside quotes only (review r12): a literal like
         # 'see pg_backend_pid() docs' is DATA, and every other rewriter
         # in this file passes quoted regions through verbatim.
-        sql = _apply_outside_quotes(
+        sql = sqltext.outside_regions(
             sql,
             lambda s: re.sub(r"(?i)\bpg_backend_pid\s*\(\s*\)", str(self._pid), s),
         )
         if re.search(r"(?i)\bpg_stat_activity\b", sql):
             self._ensure_stat_activity()
-            sql = _apply_outside_quotes(
+            sql = sqltext.outside_regions(
                 sql,
                 lambda s: re.sub(
                     r"(?i)\b(?:pg_catalog\s*\.\s*)?pg_stat_activity\b",
@@ -2296,37 +2236,25 @@ def _pg_duration_ms(raw: str) -> int:
     return int(float(m.group(1)) * scale)
 
 
+_PARAM_RE = re.compile(r"\$(\d+)")
+
+
 def _substitute_params(sql: str, params: list[str | None]) -> str:
     """Inline text-format parameters into `$n` placeholders as quoted SQL
-    literals (NULL for absent values). Placeholders inside single-quoted
-    strings, dollar-quoted bodies and comments are left alone — the same
-    scanning rules as _split_statements. The shim's `::` casts and Spark's
-    implicit coercions type the literal, mirroring how the reference's
-    extended path binds text params before planning (pgwire_early_bind.rs)."""
+    literals (NULL for absent values). A placeholder inside a quoted
+    region or a comment (sqltext's regions) is text and stays as it is.
+    The shim's `::` casts and Spark's implicit coercions type the
+    literal, mirroring how the reference's extended path binds text
+    params before planning (pgwire_early_bind.rs)."""
 
-    def lit(i: int) -> str:
+    def lit(m: re.Match) -> str:
+        i = int(m.group(1))
         if i < 1 or i > len(params):
             raise ValueError(f"there is no parameter ${i}")
         v = params[i - 1]
         return "NULL" if v is None else "'" + v.replace("'", "''") + "'"
 
-    out, i, n = [], 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "$":
-            m = re.match(r"\$(\d+)", sql[i:])
-            if m:
-                out.append(lit(int(m.group(1))))
-                i += len(m.group(0))
-                continue
-        reg = _skip_region(sql, i)
-        if reg is not None:
-            out.append(sql[i : reg[0]])
-            i = reg[0]
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out)
+    return sqltext.outside_regions(sql, lambda code: _PARAM_RE.sub(lit, code))
 
 
 def _param_indices(sql: str) -> set[int]:
@@ -2335,21 +2263,7 @@ def _param_indices(sql: str) -> set[int]:
     placeholder (`a = $1 OR b = $1`) counts once; a `$2` inside a string
     literal counts zero (drivers like JDBC/npgsql validate bind arity
     against this count)."""
-    ids: set[int] = set()
-    i, n = 0, len(sql)
-    while i < n:
-        if sql[i] == "$":
-            m = re.match(r"\$(\d+)", sql[i:])
-            if m:
-                ids.add(int(m.group(1)))
-                i += len(m.group(0))
-                continue
-        reg = _skip_region(sql, i)
-        if reg is not None:
-            i = reg[0]
-            continue
-        i += 1
-    return ids
+    return {int(m.group(1)) for m, _ in sqltext.finditer(_PARAM_RE, sql)}
 
 
 _PG_TS_EPOCH = dt.datetime(2000, 1, 1)

@@ -30,6 +30,7 @@ from decimal import Decimal
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from timefusion_spark import sqltext
 from timefusion_spark.functions.register import register_all
 from timefusion_spark.pgshim import PG_TYPE_MAP, pg_to_spark_sql
 from timefusion_spark.storage import Table, dml
@@ -224,141 +225,34 @@ _PG_COLTYPE = {
 }
 
 
-def _split_top_kw(text: str, word: str) -> list[str]:
-    """Split `text` on a TOP-LEVEL keyword — outside single-quoted
-    literals and parens/brackets, bounded by ANY whitespace (newlines
-    included, which a literal `' WHERE '` separator would miss)."""
-    out: list[str] = []
-    buf: list[str] = []
-    depth, i, n, wl = 0, 0, len(text), len(word)
-    while i < n:
-        ch = text[i]
-        if ch == "'":
-            m = re.match(r"'(?:''|[^'])*'", text[i:])
-            frag = m.group(0) if m else ch
-            buf.append(frag)
-            i += len(frag)
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        if (
-            depth == 0
-            and text[i : i + wl].upper() == word.upper()
-            and i > 0
-            and text[i - 1].isspace()
-            and i + wl < n
-            and text[i + wl].isspace()
-        ):
-            out.append("".join(buf))
-            buf = []
-            i += wl
-            continue
-        buf.append(ch)
-        i += 1
-    out.append("".join(buf))
-    return out
-
-
-def _balanced_end(text: str, i: int) -> int:
-    """One past the ')' balancing the '(' at `i`, quote-aware; len(text)
-    if unterminated."""
-    depth, j, n = 0, i, len(text)
-    while j < n:
-        ch = text[j]
-        if ch == "'":
-            m = re.match(r"'(?:''|[^'])*'", text[j:])
-            j += len(m.group(0)) if m else 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return j + 1
-        j += 1
-    return n
-
-
 def _rewrite_qual(text: str, name: str, repl: str = "") -> str:
     """Replace `name.` relation qualifiers in an expression with `repl`
-    — OUTSIDE single-quoted literals (a literal containing 'name.' is
-    data, not a qualifier: the old `re.sub(rf"\\b{name}\\.", ...)`
+    — outside quoted regions and comments (a literal containing 'name.'
+    is data, not a qualifier: the old `re.sub(rf"\\b{name}\\.", ...)`
     deleted the WRONG rows for `DELETE FROM t WHERE note = 't.x'` —
     review r11-judge #1) and outside `(SELECT …)` subqueries, whose FROM
     may re-alias `name` to a different relation (PG scoping: the inner
     alias shadows the DML target). Case-insensitive like PG's identifier
     folding; schema-qualified `other.name.col` is left alone."""
+    pat = re.compile(
+        rf"(?P<sub>\(\s*SELECT\b)|(?<![\w.\"]){re.escape(name)}\.(?=[^\W\d]|[\"*])",
+        re.IGNORECASE,
+    )
     out: list[str] = []
-    i, n, nl = 0, len(text), len(name)
-    low = name.lower()
-    while i < n:
-        ch = text[i]
-        if ch == "'":
-            m = re.match(r"'(?:''|[^'])*'", text[i:])
-            frag = m.group(0) if m else ch
-            out.append(frag)
-            i += len(frag)
-            continue
-        if ch == "(" and re.match(r"\(\s*SELECT\b", text[i:], re.IGNORECASE):
-            j = _balanced_end(text, i)
-            out.append(text[i:j])
-            i = j
-            continue
-        if (
-            text[i : i + nl].lower() == low
-            and i + nl < n
-            and text[i + nl] == "."
-            and (i == 0 or not (text[i - 1].isalnum() or text[i - 1] in '_."'))
-            and i + nl + 1 < n
-            and (text[i + nl + 1].isalpha() or text[i + nl + 1] in '_"*')
-        ):
+    last = 0
+    for m, _ in sqltext.finditer(pat, text):
+        if m.start() < last:
+            continue  # inside a subquery kept verbatim
+        out.append(text[last : m.start()])
+        if m.group("sub"):
+            close = sqltext.close_paren(text, m.start())
+            last = len(text) if close is None else close + 1
+            out.append(text[m.start() : last])
+        else:
             out.append(repl)
-            i += nl + 1
-            continue
-        out.append(ch)
-        i += 1
+            last = m.end()
+    out.append(text[last:])
     return "".join(out)
-
-
-def _split_top(text: str, sep: str = ",") -> list[str]:
-    out, depth, buf, i = [], 0, [], 0
-    while i < len(text):
-        ch = text[i]
-        if ch == "'":
-            m = re.match(r"'(?:''|[^'])*'", text[i:])
-            frag = m.group(0) if m else ch
-            buf.append(frag)
-            i += len(frag)
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        if depth == 0 and text[i : i + len(sep)].upper() == sep.upper():
-            # word separators need boundaries — underscore is a WORD char
-            # in SQL identifiers (p_and_l must not split at "and")
-            if sep.strip() and sep[0].isalpha():
-                before = text[i - 1] if i else " "
-                after = text[i + len(sep)] if i + len(sep) < len(text) else " "
-                if (
-                    before.isalnum()
-                    or before == "_"
-                    or after.isalnum()
-                    or after == "_"
-                ):
-                    buf.append(ch)
-                    i += 1
-                    continue
-            out.append("".join(buf))
-            buf = []
-            i += len(sep)
-            continue
-        buf.append(ch)
-        i += 1
-    out.append("".join(buf))
-    return out
 
 
 @dataclass
@@ -644,7 +538,7 @@ class SltEnv:
                 return
             raise ValueError(f"table {name} exists")
         fields = []
-        for coldef in _split_top(cols_text):
+        for coldef in sqltext.split_top(cols_text):
             coldef = coldef.strip()
             if not coldef:
                 continue
@@ -860,7 +754,7 @@ class SltEnv:
         )
         # the row count is the number of TOP-LEVEL tuples in the VALUES
         # list — known without any Spark action
-        n_tuples = len([t for t in _split_top(values_text) if t.strip()])
+        n_tuples = len([t for t in sqltext.split_top(values_text) if t.strip()])
         return self._append(tbl, df, txn, n_rows=n_tuples)
 
     def copy_rows(
@@ -908,17 +802,17 @@ class SltEnv:
         # quote-aware clause split: first top-level WHERE ends the
         # SET[/FROM] region (subquery WHEREs sit inside parens, literal
         # ' where ' inside quotes); WHERE itself is optional in PG
-        w = _split_top_kw(rest, "WHERE")
+        w = sqltext.split_top(rest, "WHERE")
         set_region = w[0]
         where_text = " WHERE ".join(w[1:]) if len(w) > 1 else None
-        f = _split_top_kw(set_region, "FROM")
+        f = sqltext.split_top(set_region, "FROM")
         set_text = f[0]
         from_text = " FROM ".join(f[1:]) if len(f) > 1 else None
         tbl = self.tables.get(name)
         if tbl is None:
             raise ValueError(f"unknown table {name}")
         assigns_raw: dict[str, str] = {}
-        for item in _split_top(set_text):
+        for item in sqltext.split_top(set_text):
             col, expr = item.split("=", 1)
             assigns_raw[col.strip()] = expr.strip()
 
@@ -952,7 +846,7 @@ class SltEnv:
                 rf"^\s*(?:{name}\.)?(\w+)\s*=\s*{alias}\.(\w+)\s*$|"
                 rf"^\s*{alias}\.(\w+)\s*=\s*(?:{name}\.)?(\w+)\s*$"
             )
-            for conj in _split_top(where_text, " AND "):
+            for conj in sqltext.split_top(where_text, "AND"):
                 em = eq_re.match(conj.strip())
                 if em and (f"{alias}." in conj):
                     tcol = em.group(1) or em.group(4)
